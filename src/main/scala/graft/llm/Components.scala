@@ -278,8 +278,9 @@ object Components {
     // side, and total work is O(|E| + Σ frontier) — the textbook peel.
     // Every round still checkpoints the shrunken edge set (lineage) and
     // the final degrees are re-derived from the SURVIVING edges alone,
-    // so results are bit-identical to the recompute form (spec-pinned,
-    // KCoreIncrementalSpec cross-checks random graphs).
+    // so results are bit-identical to the recompute form (spec-pinned:
+    // ComponentsSpec's "kCore incremental degree maintenance matches a
+    // brute-force peel" cross-checks a pseudo-random graph).
     // the degree table is EAGERLY localCheckpoint'd (not just persisted)
     // each round: its incremental plan references the previous round's
     // table, so persist alone would chain the logical plans across

@@ -44,8 +44,15 @@ object Ivf {
     * running it over the full corpus is the dominant cost at scale while
     * adding nothing — sample-estimated centroids converge to the same
     * cells. ASSIGNMENT stays full-corpus and scan-level. Tiny corpora,
-    * where the sample couldn't support `nCells` clusters, fall back to
+    * where the sample holds fewer than 4·`nCells` rows, fall back to
     * fitting on everything (fit cost is irrelevant there).
+    *
+    * The fit takes one of [[Kmeans]]'s two paths. A training set within
+    * [[Kmeans.localMaxRows]] (about 8 MiB of driver heap; 13617 rows at
+    * 64 dims) is collected once and every Lloyd round runs on the
+    * driver; a larger one runs the rounds as Spark jobs. That bounded
+    * collect also answers the 4·`nCells` question, so the sample is
+    * counted separately only when the bound sits below 4·`nCells`.
     */
   def index(
       corpus: DataFrame, idCol: String, vecCol: String,
@@ -57,10 +64,10 @@ object Ivf {
     // never the full corpus
     val sampled = feat.filter(Curation.pctHash(col(idCol)) < samplePct)
       .transform(CacheScope.persistTracked)
-    val trainSet =
-      if (sampled.count() >= nCells.toLong * 4L) sampled
-      else feat.transform(CacheScope.persistTracked)
-    val centroids = Kmeans.fit(trainSet, idCol, vecCol, nCells)
+    val centroids = Kmeans.fit(
+      Kmeans.sampledTrainSet(sampled, feat.transform(CacheScope.persistTracked),
+        idCol, vecCol, nCells, minRows = nCells.toLong * 4L),
+      iters = 5)
     val assigned = feat.withColumn("__cell",
       Kmeans.nearestCell(
         transform(col(vecCol), _.cast("double")), centroids))
@@ -83,6 +90,9 @@ object Ivf {
     * cell's centroid is synthesized from the COARSE centroid, so the
     * probe table covers every populated cell (spec-asserted — a silent
     * gap would make those rows unreachable by any probe).
+    *
+    * The sample rule is [[index]]'s with 4·kCoarse·kFine rows, and the
+    * coarse fit's bounded collect answers it the same way.
     */
   def indexHierarchical(
       corpus: DataFrame, idCol: String, vecCol: String,
@@ -127,11 +137,10 @@ object Ivf {
     val feat = Spread(corpus).select(col(idCol), col(vecCol))
     val sampled = feat.filter(Curation.pctHash(col(idCol)) < samplePct)
       .transform(CacheScope.persistTracked)
-    val trainSet =
-      if (sampled.count() >= kCoarse.toLong * kFine * 4L) sampled
-      else feat.transform(CacheScope.persistTracked)
     val (coarse, fine) = Kmeans.fitHierarchical(
-      trainSet, idCol, vecCol, kCoarse, kFine)
+      Kmeans.sampledTrainSet(sampled, feat.transform(CacheScope.persistTracked),
+        idCol, vecCol, kCoarse, minRows = kCoarse.toLong * kFine * 4L),
+      kFine, iters = 5)
     val asDouble = transform(col(vecCol), _.cast("double"))
     val assigned = feat
       .withColumn("__coarse", Kmeans.nearestCell(asDouble, coarse))

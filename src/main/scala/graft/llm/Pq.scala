@@ -47,46 +47,75 @@ object Pq {
 
   /** Fit m per-sub-space codebooks on a deterministic hash sample (the
     * [[Ivf.index]] sampling discipline — the fit iterates, so it runs on
-    * a persisted sample, never the corpus). All m sub-spaces train in the
-    * SAME Lloyd rounds: the sample explodes once into (sub, sub-vector)
-    * rows, each round assigns against the per-sub matrix broadcast-joined
-    * in ([[Kmeans.nearestCellCol]] — the hierarchical-fit discipline) and
-    * folds one (sub, cell, dim) decimal aggregation — `iters` jobs total,
-    * independent of m, where m sequential [[Kmeans.fit]] calls would pay
-    * m·iters driver round-trips. Same seeding rule as [[Kmeans.fit]]
-    * (md5-ordered first k rows, sliced per sub), deterministic under any
-    * partitioning.
+    * a persisted sample, never the corpus; a sample under 4·k rows falls
+    * back to the whole corpus). Seeds are [[Kmeans.fit]]'s md5-ordered
+    * first k rows, sliced per sub-space; the fit is deterministic under
+    * any partitioning, on either of two paths with identical codebooks:
+    *
+    *  - driver-local, when the training set is within
+    *    [[Kmeans.localMaxRows]] (about 8 MiB of driver heap for the
+    *    full-width rows; 13617 rows at 64 dims): the
+    *    gate's one bounded collect brings it to the driver and
+    *    [[Kmeans.lloydLocal]] runs once per sub-space. That collect also
+    *    answers the 4·k question, so the sample is counted separately
+    *    only when the bound sits below 4·k;
+    *  - distributed, otherwise: all m sub-spaces train in the SAME Lloyd
+    *    rounds. The training set explodes once into (sub, sub-vector)
+    *    rows, each round assigns against the per-sub matrix
+    *    broadcast-joined in ([[Kmeans.nearestCellCol]] — the
+    *    hierarchical-fit discipline) and folds one (sub, cell, dim)
+    *    decimal aggregation — `iters` jobs total, independent of m.
     */
   def fit(
       corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int, samplePct: Int = 10, iters: Int = 5): PqModel = {
     require(m >= 1 && k >= 1, s"need m>=1, k>=1; got m=$m k=$k")
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val dim = corpus.select(size(col(vecCol))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible into $m sub-spaces")
     val subDim = dim / m
     val feat = Spread(corpus).select(col(idCol), col(vecCol))
     val sampled = feat.filter(Curation.pctHash(col(idCol)) < samplePct)
       .transform(CacheScope.persistTracked)
-    val trainSet =
-      if (sampled.count() >= k.toLong * 4L) sampled
-      else feat.transform(CacheScope.persistTracked)
-    val subs = CacheScope.persistTracked(trainSet
-      .select(col(idCol).as("__id"), explode(array((0 until m).map { s =>
+    val train = Kmeans.sampledTrainSet(
+      sampled, feat.transform(CacheScope.persistTracked),
+      idCol, vecCol, k, minRows = k.toLong * 4L)
+    val books = train.local match {
+      case Some(local) => fitLocal(local, train.seeds, m, subDim, iters)
+      case None => fitDistributed(train.vecs, train.seeds, m, subDim, iters)
+    }
+    PqModel(m, subDim, books)
+  }
+
+  /** Sub-space `s` of every seed vector. */
+  private def subSeeds(
+      seeds: Seq[Seq[Double]], s: Int, subDim: Int): Seq[Seq[Double]] =
+    seeds.map(_.slice(s * subDim, (s + 1) * subDim))
+
+  /** The m codebooks on the driver: one local Lloyd fit per sub-space. */
+  private[graft] def fitLocal(
+      local: Kmeans.LocalRows, seeds: Seq[Seq[Double]], m: Int, subDim: Int,
+      iters: Int): Seq[Seq[Seq[Double]]] =
+    (0 until m).map { s =>
+      Kmeans.lloydLocal(local.slice(s * subDim, subDim),
+        subSeeds(seeds, s, subDim), iters)
+    }
+
+  /** The m codebooks as Spark jobs: all sub-spaces in the same rounds,
+    * over a [[Kmeans.TrainSet]]'s `(__id, __v)` frame.
+    */
+  private[graft] def fitDistributed(
+      vecs: DataFrame, seeds: Seq[Seq[Double]], m: Int, subDim: Int,
+      iters: Int): Seq[Seq[Seq[Double]]] = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val subs = CacheScope.persistTracked(vecs
+      .select(col("__id"), explode(array((0 until m).map { s =>
         struct(lit(s).as("__sub"),
-          slicedDouble(col(vecCol), s, subDim).as("__v"))
+          slice(col("__v"), s * subDim + 1, subDim).as("__v"))
       }: _*)).as("__e"))
       .select(col("__id"), col("__e.__sub").as("__sub"),
         col("__e.__v").as("__v")))
-    var books: Seq[Seq[Seq[Double]]] = {
-      val seeds = trainSet
-        .orderBy(md5(col(idCol).cast("string").cast("binary")), col(idCol))
-        .limit(k)
-        .select(transform(col(vecCol), _.cast("double")))
-        .collect().map(_.getSeq[Double](0).toSeq).toSeq
-      (0 until m).map(s => seeds.map(_.slice(s * subDim, (s + 1) * subDim)))
-    }
+    var books = (0 until m).map(s => subSeeds(seeds, s, subDim))
     for (_ <- 0 until iters) {
       val matrices = books.zipWithIndex
         .map { case (b, s) => (s, b) }.toDF("__sub", "__matrix")
@@ -103,17 +132,11 @@ object Pq {
           (r.getDecimal(3), r.getLong(4)))
         .toMap
       books = books.zipWithIndex.map { case (book, s) =>
-        book.zipWithIndex.map { case (old, cell) =>
-          if (sums.contains((s, cell, 0)))
-            old.indices.map { d =>
-              val (sm, n) = sums((s, cell, d))
-              sm.doubleValue / n
-            }
-          else old // empty cell keeps its previous centroid
-        }
+        Kmeans.update(book,
+          (cell, d) => sums.getOrElse((s, cell, d), Kmeans.NoStat))
       }
     }
-    PqModel(m, subDim, books)
+    books
   }
 
   /** Encode: (id, codes array<int> of length m) — a stateless projection,
@@ -310,19 +333,5 @@ object Pq {
           .localCheckpoint(true)
       }.reduce(_.unionByName(_))
     }
-  }
-
-  /** Fit + encode + search in one call (spec/bench convenience; long-lived
-    * users fit once, persist the encoded table and reuse).
-    */
-  def pqTopK(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, m: Int = 8, kSub: Int = 16, samplePct: Int = 10,
-      shortlist: Int = 0): DataFrame = {
-    val model = fit(corpus, idCol, vecCol, m, kSub, samplePct)
-    val enc = encode(corpus, idCol, vecCol, model)
-    if (shortlist > 0)
-      searchAdcRerank(enc, model, corpus, queries, idCol, vecCol, k, shortlist)
-    else searchAdc(enc, model, queries, idCol, vecCol, k)
   }
 }

@@ -46,6 +46,13 @@ class OperatorSpec extends SparkSpec {
     assert(out == Set((1L, "new"), (2L, "keep"), (3L, "ins")))
   }
 
+  test("trimColumnNames strips header whitespace and keeps every cell") {
+    val df = Seq((1, "x", 2.5)).toDF(" cod_mun ", "uf\t", "valor")
+    val out = Renames.trimColumnNames(df)
+    assert(out.columns.toSeq == Seq("cod_mun", "uf", "valor"))
+    assert(out.as[(Int, String, Double)].collect().toSeq == Seq((1, "x", 2.5)))
+  }
+
   test("staleness predicate: null or older consumed timestamp needs refresh") {
     val df = Seq(
       (1L, "2026-01-02 00:00:00", "2026-01-01 00:00:00"), // stale
