@@ -11,8 +11,9 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session timezone (all reference timestamps are zone-fixed)
   *  - nanosecond parquet timestamps read as raw longs (normalized in
   *    [[graft.sources.Tables.events]])
-  *  - [[graft.functions.GraftExtensions]] injected: native expressions
-  *    (`roman_to_int`, …) available to SQL users too.
+  *  - [[graft.functions.GraftExtensions]] injected: the only way the
+  *    native functions, the as-of strategy and the optimizer rules get
+  *    into a session
   */
 object GraftSession {
 

@@ -25,7 +25,8 @@ object Explain {
 
 /** Time named queries with the noop sink. Args containing `=` are session
   * conf sets applied IN ORDER, so one invocation can A/B an optimizer
-  * toggle: `SpotBench q92 spark.graft.topkRewrite.enabled=false q92`.
+  * toggle: `SpotBench q92
+  * spark.sql.optimizer.excludedRules=graft.plans.WindowTopKRewrite q92`.
   * `probe:` names run perf-probe VARIANTS of graded queries (degraded or
   * alternative internals) that must stay outside the graded contract.
   */

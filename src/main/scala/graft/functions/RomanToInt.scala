@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for Roman-numeral normalization — the
@@ -67,41 +65,4 @@ object RomanOps {
     }
     UTF8String.fromString(total.toString)
   }
-}
-
-/** `spark.sql.extensions`-injectable registration so SQL-text users get the
-  * native functions too (`SELECT roman_to_int(col) …`), plus the engine's
-  * planner strategy for the whole-operator extensions
-  * ([[graft.plans.AsOfJoinStrategy]]).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.descriptors.foreach(ext.injectFunction)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.WindowAggRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.GeneratorSiblingPushdown)
-  }
-}
-
-/** Imperative registration for sessions built without the extension. */
-object GraftFunctions {
-  private[functions] val romanToIntDescriptor = (
-    FunctionIdentifier("roman_to_int"),
-    new ExpressionInfo(classOf[RomanToInt].getName, "roman_to_int"),
-    (children: Seq[Expression]) => RomanToInt(children.head): Expression,
-  )
-
-  private[functions] def descriptors = Seq(
-    romanToIntDescriptor, VectorDotDecimal.descriptor, VectorDotDouble.descriptor,
-    MightContain.descriptor, SortedIntersectCount.descriptor, WordShingles.descriptor,
-    WordShinglesAll.descriptor, NfcNormalize.descriptor, TopKBy.descriptor,
-    NearestCell.descriptor, SizedBloom.descriptor, BloomMightContainAny.descriptor,
-    SqDistDouble.descriptor, SortedIntersectLongs.descriptor,
-    HeavyHitters.descriptor, JaroWinkler.descriptor)
-
-  def register(spark: SparkSession): Unit =
-    descriptors.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
 }

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.plans.Gates
+
 /** Connected components over a near-duplicate PAIR list — the step that
   * turns pairwise dedup output ([[Dedup.simhashPairs]],
   * [[Dedup.minhashNearDups]], …) into duplicate CLUSTERS so a pipeline can
@@ -309,11 +311,7 @@ object Components {
       val weakCount = weak.count()
       if (weakCount == 0L) { done = true }
       else {
-        val bcMax = edges.sparkSession.conf
-          .getOption("spark.graft.kcore.broadcastFrontierMax")
-          .map(_.toLong).getOrElse(4194304L) // 2^22 longs ≈ tens of MB
-        val hint: DataFrame => DataFrame =
-          if (weakCount <= bcMax) broadcast else identity
+        val hint = Gates.broadcastIfAtMost(weakCount, Gates.FrontierBroadcastMax)
         val weakV = weak.select(col("v"))
         // edges with ≥1 weak endpoint leave the graph; each survivor
         // endpoint of a leaving edge loses one degree

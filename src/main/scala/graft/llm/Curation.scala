@@ -972,8 +972,6 @@ object Curation {
   private def dsirBuckets(
       df: DataFrame, textCol: String, buckets: Int,
       keep: Seq[String]): DataFrame = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     val tk = TextAnalysis.tokens(col(textCol))
     val cols = keep.map(col)
     val spread = if (df.isStreaming) df else Spread(df)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.plans.Gates
+
 /** Deduplication operators: exact, MinHash-LSH, SimHash, blocked n-gram
   * Jaccard.
   *
@@ -92,8 +94,6 @@ object Dedup {
     * order — but the per-pair constant is ~5× smaller.
     */
   private def jaccardSorted(shA: Column, shB: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     val inter =
       call_function("sorted_intersect_count", shA, shB).cast("double")
     inter / (size(shA).cast("double") + size(shB).cast("double") - inter)
@@ -704,8 +704,6 @@ object Dedup {
         col("__id"))
     val shA = keyed.select(col("__id").as("id_a"), col("__sh").as("__sh_a"))
     val shB = keyed.select(col("__id").as("id_b"), col("__sh").as("__sh_b"))
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     candidatePairs(bottom).join(shA, "id_a").join(shB, "id_b")
       .select(col("id_a"), col("id_b"),
         (call_function("sorted_intersect_count", col("__sh_a"), col("__sh_b"))
@@ -850,13 +848,7 @@ object Dedup {
     // output-bound work spread. Gated on the within volume — when
     // replication is low (Σg² ≈ |memb|, below the pin threshold) the
     // expansions do not expand and AQE's own coalescing is right.
-    val sessConf = sh.sparkSession.sessionState.conf
-    val pinX = withinVolume >= sessConf
-      .getConfString("spark.graft.pairs.pinWidthMinPairs", "16777216")
-      .toDouble
-    val xparts = sessConf.numShufflePartitions
-    val xpin: (DataFrame, Column) => DataFrame =
-      if (pinX) (df, c) => df.repartition(xparts, c) else (df, _) => df
+    val xpin = Gates.widthPin(withinVolume)
     val cross = xpin(repPairs, col("__ra"))
       .join(memb.select(col("__rep").as("__ra"), col("__id").as("__ma")),
         "__ra")
@@ -963,7 +955,7 @@ object Dedup {
     * counts (the same aggregation the hot-block filter needs anyway) and
     * the session's shuffle parallelism: total pair work W = Σ n_b² split
     * across P slots gives a per-task pair budget of W/P. The tile side is
-    * k·√(W/P) (k = `spark.graft.tileBudgetFactor`, default 4): a block
+    * k·√(W/P) (k = `Gates.TileBudgetFactor` = 4): a block
     * only counts as HOT — and pays salting/replication — when its own
     * pair space exceeds k² fair task shares. Salting every block down to
     * exactly one share (k = 1) over-tiles: hash partitioning already
@@ -1007,10 +999,8 @@ object Dedup {
       .head()
     if (row.isNullAt(0)) return BlockStats(256, 0.0, 0L, 0L, 0L) // empty input
     val w = row.getDouble(0)
-    val k = counts.sparkSession.sessionState.conf
-      .getConfString("spark.graft.tileBudgetFactor", "4").toDouble
-    val target =
-      math.ceil(k * math.sqrt(w / math.max(parallelism, 1))).toLong
+    val target = math.ceil(
+      Gates.TileBudgetFactor * math.sqrt(w / math.max(parallelism, 1))).toLong
     BlockStats(math.max(256L, math.min(target, 32768L)).toInt, w,
       row.getLong(1), row.getLong(2), row.getLong(3))
   }
@@ -1079,25 +1069,11 @@ object Dedup {
     val (effBlock, pairVolume) = (bs.effBlock, bs.pairVolume)
     // Width-pinning gate (see the repartition below): only a LARGE
     // observed pair volume justifies suppressing AQE's coalescing —
-    // at small volume the extra 32-task exchanges cost more than they
-    // save (measured +2..3 s on q27/q183 at sf0.1), at ~10⁸+ pairs an
-    // unpinned plan ran the whole candidate stream in one task.
-    // Threshold parameterized (deploy knob), default 2^24 pairs.
-    val pinWidth = pairVolume >= sessConf
-      .getConfString("spark.graft.pairs.pinWidthMinPairs", "16777216")
-      .toDouble
-    // An explicit maxBlock runs no sizing action, so the pair volume is
-    // UNKNOWN (−1) and every width-pinning gate downstream stays off —
-    // exactly the single-task AQE-coalescing trap the gates exist for
-    // (ADVICE r15). No production caller passes a fixed maxBlock; warn
-    // loudly if one ever does at scale.
-    if (maxBlock > 0)
-      System.err.println(
-        "[graft] tiledPairs: fixed maxBlock skips the sizing action — " +
-          "pair volume unknown, width-pinning gates disabled for this call")
-    if (sys.env.contains("GRAFT_DEBUG_PINS"))
-      System.err.println(s"[pins] tile w=$pairVolume pin=$pinWidth " +
-        s"rows=${bs.totalRows} multiRows=${bs.multiRows} nMulti=${bs.nMulti}")
+    // at ~10⁸+ pairs an unpinned plan ran the whole candidate stream in
+    // one task. An explicit maxBlock runs no sizing action, so the pair
+    // volume is UNKNOWN (−1) and every width-pinning gate downstream
+    // stays off; no production caller passes a fixed maxBlock.
+    val pinWidth = Gates.pinWidth(pairVolume)
     // SINGLETON-BLOCK PRUNING (round 16, guide §3.2 pre-filter / §2.3
     // shuffle fewer bytes): a block with one row can never emit a pair
     // (the diagonal tile's id_a < id_b guard kills the self-pair), yet
@@ -1108,28 +1084,19 @@ object Dedup {
     // shuffle ~25× with an output provably identical. The multi-block
     // set comes from the SAME persisted counts table the sizing action
     // already aggregates, so learning it is free. TWO gates, both from
-    // that one action:
+    // that one action ([[graft.plans.Gates.pruneSingletons]]):
     //   - the multi-block set must fit a broadcast
-    //     (`spark.graft.pairs.multiBlockBroadcastMax`, default 2^22
-    //     rows ≈ ~100 MB framed);
+    //     (`Gates.MultiBlockBroadcastMax` = 2^22 rows ≈ ~100 MB framed);
     //   - pruning must PAY: singletons must be ≥ the dropped-fraction
-    //     floor (`spark.graft.pairs.pruneMinDropFraction`, default
-    //     0.25) of the rows. On dense blockings (q227's token blocks:
+    //     floor (`Gates.PruneMinDropFraction` = 0.25) of the rows. On
+    //     dense blockings (q227's token blocks:
     //     nearly every row shares a block) the first cut of this
     //     change broadcast a multi-million-row salt table to drop
     //     almost nothing — measured 4.9 → 11.3 s on q227 at sf0.1 —
     //     where the old path broadcasts only the tiny hot set.
     // Fixed-maxBlock callers run no sizing action (stats unknown = -1)
     // and keep the old path.
-    val maxBcBlocks = sessConf
-      .getConfString("spark.graft.pairs.multiBlockBroadcastMax", "4194304")
-      .toLong
-    val minDrop = sessConf
-      .getConfString("spark.graft.pairs.pruneMinDropFraction", "0.25")
-      .toDouble
-    val pruneSingletons = bs.nMulti >= 0L && bs.nMulti <= maxBcBlocks &&
-      bs.totalRows > 0L &&
-      (bs.totalRows - bs.multiRows).toDouble >= minDrop * bs.totalRows
+    val pruneSingletons = Gates.pruneSingletons(bs)
     // The salt is a deterministic function of the id so re-runs partition
     // identically. ceil(n/effBlock) is 1 for every sub-threshold block,
     // so the pruning join's carried salt equals the old coalesce(hs, 1).

@@ -243,8 +243,6 @@ object Ivf {
     * recurring §4 HOF lesson).
     */
   private def sqDist(v: Column, centroid: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     call_function("graft_sqdist", v, centroid)
   }
 

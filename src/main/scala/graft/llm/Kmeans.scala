@@ -98,8 +98,6 @@ object Kmeans {
     * scaled with the corpus.
     */
   def nearestCell(v: Column, centroids: Seq[Seq[Double]]): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     call_function("graft_nearest_cell", v, typedlit(centroids))
   }
 
@@ -308,8 +306,6 @@ object Kmeans {
     * serialized with every task.
     */
   def nearestCellCol(v: Column, matrix: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     call_function("graft_nearest_cell", v, matrix)
   }
 

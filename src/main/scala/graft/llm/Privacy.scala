@@ -103,8 +103,6 @@ object Privacy {
   }
 
   def normalizeText(text: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     val nfc = call_function("nfc_normalize", text)
     val noCtl = regexp_replace(nfc, """[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]""", "")
     trim(regexp_replace(noCtl, """\s+""", " "))

@@ -110,8 +110,6 @@ object SetJoin {
     // hash build side is corpus/partitions-bounded (|docs|/P shingle
     // arrays), independent of candidate volume — the memory contract a
     // verify stage needs at any duplication level.
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     val inter = call_function("sorted_intersect_count",
       col("__sh_a"), col("__sh_b"))
     cand

@@ -20,26 +20,16 @@ object Similarity {
 
   /** Σ aᵢ·bᵢ through decimal — order-independent exact accumulation.
     * Backed by the native [[graft.functions.VectorDotDecimal]] expression
-    * (one static call per pair, no intermediate Decimal array); falls back
-    * to the equivalent higher-order-function form when no session is
-    * active. Both are bit-identical (see `FunctionsSpec`).
-    *
-    * Note: like [[graft.operators.Strings.romanToInt]], the native path
-    * resolves by name against the ACTIVE session's registry — a column
-    * built under one session but analyzed under another needs
-    * `GraftFunctions.register` (or the `GraftExtensions` config) on the
-    * analyzing session, or use [[dotDecimalExpr]] for a session-free tree.
+    * (one static call per pair, no intermediate Decimal array), resolved
+    * by name in the analyzing session, which needs
+    * [[graft.functions.GraftExtensions]]. Bit-identical to
+    * [[dotDecimalExpr]] (see `FunctionsSpec`).
     */
   def dotDecimal(a: Column, b: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.GraftFunctions.register(s)
-        call_function("vector_dot_decimal", a, b)
-      case None => dotDecimalExpr(a, b)
-    }
+    call_function("vector_dot_decimal", a, b)
 
   /** Pure-expression form of [[dotDecimal]] — same semantics, kept as the
-    * no-custom-expression fallback and equivalence baseline.
+    * extension-free form and equivalence baseline.
     */
   def dotDecimalExpr(a: Column, b: Column): Column =
     aggregate(
@@ -56,12 +46,7 @@ object Similarity {
     * the screen runs per candidate pair inside a join condition.
     */
   def dotDouble(a: Column, b: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.GraftFunctions.register(s)
-        call_function("vector_dot_double", a, b)
-      case None => dotDoubleExpr(a, b)
-    }
+    call_function("vector_dot_double", a, b)
 
   /** Pure-expression form of [[dotDouble]] — equivalence baseline. */
   def dotDoubleExpr(a: Column, b: Column): Column =

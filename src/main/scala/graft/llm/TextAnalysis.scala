@@ -99,12 +99,7 @@ object TextAnalysis {
     * feeds the merge-walk Jaccard.
     */
   def shingleSetSorted(toks: Column, n: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.GraftFunctions.register(s)
-        call_function("word_shingles", toks, lit(n))
-      case None => sort_array(shingleSet(toks, n))
-    }
+    call_function("word_shingles", toks, lit(n))
 
   /** Document fingerprint: the minimum md5 over word 3-shingles — a
     * winnowing-style content signature that is stable under reordering of
@@ -166,8 +161,6 @@ object TextAnalysis {
     * final division.
     */
   def bigramLmScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     val tk = CacheScope.persistTracked(
       Spread(docs.select(col(idCol).as("__id"), col(textCol)))
         .select(col("__id"), tokens(col(textCol)).as("__tk")))
@@ -217,8 +210,6 @@ object TextAnalysis {
   def bigramLmCrossScore(
       reference: DataFrame, target: DataFrame,
       idCol: String, textCol: String): DataFrame = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     val refTk = CacheScope.persistTracked(
       Spread(reference.select(col(textCol)))
         .select(tokens(col(textCol)).as("__tk")))
@@ -270,8 +261,6 @@ object TextAnalysis {
     */
   def topNgrams(docs: DataFrame, idCol: String, textCol: String,
       n: Int, k: Int): DataFrame = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     val grams = Spread(docs.select(col(idCol).as("__id"), col(textCol)))
       .select(col("__id"),
         explode(call_function("word_shingles_all",
@@ -301,8 +290,6 @@ object TextAnalysis {
     * SQL-reproducible bit-for-bit.
     */
   def ngramRepetition(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     val tk = CacheScope.persistTracked(
       Spread(docs.select(col(idCol).as("__id"), col(textCol)))
         .select(col("__id"), tokens(col(textCol)).as("__tk")))
@@ -364,8 +351,6 @@ object TextAnalysis {
   def linearTextScore(
       docs: DataFrame, weights: DataFrame, idCol: String, textCol: String,
       buckets: Int): DataFrame = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     val base = CacheScope.persistTracked(
       Spread(docs.select(col(idCol).as("__id"), col(textCol)))
         .select(col("__id"), tokens(col(textCol)).as("__tk")))
@@ -456,8 +441,6 @@ object TextAnalysis {
       docs: DataFrame, dict: DataFrame, idCol: String, textCol: String,
       maxN: Int): DataFrame = {
     require(maxN >= 1, s"need maxN >= 1, got $maxN")
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     val tk = tokens(col(textCol))
     val grams = (1 to maxN).map {
       case 1 => tk
@@ -510,8 +493,6 @@ object TextAnalysis {
       buckets: Int, epochs: Int): DataFrame = {
     require(epochs >= 1, s"need epochs >= 1, got $epochs")
     require(buckets > 0, s"need buckets > 0, got $buckets")
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     val tk = tokens(col(textCol))
     val fc = CacheScope.persistTracked(
       Spread(docs.select(col(idCol).as("__id"), col(labelCol).as("__y"),
@@ -831,8 +812,6 @@ object TextAnalysis {
   def collocations(
       docs: DataFrame, idCol: String, textCol: String,
       minCount: Long): DataFrame = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     val tk = CacheScope.persistTracked(
       Spread(docs.select(col(idCol).as("__id"), col(textCol)))
         .select(col("__id"), tokens(col(textCol)).as("__tk")))

@@ -111,6 +111,9 @@ object AsOf {
     *    after (a same-instant dim row must not leak into the feature row
     *    it describes). Unsupported for `nearest`, which would need a
     *    look past equal-ts runs.
+    *
+    * The returned plan holds an [[graft.plans.AsOfJoinNode]], which only
+    * a session built with [[graft.functions.GraftExtensions]] can plan.
     */
   def asOfJoinNativeKeys(
       fact: DataFrame, dim: DataFrame, keyCols: Seq[String], tsCol: String,
@@ -120,15 +123,7 @@ object AsOf {
     import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
     import org.apache.spark.sql.graft.Shims
-    import graft.plans.{AsOfJoinNode, AsOfJoinStrategy}
-
-    val spark = fact.sparkSession
-    // idempotent runtime registration for sessions built without the
-    // GraftExtensions config (the extension path injects it too)
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
+    import graft.plans.AsOfJoinNode
 
     def attrOf(p: LogicalPlan, name: String): Attribute =
       p.output.find(_.name == name).getOrElse(
@@ -148,7 +143,7 @@ object AsOf {
     val outAttrs = rightCarried.map(a =>
       AttributeReference(prefix + a.name, a.dataType, nullable = true)())
 
-    Shims.ofRows(spark, AsOfJoinNode(
+    Shims.ofRows(fact.sparkSession, AsOfJoinNode(
       lp, rp,
       leftKeys = keyCols.map(attrOf(lp, _)), rightKeys = keyCols.map(attrOf(rp, _)),
       leftTs = attrOf(lp, tsCol), rightTs = rightTs,

@@ -229,8 +229,6 @@ object Incremental {
     */
   def heavyHitters(df: DataFrame, itemCol: String, k: Int): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     df.agg(call_function("graft_heavy_hitters", col(itemCol), lit(k))
         .as("__mg"))
       .select(explode(col("__mg")).as("__e"))

@@ -103,9 +103,6 @@ object Scd {
       history: DataFrame, incoming: DataFrame,
       keyCols: Seq[String], attrCols: Seq[String],
       effectiveCol: String, fpp: Double = 0.01): DataFrame = {
-    val spark = history.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-
     val inKeyed = incoming.select(
       (keyCols.map(col) :+ col(effectiveCol).as("__eff")) ++
         attrCols.map(c => col(c).as(s"__in_$c")): _*)

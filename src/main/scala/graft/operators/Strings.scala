@@ -31,27 +31,15 @@ object Strings {
   /** Roman numeral → its integer value as a string; non-Roman input passes
     * through unchanged; null stays null. Backed by the native codegen'd
     * [[graft.functions.RomanToInt]] expression (single static call per row,
-    * no per-row array materialization).
+    * no per-row array materialization); the analyzing session needs
+    * [[graft.functions.GraftExtensions]].
     */
-  def romanToInt(c: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        // Idempotent registration: makes the native function resolvable
-        // without requiring the spark.sql.extensions config. Registers in
-        // the ACTIVE session — columns built under one session but analyzed
-        // in another need GraftExtensions/GraftFunctions.register there.
-        graft.functions.GraftFunctions.register(s)
-        call_function("roman_to_int", c)
-      case None =>
-        // No session yet (e.g. module-level column values): same semantics
-        // through the pure-expression form.
-        romanToIntExpr(c)
-    }
+  def romanToInt(c: Column): Column = call_function("roman_to_int", c)
 
   /** Pure-expression form of [[romanToInt]] (subtractive rule over the char
     * array via higher-order functions) — same semantics, kept as the
-    * no-custom-expression fallback and as cross-checked documentation of
-    * the algorithm.
+    * reference FunctionsSpec checks the native expression against and as
+    * documentation of the algorithm.
     */
   def romanToIntExpr(c: Column): Column = {
     val chars = split(c, "")

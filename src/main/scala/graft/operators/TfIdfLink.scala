@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.llm.{CacheScope, Dedup, TextAnalysis}
+import graft.plans.Gates
 
 /** TF-IDF token-set cosine name matching — the TFIDF baseline of Cohen,
   * Ravikumar & Fienberg (IIWeb 2003, "A Comparison of String Distance
@@ -115,16 +116,10 @@ object TfIdfLink {
     // combinable aggregation on an (id, rep) frame — the replication
     // signal; ≈ |docs| on an unreplicated corpus, quadratic under
     // verbatim replicas).
-    val sessConf = df.sparkSession.sessionState.conf
     val gsqRow = memb.groupBy("__rep").agg(count(lit(1L)).as("__g"))
       .agg(sum(col("__g").cast("double") * col("__g").cast("double"))
         .as("__w")).head()
-    val pinX = !gsqRow.isNullAt(0) && gsqRow.getDouble(0) >= sessConf
-      .getConfString("spark.graft.pairs.pinWidthMinPairs", "16777216")
-      .toDouble
-    val xparts = sessConf.numShufflePartitions
-    val xpin: (DataFrame, org.apache.spark.sql.Column) => DataFrame =
-      if (pinX) (d, c) => d.repartition(xparts, c) else (d, _) => d
+    val xpin = Gates.widthPin(if (gsqRow.isNullAt(0)) 0.0 else gsqRow.getDouble(0))
     val cross = xpin(repPairs, col("__ra"))
       .join(memb.select(col("__rep").as("__ra"), col("__id").as("__ma")),
         "__ra")

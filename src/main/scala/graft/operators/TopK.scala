@@ -25,8 +25,6 @@ object TopK {
   def groupTopK(
       df: DataFrame, groupCol: String, scoreCol: String, idCol: String,
       k: Int): DataFrame = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftFunctions.register)
     df.groupBy(col(groupCol))
       .agg(call_function("graft_top_k_by",
         col(scoreCol).cast("double"), col(idCol).cast("long"), lit(k))

@@ -52,8 +52,6 @@ object Upsert {
   def upsertBloomPruned(
       target: DataFrame, incoming: DataFrame, keys: Seq[String],
       fpp: Double = 0.01): DataFrame = {
-    val spark = target.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     def keyHash(df: DataFrame) = xxhash64(keys.map(df(_)): _*)
     val hashed = incoming.select(keyHash(incoming).as("__graft_kh"))
     val expected = math.max(hashed.count(), 1L)

@@ -15,8 +15,8 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
 
 /** Whole-operator Catalyst extension for the event-time as-of join: a
   * custom logical node ([[AsOfJoinNode]]), a planner strategy
-  * ([[AsOfJoinStrategy]], injected via `SparkSessionExtensions` /
-  * `spark.experimental.extraStrategies`) and a sort-merge physical
+  * ([[AsOfJoinStrategy]], injected by [[graft.functions.GraftExtensions]],
+  * which a session needs to plan the node) and a sort-merge physical
   * operator ([[AsOfJoinExec]]).
   *
   * [[graft.operators.AsOf.asOfJoin]] expresses the same semantics
@@ -68,9 +68,8 @@ case class AsOfJoinNode(
 }
 
 /** Plans [[AsOfJoinNode]] as [[AsOfJoinExec]]; a no-op for every other
-  * node. Registered by [[graft.functions.GraftExtensions]] and
-  * idempotently via `spark.experimental.extraStrategies` in
-  * [[graft.operators.AsOf.asOfJoinNative]].
+  * node. Registered only by [[graft.functions.GraftExtensions]]; a
+  * session without it cannot plan [[graft.operators.AsOf.asOfJoinNative]].
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

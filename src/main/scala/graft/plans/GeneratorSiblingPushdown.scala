@@ -44,12 +44,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * re-derives it). Scale note: this is a pure CPU rewrite — it adds one
   * column to the pre-explode rows and removes O(fan-out) expression
   * evaluations per row; no shuffle, partitioning or row-count changes.
-  * Disable with `spark.graft.generatorPushdown.enabled=false`.
+  * Disable with
+  * `spark.sql.optimizer.excludedRules=graft.plans.GeneratorSiblingPushdown`.
   */
 object GeneratorSiblingPushdown extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.generatorPushdown.enabled", "true").toBoolean
 
   /** Cheap to re-evaluate — cheaper than materializing an extra column:
     * leaves, field/element accesses and cast chains over cheap inputs.
@@ -65,8 +63,7 @@ object GeneratorSiblingPushdown extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformDown {
       case p @ Project(projList, g @ Generate(generator, _, outer, qualifier,
           generatorOutput, child))
@@ -93,7 +90,6 @@ object GeneratorSiblingPushdown extends Rule[LogicalPlan] {
             newGenerate)
         }
     }
-  }
 
   /** Maximal deterministic non-cheap subtrees of the generator's children
     * that also occur somewhere in the sibling projection list and are

@@ -40,14 +40,14 @@ import graft.functions.{RankKRows, TopKRows}
   * groups whole and carries each row's rank; dense mode retains the k
   * smallest distinct keys) with a non-empty orderable ORDER BY, where
   * some conjunct bounds the rank from above by a positive integer
-  * literal ≤ `spark.graft.topkRewrite.maxK` (heap memory per group is
+  * literal ≤ 10000 (`maxK`; heap memory per group is
   * ~k rows; rank mode may additionally hold a boundary tie group — the
   * same rows the window form would output). Remaining conjuncts stay as
   * a residual filter — the rewritten plan reproduces the rank column
   * under the original attribute id, so every downstream reference keeps
   * resolving. Tie semantics are unchanged: `row_number` picks tied rows
   * arbitrarily, and so does the heap; `rank` ties are exact. Disable
-  * with `spark.graft.topkRewrite.enabled=false`.
+  * with `spark.sql.optimizer.excludedRules=graft.plans.WindowTopKRewrite`.
   *
   * The FRACTION family — `ntile(b) <= k`, `percent_rank() <= p`,
   * `cume_dist() <= p` — rewrites too, via the two-pass form: their
@@ -57,23 +57,18 @@ import graft.functions.{RankKRows, TopKRows}
   * with its per-group k in hand) and the rank value is reconstructed
   * arithmetically from the emitted position/rank/peer-count and the
   * count, with the ORIGINAL predicate always re-applied exactly. Fires
-  * only while the kept fraction is ≤ `spark.graft.topkRewrite
-  * .maxFraction` (default 0.5) — past that the window's sort wins.
+  * only while the kept fraction is ≤ 0.5 (`maxFraction`) — past that
+  * the window's sort wins.
   */
 object WindowTopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.topkRewrite.enabled", "true").toBoolean
-  private def maxK: Int =
-    conf.getConfString("spark.graft.topkRewrite.maxK", "10000").toInt
+  private val maxK = 10000
   // ntile/percent_rank retain a FRACTION of each group; past this fraction
   // the bounded aggregate buffers most of the group and the window's
   // sort is the better plan
-  private def maxFraction: Double =
-    conf.getConfString("spark.graft.topkRewrite.maxFraction", "0.5").toDouble
+  private val maxFraction = 0.5
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformDown {
       case f @ Filter(cond,
           w @ Window(Seq(alias @ Alias(WindowExpression(rankFn, _), _)),
@@ -147,7 +142,6 @@ object WindowTopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
             }
         }
     }
-  }
 
   /** `rn <= lit` / `rn < lit` (and mirrored) → Some(bound). */
   private def pureUpperBound(c: Expression, rn: Attribute): Option[Int] = c match {

@@ -66,15 +66,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * on the full order key resolve by the value field, deterministic where
   * the window's pick is partition-order-arbitrary; `ignoreNulls`
   * variants and running `last_value` keep their window.
-  * Disable with `spark.graft.windowAggRewrite.enabled=false`.
+  * Disable with
+  * `spark.sql.optimizer.excludedRules=graft.plans.WindowAggRewrite`.
   */
 object WindowAggRewrite extends Rule[LogicalPlan] {
 
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.windowAggRewrite.enabled", "true").toBoolean
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformDown {
       case w @ Window(windowExprs, partSpec, Seq(), child, _)
           if windowExprs.nonEmpty && windowExprs.forall(isRewritableAgg) =>
@@ -99,7 +96,6 @@ object WindowAggRewrite extends Rule[LogicalPlan] {
               orderedRewritable(e, uniformDirection(orderSpec).get)) =>
         rewriteOrdered(w, partSpec, orderSpec, child)
     }
-  }
 
   /** Some(true) = all ascending nulls-first (the defaults), Some(false) =
     * all descending nulls-last; None = mixed/custom (not rewritable).

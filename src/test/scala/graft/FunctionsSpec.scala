@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.operators.Strings
 
 class FunctionsSpec extends SparkSpec {
@@ -27,7 +26,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("roman_to_int is registered for SQL text users") {
-    GraftFunctions.register(spark)
     val out = spark.sql("SELECT roman_to_int('MMXXVI')").as[String].head()
     assert(out == "2026")
   }
@@ -109,7 +107,6 @@ class FunctionsSpec extends SparkSpec {
     }
     val dir = java.nio.file.Files.createTempDirectory("graft-sic").toString
     rows.toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
-    GraftFunctions.register(spark)
     val out = spark.read.parquet(dir).select(
         call_function("sorted_intersect_count", col("a"), col("b")).as("nat"),
         size(array_intersect(col("a"), col("b"))).cast("long").as("ref"))
@@ -130,7 +127,6 @@ class FunctionsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-shingle").toString
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text").write.mode("overwrite").parquet(dir)
-    GraftFunctions.register(spark)
     val toks = graft.llm.TextAnalysis.tokens(col("text"))
     val out = spark.read.parquet(dir).select(
         graft.llm.TextAnalysis.shingleSetSorted(toks, 3).as("nat"),
@@ -140,7 +136,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("native word_shingles_all keeps multiplicity in document order") {
-    GraftFunctions.register(spark)
     val toks = graft.llm.TextAnalysis.tokens(col("text"))
     val got = Seq((1L, "a b a b a"), (2L, "x"), (3L, ""))
       .toDF("id", "text")
@@ -153,7 +148,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("native nfc_normalize composes decomposed sequences; no-op stays identical") {
-    GraftFunctions.register(spark)
     val got = Seq((1L, "café"), (2L, "plain"), (3L, null))
       .toDF("id", "s")
       .select(col("id"), call_function("nfc_normalize", col("s")).as("n"))
@@ -309,7 +303,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("graft_top_k_by equals the window row_number form, ties on smaller id") {
-    GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val li = graft.sources.Tables.lineitem(spark, sfDir)
       // quantities repeat heavily -> real score ties across every group
@@ -328,7 +321,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("graft_top_k_by survives partial/merge across many partitions") {
-    GraftFunctions.register(spark)
     // 1 group, 1000 rows over 8 partitions: merge path must keep the
     // global top-3, not a per-partition artifact
     val df = spark.range(1000).repartition(8)
@@ -351,7 +343,6 @@ class FunctionsSpec extends SparkSpec {
   test("graft_sqdist equals the zip_with/aggregate fold bit-for-bit and " +
       "mirrors its null semantics") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(
       (Seq(1.0f, 2.5f, -3.0f), Seq(0.5, 2.5, 1.0)),
       (Seq(0.1f, 0.2f, 0.3f), Seq(0.30000001, 0.2, 0.1)),
@@ -428,7 +419,6 @@ class FunctionsSpec extends SparkSpec {
   test("graft_heavy_hitters: a FOLDABLE non-literal k (2+3, a cast) " +
       "works, and k <= 0 fails at ANALYSIS, not on executors") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = (Seq.fill(10)("a") ++ Seq.fill(2)("b")).toDF("w")
     // constant-folded arithmetic and casts pass analysis AND execute —
     // the k extraction must eval() the folded expression, not
@@ -548,7 +538,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("native jaro_winkler matches DuckDB's independent kernel on " +
       "pinned cases (boost threshold, window, transpositions, edges)") {
-    GraftFunctions.register(spark)
     // expected values are DuckDB jaro_winkler_similarity outputs,
     // probed verbatim — the oracle kernel this expression contracts to
     val pinned = Seq(
@@ -586,7 +575,6 @@ class FunctionsSpec extends SparkSpec {
   test("jaro_winkler non-BMP contract: UTF-16 code units, surrogate " +
       "pairs count as two positions (pinned divergence from code-point " +
       "and UTF-8-byte walks)") {
-    GraftFunctions.register(spark)
     // U+1D54F / U+1D550 share the high surrogate \uD835: under the
     // contracted UTF-16-unit walk each string is TWO units, position 0
     // matches, so jaro = (1/2 + 1/2 + 1)/3 = 2/3. A code-point walk

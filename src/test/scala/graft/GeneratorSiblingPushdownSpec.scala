@@ -52,10 +52,8 @@ class GeneratorSiblingPushdownSpec extends SparkSpec {
 
   test("rewritten plan returns identical rows to the rule-off plan") {
     val got = naturalForm.as[(Long, Int, String)].collect().toSet
-    spark.conf.set("spark.graft.generatorPushdown.enabled", "false")
-    val want =
-      try naturalForm.as[(Long, Int, String)].collect().toSet
-      finally spark.conf.set("spark.graft.generatorPushdown.enabled", "true")
+    val want = withRuleExcluded(GeneratorSiblingPushdown)(
+      naturalForm.as[(Long, Int, String)].collect().toSet)
     assert(got == want)
     assert(got == Set((1L, 3, "a"), (1L, 3, "b"), (1L, 3, "c"),
       (2L, 2, "d"), (2L, 2, "e"), (3L, 1, "")))

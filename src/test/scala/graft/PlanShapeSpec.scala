@@ -128,19 +128,19 @@ class PlanShapeSpec extends SparkSpec {
 
   test("tiledPairs falls back to the hot-only LeftOuter broadcast past " +
       "the multi-block broadcast gate") {
-    val prev = spark.conf.getOption("spark.graft.pairs.multiBlockBroadcastMax")
-    try {
-      spark.conf.set("spark.graft.pairs.multiBlockBroadcastMax", "0")
-      val plan = planString(SparkEntry.queries("q27_simhash")(spark, sfDir))
-      val outer = "(?s)BroadcastHashJoin.*LeftOuter.*BuildRight".r
-      assert(outer.findFirstIn(plan).isDefined,
-        s"gated-off path must keep the hot-block LeftOuter broadcast:\n$plan")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.pairs.multiBlockBroadcastMax", v)
-        case None => spark.conf.unset("spark.graft.pairs.multiBlockBroadcastMax")
-      }
-    }
+    import graft.llm.Dedup
+    // every block holds 4 rows, so pruning would drop none: the gate's
+    // drop-fraction floor keeps the multi-block set out of the broadcast
+    val keyed = spark.range(0, 400)
+      .select(col("id").as("__id"), (col("id") % 100).as("__block"))
+    val stats = Dedup.adaptiveMaxBlockStats(
+      keyed.groupBy("__block").agg(count(lit(1)).as("__cnt")), 4)
+    assert(stats.nMulti == 100L && stats.multiRows == stats.totalRows)
+    assert(!graft.plans.Gates.pruneSingletons(stats))
+    val plan = planString(Dedup.tiledPairs(keyed, Seq.empty, Dedup.AdaptiveBlock))
+    val outer = "(?s)BroadcastHashJoin.*LeftOuter.*BuildRight".r
+    assert(outer.findFirstIn(plan).isDefined,
+      s"gated-off path must keep the hot-block LeftOuter broadcast:\n$plan")
   }
 
   test("co-bucketed tables join without any shuffle") {

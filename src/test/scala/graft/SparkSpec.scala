@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,6 +30,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def planString(df: DataFrame): String = {
     df.collect()
     df.queryExecution.executedPlan.toString
+  }
+
+  /** Run `body` with one optimizer rule switched off through Spark's own
+    * `spark.sql.optimizer.excludedRules` (the engine has no rule switches).
+    */
+  def withRuleExcluded[T](rule: Rule[LogicalPlan])(body: => T): T = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", rule.ruleName)
+    try body finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   override def afterAll(): Unit = {

@@ -12,13 +12,11 @@ import graft.sources.Tables
   * ([[graft.functions.TopKRows]]): result equivalence with the window
   * form, residual-predicate handling, and the rewritten plan shape.
   *
-  * The shared test session has no GraftExtensions, so the rule is
-  * attached through `spark.experimental.extraOptimizations` (removed in
-  * afterAll); `windowGroupLimitThreshold = -1` keeps Spark's own
-  * InferWindowGroupLimit from rewriting the pattern first — in a
-  * GraftSession the injected rule runs in the operator-optimization
-  * batch, before that built-in, so production plans get the clean shape
-  * without the conf.
+  * The shared test session injects GraftExtensions (SparkSpec), so the
+  * rule runs in the operator-optimization batch as in production; the
+  * rule-off side excludes it through `spark.sql.optimizer.excludedRules`.
+  * `windowGroupLimitThreshold = -1` keeps Spark's own
+  * InferWindowGroupLimit out of the rule-off plans.
   */
 class TopKRewriteSpec extends SparkSpec {
 
@@ -26,22 +24,16 @@ class TopKRewriteSpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ WindowTopKRewrite
     spark.conf.set("spark.sql.optimizer.windowGroupLimitThreshold", "-1")
   }
 
   override def afterAll(): Unit = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == WindowTopKRewrite)
     spark.conf.unset("spark.sql.optimizer.windowGroupLimitThreshold")
     super.afterAll()
   }
 
-  private def withRuleOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.topkRewrite.enabled", "false")
-    try body finally spark.conf.set("spark.graft.topkRewrite.enabled", "true")
-  }
+  private def withRuleOff[T](body: => T): T =
+    withRuleExcluded(WindowTopKRewrite)(body)
 
   private def topkDf = {
     val li = Tables.lineitem(spark, sfDir)
@@ -57,6 +49,9 @@ class TopKRewriteSpec extends SparkSpec {
     // silently reuse the first plan
     def q() = topkDf.filter(col("rn") <= 3)
     val want = withRuleOff(q().collect().toSeq.sortBy(_.toString))
+    val offPlan = withRuleOff(planString(q()))
+    assert(offPlan.contains("Window") && !offPlan.contains("graft_top_k_rows"),
+      s"excluded rule still fired:\n$offPlan")
     val rewritten = q()
     val got = rewritten.collect().toSeq.sortBy(_.toString)
     assert(planString(rewritten).contains("graft_top_k_rows"))

@@ -10,29 +10,16 @@ import graft.sources.Tables
   * window aggregates (`sum(x) OVER (PARTITION BY p)`) replanned as a
   * per-group aggregation joined back, result-identical, window-free.
   *
-  * Attached via `extraOptimizations` like [[graft.plans.WindowTopKRewrite]]
-  * in its spec (the shared test session has no GraftExtensions).
+  * Active through the GraftExtensions the shared session injects
+  * (SparkSpec); the rule-off side excludes it through
+  * `spark.sql.optimizer.excludedRules`.
   */
 class WindowAggRewriteSpec extends SparkSpec {
 
   import spark.implicits._
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ WindowAggRewrite
-  }
-
-  override def afterAll(): Unit = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == WindowAggRewrite)
-    super.afterAll()
-  }
-
-  private def withRuleOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.windowAggRewrite.enabled", "false")
-    try body finally spark.conf.set("spark.graft.windowAggRewrite.enabled", "true")
-  }
+  private def withRuleOff[T](body: => T): T =
+    withRuleExcluded(WindowAggRewrite)(body)
 
   test("partitioned full-frame aggregates rewrite window-free, results exact") {
     def q() = {
@@ -45,6 +32,8 @@ class WindowAggRewriteSpec extends SparkSpec {
         .withColumn("grp_max", max(col("l_quantity")).over(w))
     }
     val want = withRuleOff(q().collect().toSeq.sortBy(_.toString))
+    val offPlan = withRuleOff(planString(q()))
+    assert(offPlan.contains("Window"), s"excluded rule still fired:\n$offPlan")
     val rw = q()
     val got = rw.collect().toSeq.sortBy(_.toString)
     val plan = planString(rw)
