@@ -7,37 +7,9 @@ object Bench {
 
     val names = SparkEntry.queries.keys.toSeq.sorted
 
-    def runOne(name: String): Either[String, Double] = {
-      val t0 = System.nanoTime()
-      // noop sink forces FULL computation of every output column —
-      // count() would let the optimizer strip projections and sorts and
-      // time little more than the scan.
-      try {
-        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: $e")
-          e.printStackTrace()
-          Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-      } finally {
-        // BLOCKING release: async unpersist (the default) lets the
-        // warm-up run's cached blocks — at sf10/q181 that is ~GBs of
-        // shingle arrays — stay resident into the adjacent measured
-        // run, whose old-gen pressure then makes the SECOND run slower
-        // than the first (r11 §4: 321.8 → 501.1 s). Waiting here is
-        // untimed by construction.
-        llm.CacheScope.releaseAll(blocking = true)
-        // Untimed heap compaction BETWEEN queries: ~190 sequential query
-        // executions in one JVM let old-gen pressure from earlier queries
-        // inflate later ones (r6 recorded q45 at 23.5 s in the marathon vs
-        // 5.4 s isolated at the same SF — the operator scales ×3.8 at ×10
-        // data, the other ×4 was inherited heap state). A real cluster
-        // gives each job fresh executors; this biases each query's wall
-        // time to its own work. Runs after timing capture — never counted.
-        System.gc()
-      }
-    }
+    def runOne(name: String): Either[String, Double] =
+      Run.once(name, SparkEntry.queries(name)(spark, sfDir))(Run.noop)
+        .map(_._2).left.map(_.take(200))
 
     // Warm-up is PER-QUERY and ADJACENT: each query runs once discarded,
     // then once measured, back to back. The old protocol (one full

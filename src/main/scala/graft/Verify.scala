@@ -12,12 +12,8 @@ object Verify {
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(only.contains).toMap
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally llm.CacheScope.releaseAll(blocking = true)
+      Run.once(name, fn(spark, sfDir))(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString("{", ",", "}")

@@ -897,9 +897,11 @@ object Dedup {
       .join(sigs, Seq("__tid")).drop("__tid")
 
   /** The portable signature stage of [[simhashPairsPortable]]: one row
-    * per member — (__id, __v0..__v3). Exposed for the SpotBench stage-
-    * decomposition probes (NOT persisted here — callers decide). */
-  private[graft] def simhashSignaturesPortable(
+    * per member — (__id, __v0..__v3), the four 16-bit chunks that are
+    * both the banding keys and the Hamming-verify operands. Signatures
+    * are computed once per distinct text and re-attached to every
+    * member. Not persisted here; the caller pins the compact result. */
+  private def simhashSignaturesPortable(
       docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val (base, texts) = distinctTexts(docs, idCol, textCol)
     val m = md5(col("__tok").cast("binary"))

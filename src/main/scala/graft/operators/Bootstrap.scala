@@ -55,31 +55,7 @@ object Bootstrap {
 
   def bootstrapMeanCi(
       df: DataFrame, groupCols: Seq[String], idCol: String,
-      valueCol: String, b: Int = 100, alpha: Double = 0.05): DataFrame =
-    bootstrapCore(df, groupCols, idCol, valueCol, b, alpha,
-      colsForm = false)
-
-  /** The B-AGGREGATION-COLUMNS twin of [[bootstrapMeanCi]]: instead of
-    * fanning the scan ×B with an explode before the combinable
-    * aggregate, every replicate's (Σw, Σw·x) is one of 2·B aggregation
-    * expressions over the UN-fanned scan, unpivoted to (group, b) cells
-    * after the fold. Per-(row, b) weights are the identical md5
-    * expression, decimal sums are order-insensitive, so the output is
-    * bit-equal to the explode form — this exists for the A/B (explode
-    * materializes ×B rows into the hash aggregate; the column form
-    * trades that for 2·B buffer slots per group and B md5 calls inside
-    * one projection).
-    */
-  private[graft] def bootstrapMeanCiCols(
-      df: DataFrame, groupCols: Seq[String], idCol: String,
-      valueCol: String, b: Int = 100, alpha: Double = 0.05): DataFrame =
-    bootstrapCore(df, groupCols, idCol, valueCol, b, alpha,
-      colsForm = true)
-
-  private def bootstrapCore(
-      df: DataFrame, groupCols: Seq[String], idCol: String,
-      valueCol: String, b: Int, alpha: Double,
-      colsForm: Boolean): DataFrame = {
+      valueCol: String, b: Int = 100, alpha: Double = 0.05): DataFrame = {
     require(b >= 4, s"need b >= 4 replicates, got $b")
     require(alpha > 0 && alpha < 1, s"need alpha in (0,1), got $alpha")
     val g = groupCols.map(col)
@@ -96,32 +72,14 @@ object Bootstrap {
       count(lit(1L)).as("n"),
       (sum(col("__x").cast("decimal(38,12)")).cast("double") /
         count(lit(1L)).cast("double")).as("media"))
-    val cells =
-      if (!colsForm)
-        base
-          .withColumn("__b", explode(sequence(lit(1), lit(b))))
-          .withColumn("__w", poissonWeight(
-            uniform(concat_ws(":", col("__id"), col("__b")))))
-          .groupBy(g :+ col("__b"): _*)
-          .agg(sum(col("__w").cast("long")).as("__sw"),
-            sum((col("__w").cast("double") * col("__x"))
-              .cast("decimal(38,12)")).cast("decimal(38,12)").as("__swx"))
-      else {
-        val aggs = (1 to b).flatMap { j =>
-          val w = poissonWeight(
-            uniform(concat_ws(":", col("__id"), lit(j))))
-          Seq(
-            sum(w.cast("long")).as(s"__sw_$j"),
-            sum((w.cast("double") * col("__x")).cast("decimal(38,12)"))
-              .cast("decimal(38,12)").as(s"__swx_$j"))
-        }
-        base.groupBy(g: _*).agg(aggs.head, aggs.tail: _*)
-          .select(g :+ explode(array((1 to b).map(j =>
-            struct(lit(j).as("__b"), col(s"__sw_$j").as("__sw"),
-              col(s"__swx_$j").as("__swx"))): _*)).as("__e"): _*)
-          .select(g ++ Seq(col("__e.__b").as("__b"),
-            col("__e.__sw").as("__sw"), col("__e.__swx").as("__swx")): _*)
-      }
+    val cells = base
+      .withColumn("__b", explode(sequence(lit(1), lit(b))))
+      .withColumn("__w", poissonWeight(
+        uniform(concat_ws(":", col("__id"), col("__b")))))
+      .groupBy(g :+ col("__b"): _*)
+      .agg(sum(col("__w").cast("long")).as("__sw"),
+        sum((col("__w").cast("double") * col("__x"))
+          .cast("decimal(38,12)")).cast("decimal(38,12)").as("__swx"))
     // Pin the |groups|·B replicate cells: `rep` feeds BOTH the rank
     // window and (through the window-to-aggregate rewrite of the
     // per-group count) a second consumer — unpersisted, the second
