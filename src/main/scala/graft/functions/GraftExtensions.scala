@@ -33,7 +33,7 @@ object GraftExtensions {
   private def functions = Seq(
     romanToInt, VectorDotDecimal.descriptor, VectorDotDouble.descriptor,
     MightContain.descriptor, SortedIntersectCount.descriptor, WordShingles.descriptor,
-    WordShinglesAll.descriptor, NfcNormalize.descriptor, TopKBy.descriptor,
+    WordShinglesAll.descriptor, NfcNormalize.descriptor,
     NearestCell.descriptor, SizedBloom.descriptor, BloomMightContainAny.descriptor,
     SqDistDouble.descriptor, SortedIntersectLongs.descriptor,
     HeavyHitters.descriptor, JaroWinkler.descriptor)

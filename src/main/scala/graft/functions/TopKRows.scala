@@ -16,15 +16,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StructType}
   * group under the given sort order — any orderable sort key, any payload
   * row — and returns them as an ordered `array<struct<…payload…>>`.
   *
-  * [[TopKBy]] is the primitive-specialized fast path (double score, long
-  * id, zero boxing); this is the general form that [[graft.plans.WindowTopKRewrite]]
-  * needs to replace an arbitrary `row_number() <= k` window with an
-  * aggregation: the payload carries the WHOLE input row, so the rewrite
-  * can reconstruct every downstream column. Same scale contract as
-  * [[TopKBy]]: partial-aggregates under ObjectHashAggregate, so each map
-  * task reduces its slice of a group to ≤ k rows before the exchange,
-  * instead of shuffling and sorting every row the way the window form
-  * does.
+  * It is the one top-k kernel: [[graft.operators.TopK]] and
+  * [[graft.plans.WindowTopKRewrite]] (which replaces an arbitrary
+  * `row_number() <= k` window with an aggregation) both run on it. The
+  * payload carries the WHOLE input row, so the rewrite can reconstruct
+  * every downstream column. It partial-aggregates under
+  * ObjectHashAggregate, so each map task reduces its slice of a group to
+  * ≤ k rows before the exchange, instead of shuffling and sorting every
+  * row the way the window form does.
   *
   * `k` may be a positive integer LITERAL (the `row_number() <= k` path)
   * or any integer expression that is CONSTANT WITHIN EACH GROUP — e.g. a

@@ -28,27 +28,6 @@ object Dedup {
       .select(cols.map(c => col(s"__graft_r.$c").as(c)): _*)
   }
 
-  /** MinHash signature over a distinct-shingle set: element `s` is
-    * `min(xxhash64(s, shingle))`. Null when the set is empty.
-    */
-  def minhashSignature(shingleSet: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      s => array_min(transform(shingleSet, sh => xxhash64(s, sh))))
-
-  /** One row per (id, band, bandHash): LSH band buckets of the signature.
-    * Docs sharing any band bucket become candidate pairs.
-    */
-  def lshBuckets(
-      docs: DataFrame, idCol: String, sigCol: String,
-      bands: Int, rowsPerBand: Int): DataFrame =
-    docs
-      .select(col(idCol).as("__id"),
-        explode(array((0 until bands).map { b =>
-          struct(lit(b).as("band"),
-            hash(slice(col(sigCol), b * rowsPerBand + 1, rowsPerBand)).as("bhash"))
-        }: _*)).as("bb"))
-      .select(col("__id"), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
-
   /** Distinct candidate id pairs (a < b) from shared band buckets. The join
     * key is (band, bhash) — pair generation is local to a bucket.
     */
@@ -70,9 +49,6 @@ object Dedup {
     inter / (size(shA).cast("double") + size(shB).cast("double") - inter)
   }
 
-  /** MinHash-LSH near-duplicate pairs: shingle → signature → band buckets →
-    * within-bucket candidates → exact-Jaccard verify ≥ `threshold`.
-    */
   /** (id, shingle-set) relation: tokenize, Spread (parallelism floor + a
     * materialization barrier so `split()` is evaluated once per row, not
     * inlined into the shingle lambda per element), shingle, drop empties.
@@ -99,34 +75,16 @@ object Dedup {
     inter / (size(shA).cast("double") + size(shB).cast("double") - inter)
   }
 
+  /** MinHash-LSH near-duplicate pairs: shingle → signature → band buckets →
+    * within-bucket candidates → exact-Jaccard verify ≥ `threshold`. Every
+    * hash is the portable md5 family of [[portableSignatures]], so the
+    * DuckDB oracle replays the full pipeline.
+    */
   def minhashNearDups(
       docs: DataFrame, idCol: String, textCol: String, threshold: Double,
       shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    // Persist the branch points: shingle sets feed both the signature path
-    // and the two jaccard join-backs, and the bucket relation feeds both
-    // sides of the candidate self-join. Without this, CollapseProject
-    // inlines the signature expression once per band and the self-join
-    // doubles it — ~10× recomputation of the most expensive stage. The
-    // persisted relations are (id, shingles)/(id, band, bhash) — tiny
-    // relative to the corpus, spillable to disk at scale.
-    val keyed = shingled(docs, idCol, textCol, shingleN)
-      .transform(CacheScope.persistTracked)
-    // Signature via explode + per-seed min aggregation: xxhash64 runs as a
-    // codegen'd projection over shingle rows (inside the higher-order
-    // minhashSignature lambda it is interpreted — CodegenFallback), and
-    // since one doc's shingles never span partitions the partial
-    // aggregation collapses map-side to a single row per doc.
-    val exploded = keyed.select(col("__id"), explode(col("__sh")).as("__shingle"))
-    val minCols = (0 until numHashes).map(s =>
-      min(xxhash64(lit(s), col("__shingle"))).as(s"__h$s"))
-    val sigs = exploded.groupBy("__id")
-      .agg(minCols.head, minCols.tail: _*)
-      .select(col("__id"),
-        array((0 until numHashes).map(s => col(s"__h$s")): _*).as("__sig"))
-    val buckets = lshBuckets(sigs, "__id", "__sig", bands, rowsPerBand)
-      .transform(CacheScope.persistTracked)
-    jaccardVerify(candidatePairs(buckets), keyed, threshold)
+    val idx = bandIndex(docs, idCol, textCol, shingleN, numHashes, bands)
+    jaccardVerify(candidatePairs(idx.bands), idx.shingles, threshold)
   }
 
   /** Largest prime below 2^32 — modulus of the portable seeded hash family
@@ -136,7 +94,7 @@ object Dedup {
     * error instead of wrapping), and md5/substr/hex-cast exist in both
     * Spark and the DuckDB oracle — unlike xxhash64.
     */
-  private val PortableMod = 4294967291L
+  private val HashMod = 4294967291L
 
   /** (h1, h2) 32-bit md5 words of a string column, as longs. */
   private def md5Words(c: Column): (Column, Column) = {
@@ -158,90 +116,25 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** [[minhashNearDups]] with the portable md5 hash family — same banded
-    * LSH structure and exact-Jaccard verify, but every hash is reproducible
-    * in ANSI-ish SQL so a DuckDB oracle checks the full pipeline. One md5
-    * per shingle (vs 20 xxhash64 calls), then 20 cheap `(h1 + s·h2) mod p`
-    * mins collapse map-side; band buckets key on the joined signature
-    * slice itself (a string) instead of a Murmur3 hash.
+  /** Wide MinHash signature relation `(__id, __h0..__h{n-1})` of a
+    * [[shingled]] frame. One md5 per shingle, then `numHashes` cheap
+    * `(h1 + s·h2) mod p` mins: the shingle explode keeps the hashing a
+    * codegen'd projection (inside a higher-order lambda it would be
+    * interpreted), and since one doc's shingles never span partitions the
+    * per-seed min aggregation collapses map-side to one row per doc.
     */
-  def minhashNearDupsPortable(
-      docs: DataFrame, idCol: String, textCol: String, threshold: Double,
-      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): DataFrame = {
-    val (keyed, buckets) = portableBands(docs, idCol, textCol,
-      shingleN, numHashes, bands)
-    jaccardVerify(candidatePairs(buckets), keyed, threshold)
-  }
-
-  /** Shared portable-MinHash front half: sorted shingle sets and band
-    * buckets, both persisted (they each feed ≥ 2 consumers downstream).
-    */
-  private def portableBands(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
-    val rowsPerBand = numHashes / bands
-    val keyed = shingled(docs, idCol, textCol, shingleN)
-      .transform(CacheScope.persistTracked)
+  private def portableSignatures(keyed: DataFrame, numHashes: Int): DataFrame = {
     val (h1, h2) = md5Words(col("__shingle"))
-    val exploded = keyed.select(col("__id"), explode(col("__sh")).as("__shingle"))
-      .select(col("__id"), h1.as("__h1"), h2.as("__h2"))
     val minCols = (0 until numHashes).map(s =>
-      min((col("__h1") + lit(s.toLong) * col("__h2")) % PortableMod).as(s"__h$s"))
-    val sigs = exploded.groupBy("__id").agg(minCols.head, minCols.tail: _*)
-    val buckets = sigs.select(col("__id"),
-        explode(array((0 until bands).map { b =>
-          struct(lit(b).as("band"),
-            concat_ws(",", (0 until rowsPerBand).map(r =>
-              col(s"__h${b * rowsPerBand + r}")): _*).as("bhash"))
-        }: _*)).as("bb"))
-      .select(col("__id"), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
-      .transform(CacheScope.persistTracked)
-    (keyed, buckets)
-  }
-
-  /** Signature-only near-dup pairs (Broder 1997's estimator): candidate
-    * pairs from the same portable-MinHash band buckets, but scored by
-    * SIGNATURE COMPONENT AGREEMENT — `|{s : sigA[s]=sigB[s]}| /
-    * numHashes`, an unbiased estimate of the Jaccard similarity — with
-    * NO join back to the shingle sets. This is the 100 TB shortcut the
-    * sketch exists for: the exact verify drags two full shingle arrays
-    * (often 10³ elements) through the pair join, the estimator joins
-    * two `numHashes`-long arrays (160 bytes at 20 hashes) and pays one
-    * codegen'd zip/fold per pair. Corpus text is touched exactly once
-    * (signature build) — with a persisted signature index (the
-    * [[BandIndex]] pattern) an audit re-run touches NO text at all.
-    * Trade-off: ±1/numHashes quantization and sketch noise, so use it
-    * for audit/triage joins and keep the exact verify for destructive
-    * dedup ([[minhashNearDupsPortable]]).
-    */
-  def estimatedJaccardPairs(
-      docs: DataFrame, idCol: String, textCol: String, threshold: Double,
-      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): DataFrame = {
-    // signatures feed the band fan-out AND both pair sides — persist the
-    // numHashes-column relation, not the corpus
-    val sigs = portableSignatures(docs, idCol, textCol, shingleN, numHashes)
-      .transform(CacheScope.persistTracked)
-    estimatePairs(sigArray(sigs, numHashes), sigBands(sigs, numHashes, bands),
-      numHashes, threshold)
-  }
-
-  /** Wide portable-MinHash signature relation `(__id, __h0..__h{n-1})` —
-    * the corpus text is tokenized, shingled and hashed exactly once.
-    */
-  private def portableSignatures(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int): DataFrame = {
-    val keyed = shingled(docs, idCol, textCol, shingleN)
-    val (h1, h2) = md5Words(col("__shingle"))
-    val exploded = keyed.select(col("__id"), explode(col("__sh")).as("__shingle"))
+      min((col("__h1") + lit(s.toLong) * col("__h2")) % HashMod).as(s"__h$s"))
+    keyed.select(col("__id"), explode(col("__sh")).as("__shingle"))
       .select(col("__id"), h1.as("__h1"), h2.as("__h2"))
-    val minCols = (0 until numHashes).map(s =>
-      min((col("__h1") + lit(s.toLong) * col("__h2")) % PortableMod).as(s"__h$s"))
-    exploded.groupBy("__id").agg(minCols.head, minCols.tail: _*)
+      .groupBy("__id").agg(minCols.head, minCols.tail: _*)
   }
 
   /** Band fan-out of a wide signature relation: `bands` rows per doc,
-    * bucket key = the concatenated signature components of the band.
+    * bucket key = the concatenated signature components of the band (a
+    * string, so no second hash is needed).
     */
   private def sigBands(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     val rowsPerBand = numHashes / bands
@@ -259,25 +152,50 @@ object Dedup {
     sigs.select(col("__id"),
       array((0 until numHashes).map(s => col(s"__h$s")): _*).as("__sig"))
 
-  /** The estimator's scoring core: band-bucket candidates scored by
-    * per-component signature agreement / numHashes. Shared by the
-    * from-scratch path and the persisted-index audit.
+  /** Broder's estimate for a candidate pair: the share of the `numHashes`
+    * signature components on which `__sig_a` and `__sig_b` agree, as
+    * `jaccard_est`.
     */
-  private def estimatePairs(
-      sigArr: DataFrame, buckets: DataFrame, numHashes: Int,
-      threshold: Double): DataFrame =
-    candidatePairs(buckets)
-      .join(sigArr.select(col("__id").as("id_a"), col("__sig").as("__sig_a")),
-        "id_a")
-      .join(sigArr.select(col("__id").as("id_b"), col("__sig").as("__sig_b")),
-        "id_b")
-      .select(col("id_a"), col("id_b"),
-        (aggregate(
-          zip_with(col("__sig_a"), col("__sig_b"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (a, v) => a + v).cast("double") / numHashes)
-          .as("jaccard_est"))
-      .filter(col("jaccard_est") >= threshold)
+  private def sigAgreement(numHashes: Int): Column =
+    (aggregate(
+      zip_with(col("__sig_a"), col("__sig_b"),
+        (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (a, v) => a + v).cast("double") / numHashes).as("jaccard_est")
+
+  /** Candidate (id_novo, id_existente) pairs of an ingest gate: the batch's
+    * band buckets equi-join the corpus's (AQE skew-handled; a
+    * boilerplate-hot bucket is the q26 skew case), so candidates form only
+    * ACROSS the batch/corpus boundary and pair volume is batch-bounded,
+    * never corpus².
+    */
+  private def crossBandPairs(batchBands: DataFrame, corpusBands: DataFrame): DataFrame =
+    batchBands.select(col("__id").as("id_novo"), col("band"), col("bhash"))
+      .join(corpusBands
+          .select(col("__id").as("id_existente"), col("band"), col("bhash")),
+        Seq("band", "bhash"))
+      .select("id_novo", "id_existente").distinct()
+
+  /** Signature-only near-dup pairs (Broder 1997's estimator): candidate
+    * pairs from the same portable-MinHash band buckets, but scored by
+    * SIGNATURE COMPONENT AGREEMENT — `|{s : sigA[s]=sigB[s]}| /
+    * numHashes`, an unbiased estimate of the Jaccard similarity — with
+    * NO join back to the shingle sets. This is the 100 TB shortcut the
+    * sketch exists for: the exact verify drags two full shingle arrays
+    * (often 10³ elements) through the pair join, the estimator joins
+    * two `numHashes`-long arrays (160 bytes at 20 hashes) and pays one
+    * codegen'd zip/fold per pair. Corpus text is touched exactly once
+    * (signature build) — with a persisted signature index (the
+    * [[BandIndex]] pattern) an audit re-run touches NO text at all.
+    * Trade-off: ±1/numHashes quantization and sketch noise, so use it
+    * for audit/triage joins and keep the exact verify for destructive
+    * dedup ([[minhashNearDups]]).
+    */
+  def estimatedJaccardPairs(
+      docs: DataFrame, idCol: String, textCol: String, threshold: Double,
+      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): DataFrame =
+    estimatedJaccardPairsIndexed(
+      signatureIndex(docs, idCol, textCol, shingleN, numHashes, bands),
+      threshold, numHashes)
 
   /** Persisted MinHash-SIGNATURE index — the [[BandIndex]] pattern applied
     * to the Broder estimator ([[estimatedJaccardPairs]]): signatures and
@@ -293,26 +211,40 @@ object Dedup {
     */
   case class SignatureIndex(sigs: DataFrame, bands: DataFrame)
 
+  /** In-memory [[SignatureIndex]] of `docs`. The wide signature relation
+    * is persisted: it feeds the band fan-out and every signature join-back,
+    * and it is far smaller than the corpus text.
+    */
+  private def signatureIndex(
+      docs: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, numHashes: Int, bands: Int): SignatureIndex = {
+    val sigs = portableSignatures(shingled(docs, idCol, textCol, shingleN), numHashes)
+      .transform(CacheScope.persistTracked)
+    SignatureIndex(sigArray(sigs, numHashes), sigBands(sigs, numHashes, bands))
+  }
+
+  private def saveSignatureIndex(
+      docs: DataFrame, idCol: String, textCol: String, path: String,
+      shingleN: Int, numHashes: Int, bands: Int, mode: String): Unit = {
+    val idx = signatureIndex(docs, idCol, textCol, shingleN, numHashes, bands)
+    idx.sigs.write.mode(mode).parquet(s"$path/sigs")
+    idx.bands.write.mode(mode).parquet(s"$path/bands")
+  }
+
   def writeSignatureIndex(
       docs: DataFrame, idCol: String, textCol: String, path: String,
-      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): Unit = {
-    val sigs = portableSignatures(docs, idCol, textCol, shingleN, numHashes)
-      .transform(CacheScope.persistTracked)
-    sigArray(sigs, numHashes).write.mode("overwrite").parquet(s"$path/sigs")
-    sigBands(sigs, numHashes, bands).write.mode("overwrite").parquet(s"$path/bands")
-  }
+      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): Unit =
+    saveSignatureIndex(docs, idCol, textCol, path, shingleN, numHashes, bands,
+      "overwrite")
 
   /** Extend a persisted signature index with an accepted batch's rows —
     * same append discipline as [[appendBandIndex]].
     */
   def appendSignatureIndex(
       docs: DataFrame, idCol: String, textCol: String, path: String,
-      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): Unit = {
-    val sigs = portableSignatures(docs, idCol, textCol, shingleN, numHashes)
-      .transform(CacheScope.persistTracked)
-    sigArray(sigs, numHashes).write.mode("append").parquet(s"$path/sigs")
-    sigBands(sigs, numHashes, bands).write.mode("append").parquet(s"$path/bands")
-  }
+      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): Unit =
+    saveSignatureIndex(docs, idCol, textCol, path, shingleN, numHashes, bands,
+      "append")
 
   def readSignatureIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): SignatureIndex =
@@ -330,7 +262,13 @@ object Dedup {
   def estimatedJaccardPairsIndexed(
       index: SignatureIndex, threshold: Double,
       numHashes: Int = 20): DataFrame =
-    estimatePairs(index.sigs, index.bands, numHashes, threshold)
+    candidatePairs(index.bands)
+      .join(index.sigs.select(col("__id").as("id_a"), col("__sig").as("__sig_a")),
+        "id_a")
+      .join(index.sigs.select(col("__id").as("id_b"), col("__sig").as("__sig_b")),
+        "id_b")
+      .select(col("id_a"), col("id_b"), sigAgreement(numHashes))
+      .filter(col("jaccard_est") >= threshold)
 
   /** Signature-only ingest gate: per batch doc, how many corpus docs have
     * ESTIMATED Jaccard ≥ `threshold` against it, and the keep verdict.
@@ -344,27 +282,14 @@ object Dedup {
       batch: DataFrame, index: SignatureIndex, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 3, numHashes: Int = 20,
       bands: Int = 5): DataFrame = {
-    val bs = portableSignatures(batch, idCol, textCol, shingleN, numHashes)
-      .transform(CacheScope.persistTracked)
-    val pairs = sigBands(bs, numHashes, bands)
-      .select(col("__id").as("id_novo"), col("band"), col("bhash"))
-      .join(index.bands
-          .select(col("__id").as("id_existente"), col("band"), col("bhash")),
-        Seq("band", "bhash"))
-      .select("id_novo", "id_existente").distinct()
-    val est = pairs
-      .join(sigArray(bs, numHashes)
-          .select(col("__id").as("id_novo"), col("__sig").as("__sig_a")),
+    val bs = signatureIndex(batch, idCol, textCol, shingleN, numHashes, bands)
+    val est = crossBandPairs(bs.bands, index.bands)
+      .join(bs.sigs.select(col("__id").as("id_novo"), col("__sig").as("__sig_a")),
         "id_novo")
       .join(index.sigs
           .select(col("__id").as("id_existente"), col("__sig").as("__sig_b")),
         "id_existente")
-      .select(col("id_novo"),
-        (aggregate(
-          zip_with(col("__sig_a"), col("__sig_b"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (a, v) => a + v).cast("double") / numHashes)
-          .as("jaccard_est"))
+      .select(col("id_novo"), sigAgreement(numHashes))
       .filter(col("jaccard_est") >= threshold)
       .groupBy("id_novo").agg(count(lit(1)).as("n_quase_dups"))
     batch.select(col(idCol).as("id_novo"))
@@ -374,61 +299,51 @@ object Dedup {
       .withColumn("mantido", col("n_quase_dups") === 0L)
   }
 
-  /** Incremental cross-corpus near-dup pairs: every (new, existing) pair
-    * with exact Jaccard ≥ `threshold` — the ingestion-time discipline
-    * that keeps a GROWING corpus deduplicated without ever re-running the
-    * self-join over 100 TB of history. Same portable-MinHash banding as
-    * [[minhashNearDupsPortable]] on both sides, but candidates form only
-    * ACROSS the batch/corpus boundary: the batch's band buckets equi-join
-    * the corpus's (AQE skew-handled; a boilerplate-hot bucket is the q26
-    * skew case), so pair volume is batch-bounded, never corpus².
-    *
-    * The corpus-side bands are pure functions of the text — at production
-    * scale they are computed ONCE, persisted next to the corpus (the
-    * manifest pattern of Staging/Layout), and only the batch side is
-    * hashed per ingest.
-    */
-  def crossCorpusNearDups(
-      batch: DataFrame, corpus: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleN: Int = 3, numHashes: Int = 20,
-      bands: Int = 5): DataFrame = {
-    val (kb, bb) = portableBands(batch, idCol, textCol, shingleN, numHashes, bands)
-    val (kc, bc) = portableBands(corpus, idCol, textCol, shingleN, numHashes, bands)
-    val pairs = bb.select(col("__id").as("id_novo"), col("band"), col("bhash"))
-      .join(bc.select(col("__id").as("id_existente"), col("band"), col("bhash")),
-        Seq("band", "bhash"))
-      .select("id_novo", "id_existente").distinct()
-    pairs
-      .join(kb.select(col("__id").as("id_novo"), col("__sh").as("__sh_a")),
-        "id_novo")
-      .join(kc.select(col("__id").as("id_existente"), col("__sh").as("__sh_b")),
-        "id_existente")
-      .select(col("id_novo"), col("id_existente"),
-        jaccardSorted(col("__sh_a"), col("__sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** The persisted corpus half of [[ingestGate]]: sorted shingle sets,
-    * band buckets and content hashes are pure functions of the corpus
-    * text, so they are computed ONCE, written next to the corpus, and
-    * every subsequent ingest batch joins against them without re-reading
-    * a byte of corpus text — the 100 TB contract (the Staging/Layout
-    * manifest pattern applied to dedup state). After an accepted batch
-    * is appended, append its OWN index rows the same way.
+  /** The corpus half of [[ingestGateIndexed]]: sorted shingle sets, band
+    * buckets and content hashes are pure functions of the corpus text, so
+    * they are computed ONCE, written next to the corpus
+    * ([[writeBandIndex]]), and every subsequent ingest batch joins against
+    * them without re-reading a byte of corpus text — the 100 TB contract
+    * (the Staging/Layout manifest pattern applied to dedup state). After
+    * an accepted batch is appended, append its OWN index rows the same
+    * way. [[ingestGate]] builds the same index in memory.
     */
   case class BandIndex(shingles: DataFrame, bands: DataFrame, hashes: DataFrame)
 
+  /** In-memory [[BandIndex]] of `docs`. Shingle sets and band buckets are
+    * persisted branch points: the shingles feed the signature path and the
+    * Jaccard join-backs, the buckets feed both sides of a candidate join.
+    * Without this, CollapseProject inlines the signature expression once
+    * per band and the self-join doubles it — ~10× recomputation of the most
+    * expensive stage. Both relations are tiny relative to the corpus and
+    * spill to disk at scale. `hashes` may repeat a hash; consumers take
+    * it through a distinct.
+    */
+  private def bandIndex(
+      docs: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, numHashes: Int, bands: Int): BandIndex = {
+    val keyed = shingled(docs, idCol, textCol, shingleN)
+      .transform(CacheScope.persistTracked)
+    val buckets = sigBands(portableSignatures(keyed, numHashes), numHashes, bands)
+      .transform(CacheScope.persistTracked)
+    BandIndex(keyed, buckets,
+      docs.select(sha2(col(textCol).cast("binary"), 256).as("__ch")))
+  }
+
+  private def saveBandIndex(
+      docs: DataFrame, idCol: String, textCol: String, path: String,
+      shingleN: Int, numHashes: Int, bands: Int, mode: String): Unit = {
+    val idx = bandIndex(docs, idCol, textCol, shingleN, numHashes, bands)
+    idx.shingles.write.mode(mode).parquet(s"$path/shingles")
+    idx.bands.write.mode(mode).parquet(s"$path/bands")
+    idx.hashes.distinct().write.mode(mode).parquet(s"$path/hashes")
+  }
+
   def writeBandIndex(
       corpus: DataFrame, idCol: String, textCol: String, path: String,
-      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): Unit = {
-    val (keyed, buckets) = portableBands(corpus, idCol, textCol,
-      shingleN, numHashes, bands)
-    keyed.write.mode("overwrite").parquet(s"$path/shingles")
-    buckets.write.mode("overwrite").parquet(s"$path/bands")
-    corpus.select(sha2(col(textCol).cast("binary"), 256).as("__ch"))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$path/hashes")
-  }
+      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): Unit =
+    saveBandIndex(corpus, idCol, textCol, path, shingleN, numHashes, bands,
+      "overwrite")
 
   def readBandIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): BandIndex =
@@ -445,27 +360,10 @@ object Dedup {
     */
   def appendBandIndex(
       docs: DataFrame, idCol: String, textCol: String, path: String,
-      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): Unit = {
-    val (keyed, buckets) = portableBands(docs, idCol, textCol,
-      shingleN, numHashes, bands)
-    keyed.write.mode("append").parquet(s"$path/shingles")
-    buckets.write.mode("append").parquet(s"$path/bands")
-    docs.select(sha2(col(textCol).cast("binary"), 256).as("__ch"))
-      .distinct()
-      .write.mode("append").parquet(s"$path/hashes")
-  }
+      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): Unit =
+    saveBandIndex(docs, idCol, textCol, path, shingleN, numHashes, bands,
+      "append")
 
-  /** Streaming twin of [[ingestGateIndexed]]: every micro-batch is gated
-    * against the persisted index, accepted rows are handed to
-    * `onAccepted` (write them to the corpus sink there) and the index is
-    * EXTENDED with their band/shingle/hash rows — so a duplicate arriving
-    * two micro-batches after its twin is rejected even though neither is
-    * in the original corpus. The micro-batch is `localCheckpoint`ed
-    * before the index append, cutting the lineage that reads the same
-    * parquet paths being appended. This is the foreachBatch production
-    * shape (the q111 CDC discipline): per-batch work is batch-bounded,
-    * corpus state stays on disk.
-    */
   /** The shared foreachBatch discipline behind EVERY self-extending
     * ingest gate — text band-index ([[ingestGateStream]]), perceptual
     * image hash ([[imageGateStream]]), signature-only triage
@@ -497,6 +395,17 @@ object Dedup {
         onAccepted(accepted)
     }.start()
 
+  /** Streaming twin of [[ingestGateIndexed]]: every micro-batch is gated
+    * against the persisted index, accepted rows are handed to
+    * `onAccepted` (write them to the corpus sink there) and the index is
+    * EXTENDED with their band/shingle/hash rows — so a duplicate arriving
+    * two micro-batches after its twin is rejected even though neither is
+    * in the original corpus. The micro-batch is `localCheckpoint`ed
+    * before the index append, cutting the lineage that reads the same
+    * parquet paths being appended. This is the foreachBatch production
+    * shape (the q111 CDC discipline): per-batch work is batch-bounded,
+    * corpus state stays on disk.
+    */
   def ingestGateStream(
       stream: DataFrame, indexPath: String, idCol: String, textCol: String,
       threshold: Double, onAccepted: DataFrame => Unit,
@@ -528,24 +437,21 @@ object Dedup {
         shingleN, numHashes, bands),
       onAccepted)
 
-  /** [[ingestGate]] against a persisted [[BandIndex]] — identical
-    * verdicts (spec-proven), but the corpus contributes only its index
-    * scans: band equi-join, shingle join-back for the verify, hash
-    * semi-join. Only the BATCH is tokenized and hashed per ingest.
+  /** The ingestion gate against a [[BandIndex]]: per batch document,
+    * whether an EXACT copy exists in the corpus (content-hash semi-join,
+    * one shuffle on the 256-bit hash), how many corpus docs have exact
+    * Jaccard ≥ `threshold` against it, and the keep verdict (`mantido` =
+    * neither). Candidates come from [[crossBandPairs]] and are verified
+    * against the index's shingle sets; only the BATCH is tokenized and
+    * hashed, the corpus contributes its index scans. Batch-shaped output.
     */
   def ingestGateIndexed(
       batch: DataFrame, index: BandIndex, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 3, numHashes: Int = 20,
       bands: Int = 5): DataFrame = {
-    val (kb, bb) = portableBands(batch, idCol, textCol,
-      shingleN, numHashes, bands)
-    val pairs = bb.select(col("__id").as("id_novo"), col("band"), col("bhash"))
-      .join(index.bands
-          .select(col("__id").as("id_existente"), col("band"), col("bhash")),
-        Seq("band", "bhash"))
-      .select("id_novo", "id_existente").distinct()
-    val verified = pairs
-      .join(kb.select(col("__id").as("id_novo"), col("__sh").as("__sh_a")),
+    val kb = bandIndex(batch, idCol, textCol, shingleN, numHashes, bands)
+    val verified = crossBandPairs(kb.bands, index.bands)
+      .join(kb.shingles.select(col("__id").as("id_novo"), col("__sh").as("__sh_a")),
         "id_novo")
       .join(index.shingles
           .select(col("__id").as("id_existente"), col("__sh").as("__sh_b")),
@@ -566,31 +472,16 @@ object Dedup {
       .withColumn("mantido", !col("exato") && col("n_quase_dups") === 0L)
   }
 
-  /** The ingestion gate over [[crossCorpusNearDups]]: per batch document,
-    * whether an EXACT copy exists in the corpus (content-hash semi-join,
-    * one shuffle on the 256-bit hash), how many corpus near-dups it has,
-    * and the keep verdict (`mantido` = neither). Batch-shaped output —
-    * the corpus contributes one distinct-hash pass and its band table.
+  /** [[ingestGateIndexed]] against an in-memory [[BandIndex]] of `corpus`
+    * — the one-shot form, for a corpus with no index on disk yet.
     */
   def ingestGate(
       batch: DataFrame, corpus: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 3, numHashes: Int = 20,
-      bands: Int = 5): DataFrame = {
-    val corpusHashes = corpus
-      .select(sha2(col(textCol).cast("binary"), 256).as("__ch")).distinct()
-      .withColumn("__exato", lit(true))
-    val near = crossCorpusNearDups(batch, corpus, idCol, textCol,
-        threshold, shingleN, numHashes, bands)
-      .groupBy("id_novo").agg(count(lit(1)).as("n_quase_dups"))
-    batch
-      .withColumn("__bh", sha2(col(textCol).cast("binary"), 256))
-      .join(corpusHashes, col("__bh") === col("__ch"), "left")
-      .join(near, col(idCol) === col("id_novo"), "left")
-      .select(col(idCol),
-        coalesce(col("__exato"), lit(false)).as("exato"),
-        coalesce(col("n_quase_dups"), lit(0L)).as("n_quase_dups"))
-      .withColumn("mantido", !col("exato") && col("n_quase_dups") === 0L)
-  }
+      bands: Int = 5): DataFrame =
+    ingestGateIndexed(batch,
+      bandIndex(corpus, idCol, textCol, shingleN, numHashes, bands),
+      idCol, textCol, threshold, shingleN, numHashes, bands)
 
   /** Content-defined chunking (the LBFS/Venti storage-dedup discipline
     * applied to text, token-level): a chunk boundary falls after token
@@ -713,75 +604,6 @@ object Dedup {
       .filter(col("contencao") >= threshold)
   }
 
-  /** 64-bit SimHash over the distinct token set: bit `i` is set when the
-    * sum of ±1 contributions (sign of bit `i` of each token's xxhash64) is
-    * positive. Pure nested higher-order expressions — no UDF.
-    */
-  /** Literal `array(1L<<0 … 1L<<63)` so lambda-variable bit indices can be
-    * tested without the Int-only shift builders.
-    */
-  private val Pow2: Column = array(Seq.tabulate(64)(j => lit(1L << j)): _*)
-
-  def simhash64(toks: Column): Column = {
-    val uniq = array_distinct(toks)
-    aggregate(sequence(lit(0), lit(63)), lit(0L), (acc, i) => {
-      val p = element_at(Pow2, (i + 1).cast("int"))
-      val bitSum = aggregate(uniq, lit(0),
-        (a, t) => a + when(xxhash64(t).bitwiseAND(p) =!= 0, 1).otherwise(-1))
-      acc + when(bitSum > 0, p).otherwise(lit(0L))
-    })
-  }
-
-  /** SimHash near-dup pairs: block on 16-bit chunks (any shared chunk →
-    * candidate; Hamming ≤ 3 over 4 chunks guarantees one equal chunk by
-    * pigeonhole), verify `bit_count(xor) <= maxHamming`.
-    *
-    * Skew bound: the blocking keyspace is only 4 bands × 65,536 chunk
-    * values, and chunk values are NOT uniform (bit sums are majority votes
-    * over token hashes — topically similar corpora pile into few values).
-    * Past a few million docs the hottest buckets hold thousands of rows and
-    * a plain within-bucket self-join goes quadratic in single tasks, so
-    * oversized buckets are routed through the exact pair-space tiling
-    * ([[tiledPairs]]) — identical output, per-tile work capped at
-    * ~maxBlock².
-    */
-  def simhashPairs(
-      docs: DataFrame, idCol: String, textCol: String, maxHamming: Int,
-      maxBlock: Int = AdaptiveBlock): DataFrame = {
-    // Simhash via explode + 64 signed-bit sums: one codegen'd xxhash64 per
-    // token row and codegen'd HashAggregate bit sums, instead of the
-    // interpreted 64×tokens higher-order fold in simhash64. The token
-    // explode and the bit sums run over DISTINCT texts only (see
-    // [[distinctTexts]]); members re-attach by join. Persisted: the
-    // block counts and both tile sides re-derive the banded explode from
-    // this compact per-doc signature (cheaper to cache than the 4x-banded
-    // rows — tiledPairs runs with cache=false).
-    val (base, texts) = distinctTexts(docs, idCol, textCol)
-    val tokRows = texts
-      .select(col("__tid"),
-        explode(array_distinct(TextAnalysis.tokens(col("__sim_txt"))))
-          .as("__tok"))
-      .withColumn("__th", xxhash64(col("__tok")))
-    val bitSums = (0 until 64).map { i =>
-      sum(when(col("__th").bitwiseAND(1L << i) =!= 0, 1).otherwise(-1)).as(s"__b$i")
-    }
-    val sigs = tokRows.groupBy("__tid")
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col("__tid"),
-        (0 until 64).map(i =>
-          when(col(s"__b$i") > 0, lit(1L << i)).otherwise(0L))
-          .reduce(_ + _).as("__sim"))
-    val sh = memberSignatures(base, texts, sigs)
-      .transform(CacheScope.persistTracked)
-    simhashTail(sh, Seq("__sim"),
-      (0 until 4).map { j =>
-        lit(j.toLong * 65536L) +
-          shiftright(col("__sim"), j * 16).bitwiseAND(0xFFFFL)
-      },
-      bit_count(col("__sim_a").bitwiseXOR(col("__sim_b"))),
-      maxHamming, maxBlock)
-  }
-
   /** Shared candidate tail of the simhash family: exact-signature
     * collapse → banded representative pairs → group expansion.
     *
@@ -896,12 +718,13 @@ object Dedup {
     base.join(texts, Seq("__sim_txt")).drop("__sim_txt")
       .join(sigs, Seq("__tid")).drop("__tid")
 
-  /** The portable signature stage of [[simhashPairsPortable]]: one row
-    * per member — (__id, __v0..__v3), the four 16-bit chunks that are
-    * both the banding keys and the Hamming-verify operands. Signatures
-    * are computed once per distinct text and re-attached to every
+  /** The signature stage of [[simhashPairs]]: one row per member —
+    * (__id, __v0..__v3), the four 16-bit chunks that are both the banding
+    * keys and the Hamming-verify operands. The token explode and the
+    * signed bit sums run once per distinct text (one codegen'd md5 per
+    * token row, codegen'd HashAggregate sums) and are re-attached to every
     * member. Not persisted here; the caller pins the compact result. */
-  private def simhashSignaturesPortable(
+  private def simhashSignatures(
       docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val (base, texts) = distinctTexts(docs, idCol, textCol)
     val m = md5(col("__tok").cast("binary"))
@@ -923,21 +746,33 @@ object Dedup {
     memberSignatures(base, texts, sigs)
   }
 
-  /** [[simhashPairs]] with portable hashing: the 64-bit token hash is the
-    * first 16 hex chars of md5(token), handled as 4 × 16-bit chunks — the
-    * chunks are exactly the blocking key, every value stays small and
-    * positive, and the whole pipeline (hash → signed bit sums → chunk
-    * blocking → Hamming verify) is reproducible by the DuckDB oracle.
+  /** SimHash near-dup pairs with portable hashing: each token's 64-bit
+    * hash is the first 16 hex chars of md5(token), handled as 4 × 16-bit
+    * chunks, and the signature's chunk `j` holds the majority vote of the
+    * tokens' chunk-`j` bits. Candidates block on the chunks (any shared
+    * chunk → candidate; Hamming ≤ 3 over 4 chunks guarantees one equal
+    * chunk by pigeonhole) and verify `bit_count(xor) <= maxHamming`. Every
+    * value stays small and positive, so the whole pipeline (hash → signed
+    * bit sums → chunk blocking → Hamming verify) is reproducible by the
+    * DuckDB oracle.
+    *
+    * Skew bound: the blocking keyspace is only 4 bands × 65,536 chunk
+    * values, and chunk values are NOT uniform (bit sums are majority votes
+    * over token hashes — topically similar corpora pile into few values).
+    * Past a few million docs the hottest buckets hold thousands of rows and
+    * a plain within-bucket self-join goes quadratic in single tasks, so
+    * oversized buckets are routed through the exact pair-space tiling
+    * ([[tiledPairs]]) — identical output, per-tile work capped at
+    * ~maxBlock².
     */
-  def simhashPairsPortable(
+  def simhashPairs(
       docs: DataFrame, idCol: String, textCol: String, maxHamming: Int,
       maxBlock: Int = AdaptiveBlock): DataFrame = {
-    val sh = simhashSignaturesPortable(docs, idCol, textCol)
+    val sh = simhashSignatures(docs, idCol, textCol)
       // counts + both tile sides re-derive the banded explode from this
       // compact signature (tiledPairs runs with cache=false)
       .transform(CacheScope.persistTracked)
-    // Band j's chunk value, offset into a per-band-disjoint block keyspace;
-    // oversized buckets route through the exact tiling (see simhashPairs).
+    // Band j's chunk value, offset into a per-band-disjoint block keyspace
     simhashTail(sh, (0 until 4).map(j => s"__v$j"),
       (0 until 4).map(j => lit(j.toLong * 65536L) + col(s"__v$j")),
       (0 until 4).map(j =>
@@ -1334,6 +1169,24 @@ object Dedup {
         jaccardSorted(col("__sh_a"), col("__sh_b")).as("jaccard"))
   }
 
+  /** The 4×14-bit pigeonhole band fan-out shared by [[hammingNearDups]],
+    * [[videoNearDups]] and the image-hash index/gate: (id, hash, carry…)
+    * → (__id, __h, carry…, band, bhash), four rows per input, all static
+    * shifts (scan-level).
+    */
+  private def banded56(
+      hashed: DataFrame, idCol: String, hashCol: String,
+      carry: String*): DataFrame = {
+    val kept = col("__id") +: col("__h") +: carry.map(col)
+    hashed.select(col(idCol).as("__id") +: col(hashCol).as("__h") +: carry.map(col): _*)
+      .select(kept :+
+        explode(array((0 until 4).map(b =>
+          struct(lit(b).as("band"),
+            pmod(shiftright(col("__h"), b * 14), lit(16384)).as("bhash"))): _*))
+          .as("__bb"): _*)
+      .select(kept :+ col("__bb.band").as("band") :+ col("__bb.bhash").as("bhash"): _*)
+  }
+
   /** Hamming near-dup pairs over a 56-bit perceptual hash column (the
     * dedup step behind [[Multimodal.dHash56]]-style image fingerprints):
     * pairs whose hashes differ in ≤ `maxDist` bits, found WITHOUT an
@@ -1345,27 +1198,12 @@ object Dedup {
     * per candidate only. Same scale shape as the MinHash/SimHash bands:
     * bucket joins, no cartesian; near-uniform corpora (billions of
     * blank images → one hot bucket) hit the SimHash hot-bucket problem —
-    * route those through [[tiledPairs]] exactly as [[simhashNearDups]]
+    * route those through [[tiledPairs]] exactly as [[simhashPairs]]
     * does if the corpus skews that way; AQE's skew-join split covers
     * moderate cases.
     *
     * Output: (id_a < id_b, dist) — exact bit distance, deterministic.
     */
-  /** The 4×14-bit pigeonhole band fan-out shared by [[hammingNearDups]]
-    * and the image-hash index/gate: (id, hash) → (id, hash, band,
-    * bhash), four rows per input, all static shifts (scan-level).
-    */
-  private def banded56(
-      hashed: DataFrame, idCol: String, hashCol: String): DataFrame =
-    hashed.select(col(idCol).as("__id"), col(hashCol).as("__h"))
-      .select(col("__id"), col("__h"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("band"),
-            pmod(shiftright(col("__h"), b * 14), lit(16384)).as("bhash"))): _*))
-          .as("__bb"))
-      .select(col("__id"), col("__h"),
-        col("__bb.band").as("band"), col("__bb.bhash").as("bhash"))
-
   def hammingNearDups(
       hashed: DataFrame, idCol: String, hashCol: String,
       maxDist: Int): DataFrame = {
@@ -1402,18 +1240,10 @@ object Dedup {
       maxDist: Int, minFrames: Int): DataFrame = {
     require(maxDist >= 0 && maxDist < 56, s"need 0 <= maxDist < 56, got $maxDist")
     require(minFrames >= 1, s"need minFrames >= 1, got $minFrames")
-    val keyed = frames.select(col(idCol).as("__v"), col(frameCol).as("__f"),
-      col(hashCol).as("__h"))
-    val banded = keyed.select(col("__v"), col("__f"), col("__h"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("band"),
-            pmod(shiftright(col("__h"), b * 14), lit(16384)).as("bhash"))): _*))
-          .as("__bb"))
-      .select(col("__v"), col("__f"), col("__h"),
-        col("__bb.band").as("band"), col("__bb.bhash").as("bhash"))
-    val cand = banded.select(col("__v").as("id_a"), col("__f").as("__f_a"),
+    val banded = banded56(frames, idCol, hashCol, frameCol)
+    val cand = banded.select(col("__id").as("id_a"), col(frameCol).as("__f_a"),
         col("__h").as("__h_a"), col("band"), col("bhash"))
-      .join(banded.select(col("__v").as("id_b"), col("__f").as("__f_b"),
+      .join(banded.select(col("__id").as("id_b"), col(frameCol).as("__f_b"),
         col("__h").as("__h_b"), col("band"), col("bhash")),
         Seq("band", "bhash"))
       .filter(col("id_a") < col("id_b"))

@@ -65,8 +65,8 @@ object Basket {
     * — Σ_b k² with bounded basket size, never catalog²; `minPairs`
     * cuts noise pairs before any metric math), counts exact BIGINTs
     * from combinable aggregations, the cosine a fixed √/÷ chain of
-    * correctly-rounded ops. The per-item top-k runs through the
-    * bounded-heap `graft_top_k_by` aggregate (map-side partials carry
+    * correctly-rounded ops. The per-item top-k runs through
+    * [[TopK.groupTopK]]'s bounded-heap aggregate (map-side partials carry
     * ≤k rows per item per partition — no window sort over the pair
     * table), ties (score DESC, item ASC) — engine-deterministic.
     *

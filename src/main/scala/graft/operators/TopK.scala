@@ -9,32 +9,31 @@ import org.apache.spark.sql.functions._
   * partitions per file, latest periods per group) that pandas gets via
   * `sort_values().groupby().head(k)` — a full sort of the whole frame.
   *
-  * Spark-first: the [[graft.functions.TopKBy]] bounded-heap aggregate
-  * (ObjectHashAggregate, partial-merge) reduces each group to k pairs on
+  * Spark-first: the [[graft.functions.TopKRows]] bounded-heap aggregate
+  * (ObjectHashAggregate, partial-merge) reduces each group to k rows on
   * the map side, so the exchange carries ≤ k rows per group per input
   * partition instead of the whole table; the window-`row_number` form this
   * replaces shuffles and sorts EVERY row. The aggregated array is then
-  * exploded back to one ranked row per survivor — scalar columns only.
+  * exploded back to one ranked row per survivor.
   */
 object TopK {
 
   /** Top `k` rows per `groupCol` by (`scoreCol` DESC, `idCol` ASC),
-    * emitted as (group, posicao 1..k, id, score). `scoreCol` is cast to
-    * double and `idCol` to long for the bounded primitive heap.
+    * emitted as (group, posicao 1..k, id, score): [[groupTopKRows]] over
+    * the (group, score, id) projection. `scoreCol` is cast to double and
+    * `idCol` to long; rows with a null id or a null or NaN score are
+    * dropped first (NaN would rank above every real score).
     */
   def groupTopK(
       df: DataFrame, groupCol: String, scoreCol: String, idCol: String,
       k: Int): DataFrame = {
-    df.groupBy(col(groupCol))
-      .agg(call_function("graft_top_k_by",
-        col(scoreCol).cast("double"), col(idCol).cast("long"), lit(k))
-        .as("__top"))
-      .select(col(groupCol), posexplode(col("__top")).as(Seq("__pos", "__t")))
-      .select(
-        col(groupCol),
-        (col("__pos") + 1).cast("int").as("posicao"),
-        col("__t.id").as(idCol),
-        col("__t.score").as(scoreCol))
+    val ranked = df
+      .select(col(groupCol), col(scoreCol).cast("double").as(scoreCol),
+        col(idCol).cast("long").as(idCol))
+      .filter(col(idCol).isNotNull && col(scoreCol).isNotNull &&
+        !isnan(col(scoreCol)))
+    groupTopKRows(ranked, Seq(groupCol), Seq((scoreCol, false), (idCol, true)), k)
+      .select(col(groupCol), col("posicao"), col(idCol), col(scoreCol))
   }
 
   /** Generalized per-group top-k: the first `k` FULL ROWS of each group

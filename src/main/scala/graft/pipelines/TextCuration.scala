@@ -13,7 +13,7 @@ import graft.llm.{Curation, Dedup, Privacy, Spread, TextAnalysis}
   * Stages, in the order production pipelines run them:
   *   1. exact dedup (keep the minimum id per content hash — q25's shape)
   *   2. OPTIONAL MinHash-LSH fuzzy dedup (`fuzzyThreshold`): verified
-  *      near-dup pairs from [[Dedup.minhashNearDupsPortable]] (q26's
+  *      near-dup pairs from [[Dedup.minhashNearDups]] (q26's
   *      operator), greedy keep-lowest-id — any document that is the
   *      GREATER id of a pair is dropped (the RefinedWeb-style per-pair
   *      discipline; cluster-level survivorship is q52's CC operator)
@@ -57,7 +57,7 @@ object TextCuration {
       // near-dup pairs are already exact-Jaccard-verified ≥ t; documents
       // shorter than the shingle width have no shingles, generate no
       // pairs, and always survive this stage
-      val pairs = Dedup.minhashNearDupsPortable(
+      val pairs = Dedup.minhashNearDups(
         exact.select(col(idCol), col(textCol)), idCol, textCol, t)
       exact.join(pairs.select(col("id_b").as(idCol)).distinct(),
         Seq(idCol), "left_anti")

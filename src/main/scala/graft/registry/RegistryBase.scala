@@ -20,6 +20,17 @@ private[graft] trait RegistryBase {
   private[graft] def ordered(df: DataFrame): DataFrame =
     df.orderBy(df.columns.map(c => col(c).asc_nulls_first): _*)
 
+  /** The planted near-duplicate corpus of the MinHash/SimHash queries:
+    * `docs` plus, for every doc with `doc_id % 5 == 0`, a copy at
+    * `doc_id + 1000000` with its first token dropped. `docs` must carry
+    * `doc_id` and `text`; other columns are copied unchanged.
+    */
+  private[graft] def withPlantedVariants(docs: DataFrame): DataFrame =
+    docs.unionByName(docs.filter(col("doc_id") % 5 === 0)
+      .withColumn("doc_id", col("doc_id") + 1000000)
+      .withColumn("text",
+        concat_ws(" ", slice(llm.TextAnalysis.tokens(col("text")), 2, 100000))))
+
   /** Scratch dir for the index/layout queries (q130/q136/q178) that must
     * WRITE before they read. Deleted recursively on JVM exit — the read
     * is lazy (materialized by the caller after the query function

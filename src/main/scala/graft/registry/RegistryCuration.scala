@@ -262,12 +262,8 @@ private[graft] trait RegistryCuration extends RegistryBase {
     // oracle replays the entire six-operator chain bit-for-bit.
     "q105_curation_fuzzy" -> { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text", "lang")
-      val variants = docs.filter(col("doc_id") % 5 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000)
-        .withColumn("text",
-          concat_ws(" ", slice(llm.TextAnalysis.tokens(col("text")), 2, 100000)))
       ordered(pipelines.TextCuration.run(
-        docs.unionByName(variants), "doc_id", "text", "lang",
+        withPlantedVariants(docs), "doc_id", "text", "lang",
         minQuality = 0.19, spanWindow = 5, spanMaxDocs = 2,
         targetFraction = 0.5, fuzzyThreshold = Some(0.5)))
     },

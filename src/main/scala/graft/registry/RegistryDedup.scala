@@ -25,31 +25,20 @@ private[graft] trait RegistryDedup extends RegistryBase {
     },
 
     // §2 row 26 — MinHash-LSH near-dup: banded buckets, pairs only within
-    // buckets, exact-Jaccard verify. The graded query uses the portable md5
-    // hash family so the FULL pipeline is DuckDB-oracle-checked; the
-    // xxhash64 production path stays covered by the scalatest recall +
-    // equivalence specs.
+    // buckets, exact-Jaccard verify. Every hash is the portable md5 family,
+    // so the FULL pipeline is DuckDB-oracle-checked.
     "q26_minhash_lsh" -> { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val variants = docs.filter(col("doc_id") % 5 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000)
-        .withColumn("text",
-          concat_ws(" ", slice(llm.TextAnalysis.tokens(col("text")), 2, 100000)))
-      ordered(llm.Dedup.minhashNearDupsPortable(
-        docs.unionByName(variants), "doc_id", "text", threshold = 0.5))
+      ordered(llm.Dedup.minhashNearDups(
+        withPlantedVariants(docs), "doc_id", "text", threshold = 0.5))
     },
 
     // §2 row 27 — SimHash near-dup: 16-bit chunk blocking + Hamming verify.
-    // Portable md5 token hash → DuckDB-oracle-checked end-to-end; xxhash64
-    // path covered by scalatest.
+    // Portable md5 token hash → DuckDB-oracle-checked end-to-end.
     "q27_simhash" -> { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val variants = docs.filter(col("doc_id") % 5 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000)
-        .withColumn("text",
-          concat_ws(" ", slice(llm.TextAnalysis.tokens(col("text")), 2, 100000)))
-      ordered(llm.Dedup.simhashPairsPortable(
-        docs.unionByName(variants), "doc_id", "text", maxHamming = 3))
+      ordered(llm.Dedup.simhashPairs(
+        withPlantedVariants(docs), "doc_id", "text", maxHamming = 3))
     },
 
     // §2 row 28 — blocked exact n-gram Jaccard (deterministic blocks →
@@ -137,12 +126,8 @@ private[graft] trait RegistryDedup extends RegistryBase {
     // (recursive CTE) and the argmax end-to-end.
     "q111_cluster_best" -> { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val variants = docs.filter(col("doc_id") % 5 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000)
-        .withColumn("text",
-          concat_ws(" ", slice(llm.TextAnalysis.tokens(col("text")), 2, 100000)))
-      val corpus = llm.CacheScope.persistTracked(docs.unionByName(variants))
-      val pairs = llm.Dedup.minhashNearDupsPortable(
+      val corpus = llm.CacheScope.persistTracked(withPlantedVariants(docs))
+      val pairs = llm.Dedup.minhashNearDups(
         corpus, "doc_id", "text", threshold = 0.5)
       val scored = corpus.select(col("doc_id"),
         llm.TextAnalysis.qualityScore(col("text")).as("qualidade"))
@@ -177,12 +162,8 @@ private[graft] trait RegistryDedup extends RegistryBase {
     // 100 TB audit shortcut: re-runs touch no corpus text).
     "q127_minhash_estimate" -> { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val variants = docs.filter(col("doc_id") % 5 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000)
-        .withColumn("text",
-          concat_ws(" ", slice(llm.TextAnalysis.tokens(col("text")), 2, 100000)))
       ordered(llm.Dedup.estimatedJaccardPairs(
-        docs.unionByName(variants), "doc_id", "text", threshold = 0.5))
+        withPlantedVariants(docs), "doc_id", "text", threshold = 0.5))
     },
 
     // q127's audit replayed from a PERSISTED SignatureIndex: the closure
@@ -194,13 +175,9 @@ private[graft] trait RegistryDedup extends RegistryBase {
     // q127 — the parquet roundtrip is an identity over the signatures.
     "q130_minhash_index_audit" -> { (s, dir) =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      val variants = docs.filter(col("doc_id") % 5 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000)
-        .withColumn("text",
-          concat_ws(" ", slice(llm.TextAnalysis.tokens(col("text")), 2, 100000)))
       val idxDir = scratchDir("graft-sigindex")
       llm.Dedup.writeSignatureIndex(
-        docs.unionByName(variants), "doc_id", "text", idxDir)
+        withPlantedVariants(docs), "doc_id", "text", idxDir)
       llm.CacheScope.releaseAll()
       ordered(llm.Dedup.estimatedJaccardPairsIndexed(
         llm.Dedup.readSignatureIndex(s, idxDir), threshold = 0.5))

@@ -69,9 +69,9 @@ private[graft] trait RegistryWarehouse extends RegistryBase {
         s"${GraftSession.scratchRoot}/graft-jsonl/documents"))
     },
 
-    // Per-group top-k via the bounded-heap graft_top_k_by aggregate
+    // Per-group top-k via the bounded-heap TopKRows aggregate
     // (ObjectHashAggregate with partial merge: the shuffle carries <= k
-    // pairs per group per map partition, never the whole table like the
+    // rows per group per map partition, never the whole table like the
     // window row_number form): top-3 customers per nation by balance,
     // ties broken on the smaller custkey.
     "q74_group_topk" -> { (s, dir) =>

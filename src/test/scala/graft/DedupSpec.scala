@@ -25,7 +25,7 @@ class DedupSpec extends SparkSpec {
     assert(math.abs(j - 2.0 / 4.0) < 1e-12)
   }
 
-  test("minhash-LSH recall >= 0.9 on planted near-duplicates") {
+  test("portable minhash-LSH recall >= 0.9 on planted near-duplicates") {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
     val variants = docs.filter(col("doc_id") % 5 === 0)
       .withColumn("doc_id", col("doc_id") + 1000000)
@@ -39,41 +39,6 @@ class DedupSpec extends SparkSpec {
     val found = planted.count(id => pairs.contains((id, id + 1000000)))
     val recall = found.toDouble / planted.size
     assert(recall >= 0.9, s"recall $recall over ${planted.size} planted pairs")
-  }
-
-  test("portable minhash-LSH recall >= 0.9 on planted near-duplicates") {
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val variants = docs.filter(col("doc_id") % 5 === 0)
-      .withColumn("doc_id", col("doc_id") + 1000000)
-      .withColumn("text",
-        concat_ws(" ", slice(TextAnalysis.tokens(col("text")), 2, 100000)))
-    val planted = docs.filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id")).as[Long].collect().toSet
-    val pairs = Dedup.minhashNearDupsPortable(
-        docs.unionByName(variants), "doc_id", "text", threshold = 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val found = planted.count(id => pairs.contains((id, id + 1000000)))
-    val recall = found.toDouble / planted.size
-    assert(recall >= 0.9, s"recall $recall over ${planted.size} planted pairs")
-  }
-
-  test("portable and xxhash minhash paths emit the same verified pair set") {
-    // Candidate generation differs by hash family, but both paths verify
-    // with the same exact Jaccard >= 0.5, so any disagreement would mean a
-    // recall gap on fixed data — a determinism regression guard for the
-    // graded q26 path vs the production path.
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val variants = docs.filter(col("doc_id") % 5 === 0)
-      .withColumn("doc_id", col("doc_id") + 1000000)
-      .withColumn("text",
-        concat_ws(" ", slice(TextAnalysis.tokens(col("text")), 2, 100000)))
-    val all = docs.unionByName(variants)
-    val portable = Dedup.minhashNearDupsPortable(all, "doc_id", "text", 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val prod = Dedup.minhashNearDups(all, "doc_id", "text", 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(portable == prod,
-      s"portable-only: ${portable -- prod}; xxhash-only: ${prod -- portable}")
   }
 
   test("portable minhash signature matches an independent JVM md5 replay") {
@@ -104,7 +69,7 @@ class DedupSpec extends SparkSpec {
     val expectJ = (sa & sb).size.toDouble / (sa | sb).size
     val shareBand = (0 until 5).exists(b =>
       sig(sa).slice(b * 4, b * 4 + 4) == sig(sb).slice(b * 4, b * 4 + 4))
-    val out = Dedup.minhashNearDupsPortable(
+    val out = Dedup.minhashNearDups(
         Seq((1L, ta), (2L, tb)).toDF("doc_id", "text"),
         "doc_id", "text", threshold = 0.3)
       .as[(Long, Long, Double)].collect()
@@ -119,7 +84,7 @@ class DedupSpec extends SparkSpec {
       (2L, "spark scans parquet files fast and well"),
       (3L, "completely different words entirely here now"),
     ).toDF("doc_id", "text")
-    val pairs = Dedup.simhashPairsPortable(docs, "doc_id", "text", maxHamming = 3)
+    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
       .as[(Long, Long, Int)].collect()
     assert(pairs.exists { case (a, b, h) => a == 1L && b == 2L && h == 0 })
     assert(!pairs.exists { case (a, b, _) => b == 3L || a == 3L })
@@ -145,7 +110,7 @@ class DedupSpec extends SparkSpec {
     val (ta, tb) = ("alpha beta gamma delta", "alpha beta gamma zeta")
     val expected = chunks(ta).zip(chunks(tb))
       .map { case (x, y) => java.lang.Long.bitCount((x ^ y).toLong) }.sum
-    val out = Dedup.simhashPairsPortable(
+    val out = Dedup.simhashPairs(
         Seq((1L, ta), (2L, tb)).toDF("doc_id", "text"),
         "doc_id", "text", maxHamming = 64)
       .as[(Long, Long, Int)].collect()
@@ -154,43 +119,26 @@ class DedupSpec extends SparkSpec {
     else assert(out.isEmpty) // no shared chunk: blocked, by design
   }
 
-  test("simhash: identical docs collide at hamming 0; near-dups stay close") {
-    val docs = Seq(
-      (1L, "spark scans parquet files fast and well"),
-      (2L, "spark scans parquet files fast and well"),
-      (3L, "completely different words entirely here now"),
-    ).toDF("doc_id", "text")
-    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
-      .as[(Long, Long, Int)].collect()
-    assert(pairs.exists { case (a, b, h) => a == 1L && b == 2L && h == 0 })
-    assert(!pairs.exists { case (a, b, _) => b == 3L || a == 3L })
-  }
-
   test("simhash tiling on a planted hot bucket matches the unsalted join") {
     // 40 identical docs collapse into ONE bucket in all 4 bands (planted
     // saturation of the 16-bit chunk keyspace); cap 8 forces 5 salt groups
-    // per band. Both variants' tiled output must equal the huge-cap
-    // (effectively unsalted) run pair-for-pair.
+    // per band. The tiled output must equal the huge-cap (effectively
+    // unsalted) run pair-for-pair.
     val hot = (0 until 40).map(i => (i.toLong, "spark scans parquet files fast"))
     val cold = Seq(
       (900L, "totally different content entirely"),
       (901L, "another unrelated text corpus now"))
     val docs = (hot ++ cold).toDF("doc_id", "text")
-    def runPortable(cap: Int) = Dedup.simhashPairsPortable(
+    def run(cap: Int) = Dedup.simhashPairs(
         docs, "doc_id", "text", maxHamming = 3, maxBlock = cap)
       .as[(Long, Long, Int)].collect().sortBy(p => (p._1, p._2)).toSeq
-    def runXx(cap: Int) = Dedup.simhashPairs(
-        docs, "doc_id", "text", maxHamming = 3, maxBlock = cap)
-      .as[(Long, Long, Int)].collect().sortBy(p => (p._1, p._2)).toSeq
-    val tiledP = runPortable(8)
-    assert(tiledP == runPortable(1000000),
-      "portable tiled output must equal the unsalted join exactly")
-    assert(tiledP.count(p => p._1 < 40L && p._2 < 40L) == 40 * 39 / 2,
+    val tiled = run(8)
+    assert(tiled == run(1000000),
+      "tiled output must equal the unsalted join exactly")
+    assert(tiled.count(p => p._1 < 40L && p._2 < 40L) == 40 * 39 / 2,
       "every planted identical pair emitted exactly once at hamming 0")
-    assert(tiledP.map(p => (p._1, p._2)).distinct.length == tiledP.length,
+    assert(tiled.map(p => (p._1, p._2)).distinct.length == tiled.length,
       "tiling must not duplicate pairs")
-    assert(runXx(8) == runXx(1000000),
-      "xxhash tiled output must equal the unsalted join exactly")
   }
 
   test("adaptive block sizing: uniform data untiled, planted skew tiled, output identical") {
@@ -314,16 +262,6 @@ class DedupSpec extends SparkSpec {
     assert(viaDisk == kept)
   }
 
-  test("simhash64 is deterministic and order-insensitive over token sets") {
-    val df = Seq(
-      (1L, "one two three four"),
-      (2L, "four three two one"),
-    ).toDF("doc_id", "text")
-    val out = df.select(Dedup.simhash64(TextAnalysis.tokens(col("text"))))
-      .as[Long].collect()
-    assert(out(0) == out(1))
-  }
-
   test("containment catches engulfed prefixes that Jaccard-LSH misses") {
     // prefix variants: ~30% of each source doc → Jaccard ≈ 0.3 against
     // the source (below any sane near-dup threshold), containment 1.0
@@ -356,7 +294,7 @@ class DedupSpec extends SparkSpec {
     assert(scores.forall(_ >= 0.999))
 
     // the Jaccard path at the same strictness finds NONE of them
-    val byJaccard = Dedup.minhashNearDupsPortable(
+    val byJaccard = Dedup.minhashNearDups(
         corpus, "doc_id", "text", threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect()
     val jaccardCaught = byJaccard.collect {
@@ -465,7 +403,7 @@ class DedupSpec extends SparkSpec {
     val corpus = docs.unionByName(docs.filter(col("doc_id") % 5 === 0)
       .select((col("doc_id") + 1000000).as("doc_id"),
         concat_ws(" ", slice(toks, 2, 100000)).as("text")))
-    val exact = Dedup.minhashNearDupsPortable(corpus, "doc_id", "text", 0.7)
+    val exact = Dedup.minhashNearDups(corpus, "doc_id", "text", 0.7)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     graft.llm.CacheScope.releaseAll()
     val est = Dedup.estimatedJaccardPairs(corpus, "doc_id", "text", 0.5)

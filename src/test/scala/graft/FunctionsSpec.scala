@@ -322,9 +322,14 @@ class FunctionsSpec extends SparkSpec {
 
   test("graft_top_k_by survives partial/merge across many partitions") {
     // 1 group, 1000 rows over 8 partitions: merge path must keep the
-    // global top-3, not a per-partition artifact
+    // global top-3, not a per-partition artifact. A null-score and a
+    // NaN-score row are dropped, not ranked (NaN sorts above every real
+    // score).
     val df = spark.range(1000).repartition(8)
       .select(lit(1L).as("g"), (col("id") % 10).cast("double").as("s"), col("id"))
+      .unionByName(spark.range(2000, 2002)
+        .select(lit(1L).as("g"),
+          when(col("id") === 2000L, lit(Double.NaN)).as("s"), col("id")))
     val got = graft.operators.TopK.groupTopK(df, "g", "s", "id", k = 3)
       .as[(Long, Int, Long, Double)].collect().toSet
     // score 9.0 at ids 9, 19, 29 — the three smallest ids at the max score

@@ -99,7 +99,8 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("LSH dedup paths never contain a cartesian product") {
-    for (q <- Seq("q26_minhash_lsh", "q27_simhash", "q30_ann_lsh")) {
+    for (q <- Seq("q26_minhash_lsh", "q27_simhash", "q30_ann_lsh",
+        "q117_ingest_gate", "q130_minhash_index_audit")) {
       val plan = planString(SparkEntry.queries(q)(spark, sfDir))
       assert(!plan.contains("CartesianProduct"), s"$q degenerated to cartesian:\n$plan")
       assert(!plan.contains("BroadcastNestedLoopJoin"),
