@@ -101,6 +101,27 @@ object SpotBench {
       llm.Ivf.indexHierarchical(emb, "vec_id", "embedding",
           kCoarse = 64, kFine = 64)
         .assigned.groupBy("__cell").count()
+    },
+    // vector_dot_decimal alone: every embedding against 32 query vectors,
+    // scored with Similarity.cosine (three DECIMAL(38,18) folds per pair)
+    "dot_decimal" -> { (s, dir) =>
+      import org.apache.spark.sql.functions._
+      val emb = graft.sources.Tables.embeddings(s, dir)
+      val queries = emb.orderBy("vec_id").limit(32)
+        .select(col("vec_id").as("query_id"), col("embedding").as("__q"))
+      emb.crossJoin(broadcast(queries)).select(col("vec_id"), col("query_id"),
+        llm.Similarity.cosine(col("embedding"), col("__q")).as("cos"))
+    },
+    // double→DECIMAL casts alone: q05's sum(cast(x AS DECIMAL(28,2))) per
+    // chunk, plus a DECIMAL(38,12) sum, over lineitem; A/B the cast rule
+    // with spark.sql.optimizer.excludedRules=graft.plans.ExactDecimalCast
+    "cast_decimal" -> { (s, dir) =>
+      import org.apache.spark.sql.functions._
+      graft.sources.Tables.lineitem(s, dir)
+        .groupBy((col("l_orderkey") % 8).cast("int").as("chunk"))
+        .agg(
+          sum(col("l_extendedprice").cast("decimal(28,2)")).as("price_28_2"),
+          sum(col("l_extendedprice").cast("decimal(38,12)")).as("price_38_12"))
     })
 
   private def query(name: String): (SparkSession, String) => DataFrame =

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * [[graft.GraftSession]] does). It injects the native functions
   * (`roman_to_int`, `graft_*`, …, resolvable from the DataFrame API and
   * SQL text alike), the as-of planner strategy
-  * ([[graft.plans.AsOfJoinStrategy]]) and the three optimizer rules.
+  * ([[graft.plans.AsOfJoinStrategy]]) and the four optimizer rules.
   * Operators that call a native function or plan an as-of join need a
   * session built with it; there is no runtime registration fallback.
   */
@@ -20,6 +20,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
     ext.injectOptimizerRule(_ => graft.plans.WindowAggRewrite)
     ext.injectOptimizerRule(_ => graft.plans.GeneratorSiblingPushdown)
+    ext.injectOptimizerRule(_ => graft.plans.ExactDecimalCast)
   }
 }
 

@@ -12,11 +12,14 @@ import org.apache.spark.sql.types._
   *
   * Bit-identical to the expression form
   * `aggregate(zip_with(a, b, (x,y) => (x*y).cast(decimal(38,18))), 0, +)`:
-  * each product is rounded through Spark's own [[Decimal]] (the same
-  * shortest-double-repr + HALF_UP path `Cast` uses), and scale-18 additions
-  * are exact — so swapping it in cannot change any oracle-checked result.
-  * What it removes is the per-pair 64-element Decimal array materialization
-  * and the per-step expression interpretation.
+  * each product is rounded exactly as `Cast` rounds it (HALF_UP of the
+  * value of `Double.toString`), and each step of the fold rounds to scale
+  * 17 as Spark's decimal addition does — so swapping it in cannot change
+  * any oracle-checked result. What it removes is the per-pair 64-element
+  * Decimal array materialization, the per-step expression interpretation
+  * and, for most products, the `Double.toString` parse itself: the sum
+  * runs in one scale-17 long, and a product's rounding is decided from
+  * its round-trip interval (see [[DecimalOps]] and [[VectorOps.dotDecimal]]).
   *
   * Mismatched lengths or null elements yield null (zip_with semantics).
   * Non-finite products and decimal overflow also yield null — deliberately
@@ -109,10 +112,42 @@ object VectorOps {
     java.lang.Double.valueOf(sum)
   }
 
+  /** Σ aᵢ·bᵢ as the `DECIMAL(38,18)` fold of [[VectorDotDecimal]], in one
+    * long: the fold's running sum has scale 17 (see [[dotDecimalExact]]),
+    * so each step is `A' = rhu17(A + rhu18(S))` for S the value of
+    * `Double.toString(p)`, a monotone function of S. [[DecimalOps.foldScale17]]
+    * evaluates it at both ends of the product's round-trip interval and
+    * keeps it when they agree; otherwise it reads `Double.toString(p)`'s
+    * digits into a long. Bit-identical to [[dotDecimalExact]], which it
+    * restarts on only when |sum| passes `Long.MaxValue / 10` at scale 17
+    * (≈ 9.2) or a product does not fit a long at scale 18.
+    */
   def dotDecimal(
       a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Decimal = {
     val n = a.numElements()
     if (b.numElements() != n) return null // zip_with pads → null product → null sum
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      val p = x * y
+      if (java.lang.Double.isNaN(p) || java.lang.Double.isInfinite(p)) return null
+      acc = DecimalOps.foldScale17(acc, p)
+      if (acc == DecimalOps.Undecided) return dotDecimalExact(a, b, aFloat, bFloat)
+      i += 1
+    }
+    Decimal(acc * 10, 38, 18)
+  }
+
+  /** The reference fold, one `BigDecimal` step per product: what
+    * [[dotDecimal]] restarts on when its long overflows.
+    */
+  private[graft] def dotDecimalExact(
+      a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Decimal = {
+    val n = a.numElements()
+    if (b.numElements() != n) return null
     var sum = java.math.BigDecimal.ZERO
     var i = 0
     while (i < n) {

@@ -11,7 +11,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType}
 
-import graft.functions.NearestCellOps
+import graft.functions.{DecimalOps, NearestCellOps}
 
 /** Deterministic, partition-INDEPENDENT Lloyd k-means — the cell-routing
   * fit behind [[Ivf]].
@@ -194,6 +194,8 @@ object Kmeans {
   /** The engine's own `cast(x as decimal(38,12))` of one double — the
     * [[Cast]] expression the distributed reduce evaluates per element,
     * under the session's evaluation mode. Null where the cast is null.
+    * [[DecimalOps.castUnscaled]] decides almost every coordinate; the
+    * rest take the `Cast` itself.
     */
   private final class DecimalCast {
     private val in = new SpecificInternalRow(Seq(DoubleType))
@@ -201,6 +203,8 @@ object Kmeans {
       Cast(BoundReference(0, DoubleType, nullable = false), DecimalType(38, 12))
 
     def apply(x: Double): JBigDecimal = {
+      val u = DecimalOps.castUnscaled(x, 38, 12)
+      if (u != DecimalOps.Undecided) return JBigDecimal.valueOf(u, 12)
       in.setDouble(0, x)
       cast.eval(in) match {
         case d: Decimal => d.toJavaBigDecimal

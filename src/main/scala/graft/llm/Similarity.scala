@@ -22,37 +22,26 @@ object Similarity {
     * Backed by the native [[graft.functions.VectorDotDecimal]] expression
     * (one static call per pair, no intermediate Decimal array), resolved
     * by name in the analyzing session, which needs
-    * [[graft.functions.GraftExtensions]]. Bit-identical to
-    * [[dotDecimalExpr]] (see `FunctionsSpec`).
+    * [[graft.functions.GraftExtensions]]. Bit-identical to the
+    * `aggregate(zip_with(…cast(decimal(38,18))…))` fold (FunctionsSpec
+    * compares the DECIMAL values). The kernel keeps the sum in one long
+    * and decides each product's `Cast` rounding from the double's
+    * round-trip interval, with no `Double.toString` unless the interval
+    * straddles a rounding boundary ([[graft.functions.DecimalOps]]).
     */
   def dotDecimal(a: Column, b: Column): Column =
     call_function("vector_dot_decimal", a, b)
-
-  /** Pure-expression form of [[dotDecimal]] — same semantics, kept as the
-    * extension-free form and equivalence baseline.
-    */
-  def dotDecimalExpr(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) =>
-        (x.cast("double") * y.cast("double")).cast("decimal(38,18)")),
-      lit(0).cast("decimal(38,18)"),
-      (acc, v) => (acc + v).cast("decimal(38,18)"))
 
   /** Σ aᵢ·bᵢ in plain double — fast screen, NOT deterministic across
     * summation orders; use only as a pre-filter with a safety margin before
     * [[dotDecimal]] rescoring (64-term FP error ≤ ~1e-13). Backed by the
     * native codegen'd [[graft.functions.VectorDotDouble]]: the higher-order
     * fold form is CodegenFallback (interpreted), which is catastrophic when
-    * the screen runs per candidate pair inside a join condition.
+    * the screen runs per candidate pair inside a join condition
+    * (FunctionsSpec holds the two forms equal).
     */
   def dotDouble(a: Column, b: Column): Column =
     call_function("vector_dot_double", a, b)
-
-  /** Pure-expression form of [[dotDouble]] — equivalence baseline. */
-  def dotDoubleExpr(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   /** ‖v‖ as a double (exact decimal sum of squares, then sqrt). */
   def l2Norm(v: Column): Column = sqrt(dotDecimal(v, v).cast("double"))

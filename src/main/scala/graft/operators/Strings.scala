@@ -18,43 +18,14 @@ object Strings {
   /** Chars from position `n` (0-based, like `cod[n:]`). */
   def sliceFrom(c: Column, n: Int): Column = substring(c, n + 1, Int.MaxValue)
 
-  /** Canonical Roman numeral regex (the strict form `roman.fromRoman`
-    * accepts; invalid forms like `IIII` are passed through unchanged).
-    */
-  private val RomanRe = "^M{0,4}(CM|CD|D?C{0,3})(XC|XL|L?X{0,3})(IX|IV|V?I{0,3})$"
-
-  private def charValue(ch: Column): Column =
-    when(ch === "I", 1).when(ch === "V", 5).when(ch === "X", 10)
-      .when(ch === "L", 50).when(ch === "C", 100).when(ch === "D", 500)
-      .when(ch === "M", 1000).otherwise(0)
-
   /** Roman numeral → its integer value as a string; non-Roman input passes
     * through unchanged; null stays null. Backed by the native codegen'd
     * [[graft.functions.RomanToInt]] expression (single static call per row,
     * no per-row array materialization); the analyzing session needs
-    * [[graft.functions.GraftExtensions]].
+    * [[graft.functions.GraftExtensions]]. FunctionsSpec holds it to the
+    * higher-order-function form of the same rule.
     */
   def romanToInt(c: Column): Column = call_function("roman_to_int", c)
-
-  /** Pure-expression form of [[romanToInt]] (subtractive rule over the char
-    * array via higher-order functions) — same semantics, kept as the
-    * reference FunctionsSpec checks the native expression against and as
-    * documentation of the algorithm.
-    */
-  def romanToIntExpr(c: Column): Column = {
-    val chars = split(c, "")
-    val n = size(chars)
-    val vals = transform(chars, charValue _)
-    val signed = transform(sequence(lit(1), n), i => {
-      val v = element_at(vals, i)
-      val next = when(i < n, element_at(vals, i + 1)).otherwise(lit(0))
-      when(v < next, negate(v)).otherwise(v)
-    })
-    val total = aggregate(signed, lit(0), (acc, x) => acc + x)
-    when(c.isNull, lit(null).cast("string"))
-      .when(length(c) > 0 && c.rlike(RomanRe), total.cast("string"))
-      .otherwise(c)
-  }
 
   /** Inverse helper for tests/data construction: 1..39 → Roman numeral. */
   def intToRoman(c: Column): Column = {

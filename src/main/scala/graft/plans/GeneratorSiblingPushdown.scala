@@ -55,6 +55,7 @@ object GeneratorSiblingPushdown extends Rule[LogicalPlan] {
   private def cheap(e: Expression): Boolean = e match {
     case _: Attribute | _: Literal => true
     case c: Cast => cheap(c.child)
+    case c: graft.functions.DoubleToDecimal => cheap(c.child)
     case g: GetStructField => cheap(g.child)
     case g: GetArrayStructFields => cheap(g.child)
     case g: GetArrayItem => g.children.forall(cheap)

@@ -14,7 +14,7 @@ class FunctionsSpec extends SparkSpec {
   test("native roman_to_int matches the pure-expression form on all cases") {
     val df = cases.toDF("r")
     val native = df.select(Strings.romanToInt(col("r"))).as[String].collect().toSeq
-    val pure = df.select(Strings.romanToIntExpr(col("r"))).as[String].collect().toSeq
+    val pure = df.select(ReferenceForms.romanToIntExpr(col("r"))).as[String].collect().toSeq
     assert(native == pure)
     assert(native == Seq("14", "9", "1994", "40", "IIII", "VX", "ABC", "", "1", "4000"))
   }
@@ -31,12 +31,17 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("native vector_dot_decimal is bit-identical to the expression form") {
+    // the reference runs Spark's own Cast: ExactDecimalCast would put the
+    // kernel's interval test inside the expression form as well
+    withRuleExcluded(graft.plans.ExactDecimalCast) {
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
     val pairs = emb.select(col("vec_id"), col("embedding").as("a"))
       .crossJoin(emb.limit(7).select(col("embedding").as("b")))
     val out = pairs.select(
-      graft.llm.Similarity.dotDecimal(col("a"), col("b")).cast("double").as("nat"),
-      graft.llm.Similarity.dotDecimalExpr(col("a"), col("b")).cast("double").as("hof"))
+      graft.llm.Similarity.dotDecimal(col("a"), col("b")).as("nat"),
+      ReferenceForms.dotDecimalExpr(col("a"), col("b")).as("hof"))
+    assert(out.schema.map(_.dataType).distinct == Seq(
+      org.apache.spark.sql.types.DecimalType(38, 18)))
     assert(out.filter(!(col("nat") <=> col("hof"))).isEmpty,
       "native and expression dot products diverged")
     // Edge semantics (mismatched lengths, NaN, Infinity, null element) must
@@ -50,23 +55,86 @@ class FunctionsSpec extends SparkSpec {
     ).toDF("id", "a", "b").write.mode("overwrite").parquet(edgeDir)
     val edge = spark.read.parquet(edgeDir)
     val rows = edge.select(col("id"),
-      graft.llm.Similarity.dotDecimal(col("a"), col("b")).cast("double").as("nat"),
-      graft.llm.Similarity.dotDecimalExpr(col("a"), col("b")).cast("double").as("hof"))
+      graft.llm.Similarity.dotDecimal(col("a"), col("b")).as("nat"),
+      ReferenceForms.dotDecimalExpr(col("a"), col("b")).as("hof"))
       .orderBy("id")
-      .as[(Long, Option[Double], Option[Double])].collect().toSeq
+      .as[(Long, Option[java.math.BigDecimal], Option[java.math.BigDecimal])]
+      .collect().toSeq
     assert(rows.map(r => (r._1, r._2)) == rows.map(r => (r._1, r._3)),
       s"codegen path diverged from expression form: $rows")
     assert(rows(0)._2.isEmpty, "length mismatch must be null")
-    assert(rows(2)._2.contains(11.0))
+    assert(rows(1)._2.exists(_.compareTo(new java.math.BigDecimal("1.0E18")) == 0))
+    assert(rows(2)._2.exists(_.compareTo(java.math.BigDecimal.valueOf(11)) == 0))
     // NaN: the native kernel yields null (a poisoned embedding must not
     // kill the job) where the ANSI-mode Cast in the expression form throws.
     val nanDir = java.nio.file.Files.createTempDirectory("graft-dot-nan").toString
     Seq((2L, Seq(Float.NaN, 1.0f), Seq(1.0f, 1.0f)))
       .toDF("id", "a", "b").write.mode("overwrite").parquet(nanDir)
     val nan = spark.read.parquet(nanDir).select(
-      graft.llm.Similarity.dotDecimal(col("a"), col("b")).cast("double"))
-      .as[Option[Double]].head()
+      graft.llm.Similarity.dotDecimal(col("a"), col("b")))
+      .as[Option[java.math.BigDecimal]].head()
     assert(nan.isEmpty, "NaN product must be null, not a crash")
+    }
+  }
+
+  test("vector_dot_decimal's long fold equals its BigDecimal loop (seeded, driver-only)") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import graft.functions.VectorOps
+    val rnd = new scala.util.Random(20261018)
+    def value(d: org.apache.spark.sql.types.Decimal) = Option(d).map(_.toJavaBigDecimal)
+    def same(a: UnsafeArrayData, b: UnsafeArrayData, fa: Boolean, fb: Boolean): Unit = {
+      val fast = value(VectorOps.dotDecimal(a, b, fa, fb))
+      val exact = value(VectorOps.dotDecimalExact(a, b, fa, fb))
+      def elems(v: UnsafeArrayData, f: Boolean) =
+        (0 until v.numElements()).map(i => if (f) v.getFloat(i).toDouble else v.getDouble(i))
+      assert(fast == exact, s"fold diverged: $fast vs $exact on ${elems(a, fa)} · ${elems(b, fb)}")
+    }
+    def doubles(xs: Seq[Double]) = UnsafeArrayData.fromPrimitiveArray(xs.toArray)
+    def floats(xs: Seq[Float]) = UnsafeArrayData.fromPrimitiveArray(xs.toArray)
+    // magnitudes 1e-6 .. 1e3, either sign
+    def scaled(): Double =
+      math.pow(10, rnd.nextDouble() * 9 - 6) * (if (rnd.nextBoolean()) 1 else -1)
+    for (_ <- 0 until 3000) {
+      val dim = 1 + rnd.nextInt(96)
+      val s = math.pow(10, rnd.nextInt(5) - 3)
+      same(floats(Seq.fill(dim)((rnd.nextGaussian() * s).toFloat)),
+        floats(Seq.fill(dim)((rnd.nextGaussian() * s).toFloat)), true, true)
+      same(doubles(Seq.fill(dim)(scaled())), doubles(Seq.fill(dim)(scaled())), false, false)
+      same(floats(Seq.fill(dim)(scaled().toFloat)), doubles(Seq.fill(dim)(scaled())), true, false)
+    }
+    // products on a power-of-two boundary, just below and above it
+    val pow2 = (-70 to 3).flatMap { k =>
+      val x = math.pow(2, k)
+      Seq(x, Math.nextDown(x), Math.nextUp(x), -x)
+    }
+    same(doubles(pow2), doubles(pow2.map(_ => 1.0)), false, false)
+    for (_ <- 0 until 200) {
+      val xs = Seq.fill(64)(pow2(rnd.nextInt(pow2.size)))
+      same(doubles(xs), doubles(Seq.fill(64)(if (rnd.nextBoolean()) 1.0 else 0.5)), false, false)
+    }
+    // HALF_UP ties at scale 18 and at the fold's scale 17
+    val ties = Seq(5e-19, 1.5e-18, 2.5e-18, -2.5e-18, 5e-18, 1.5e-17, -2.5e-17, 2.675, 1.005)
+    same(doubles(ties), doubles(ties.map(_ => 1.0)), false, false)
+    same(doubles(ties.reverse), doubles(ties.map(_ => -1.0)), false, false)
+    // subnormal products: operands and results
+    val tiny = Seq(Double.MinPositiveValue, 3 * Double.MinPositiveValue,
+      java.lang.Double.MIN_NORMAL, Math.nextDown(java.lang.Double.MIN_NORMAL), 1e-160)
+    same(doubles(tiny), doubles(Seq(1.0, -1.0, 1.0, 1.0, 1e-160)), false, false)
+    same(floats(Seq(Float.MinPositiveValue, 1e-38f)), floats(Seq(1.0f, 1e-3f)), true, true)
+    // sums past the 64-bit accumulator: the restart on the BigDecimal loop
+    same(doubles(Seq.fill(64)(3.0)), doubles(Seq.fill(64)(3.0)), false, false)
+    same(doubles(Seq(9.5, -9.5, 9.0)), doubles(Seq(1.0, 1.0, 1.0)), false, false)
+    same(doubles(Seq(1e10, 1.0)), doubles(Seq(1e10, 1.0)), false, false)
+    same(doubles(Seq(5.0, 4.0, -8.0)), doubles(Seq(1.0, 1.0, 1.0)), false, false)
+    same(doubles(Seq(1e19, 1e19)), doubles(Seq(1e19, 1e19)), false, false) // past DECIMAL(38,18)
+    for (_ <- 0 until 300) {
+      same(doubles(Seq.fill(32)(rnd.nextGaussian() * 3)),
+        doubles(Seq.fill(32)(rnd.nextGaussian() * 3)), false, false)
+    }
+    // null edges: NaN and infinite products, mismatched lengths
+    assert(VectorOps.dotDecimal(doubles(Seq(Double.NaN)), doubles(Seq(1.0)), false, false) == null)
+    assert(VectorOps.dotDecimal(doubles(Seq(1e200)), doubles(Seq(1e200)), false, false) == null)
+    assert(VectorOps.dotDecimal(doubles(Seq(1.0, 2.0)), doubles(Seq(1.0)), false, false) == null)
   }
 
   test("native vector_dot_double is bit-identical to the expression form") {
@@ -75,7 +143,7 @@ class FunctionsSpec extends SparkSpec {
       .crossJoin(emb.limit(7).select(col("embedding").as("b")))
     val out = pairs.select(
       graft.llm.Similarity.dotDouble(col("a"), col("b")).as("nat"),
-      graft.llm.Similarity.dotDoubleExpr(col("a"), col("b")).as("hof"))
+      ReferenceForms.dotDoubleExpr(col("a"), col("b")).as("hof"))
     assert(out.filter(!(col("nat") <=> col("hof"))).isEmpty,
       "native and expression double dot products diverged")
     // codegen-path edge semantics via parquet (no local-relation folding)
@@ -87,7 +155,7 @@ class FunctionsSpec extends SparkSpec {
     ).toDF("id", "a", "b").write.mode("overwrite").parquet(edgeDir)
     val rows = spark.read.parquet(edgeDir).select(col("id"),
       graft.llm.Similarity.dotDouble(col("a"), col("b")).as("nat"),
-      graft.llm.Similarity.dotDoubleExpr(col("a"), col("b")).as("hof"))
+      ReferenceForms.dotDoubleExpr(col("a"), col("b")).as("hof"))
       .orderBy("id")
       .as[(Long, Option[Double], Option[Double])].collect().toSeq
     assert(rows.map(r => (r._1, r._2.map(_.isNaN))) == rows.map(r => (r._1, r._3.map(_.isNaN))))
