@@ -103,120 +103,4 @@ object Bpe {
     import spark.implicits._
     merges.toSeq.toDF("merge_idx", "left", "right", "freq")
   }
-
-  /** Apply a learned merge table to text: tokenize, then fold each word
-    * through the merges in order. Expression-composed (numMerges nested
-    * folds) — the REFERENCE semantics and fine for the tens of merges
-    * typical of tests/demos; production vocabularies (10k–50k merges)
-    * go through [[segmentFast]], which is spec-proved equal.
-    */
-  def segment(
-      docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)]): DataFrame = {
-    val base = Spread(docs.select(col(idCol), col(textCol)))
-      .select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("word"))
-    val folded = merges.foldLeft(charSymbols(col("word"))) {
-      case (syms, (l, r)) => applyMerge(syms, l, r)
-    }
-    base.select(col(idCol), col("word"), folded.as("symbols"))
-  }
-
-  /** Production segmenter: identical output to [[segment]], built for
-    * real vocabularies. The merge table rides to the executors ONCE as a
-    * broadcast rank map; each word goes through the standard min-rank
-    * merge loop (Sennrich's `apply_bpe`, GPT-2's `bpe()`): repeatedly
-    * merge the word's lowest-rank adjacent pair, leftmost-first
-    * non-overlapping, until no pair is in the table. Per word that is
-    * O(len²) hash probes INDEPENDENT of vocabulary size, where the fold
-    * form pays O(numMerges · len) — and nests `numMerges` aggregate
-    * lambdas into one Catalyst plan, which stops codegen-compiling
-    * beyond a few dozen merges. `mapPartitions` is justified here the
-    * same way as the binary codecs: no Catalyst expression can hold a
-    * 50k-entry mutable rank table.
-    *
-    * Equivalence with the fold form: sequential exhaustive application
-    * (merge 0 everywhere, then merge 1, …) equals the min-rank loop
-    * whenever every merge's pair symbols are products of earlier merges
-    * or base characters — true of every table [[train]] emits, and of
-    * any properly learned BPE table. A merge can only create its own new
-    * symbol, and that symbol cannot be an element of an EARLIER merge's
-    * pair, so later merges never manufacture new occurrences of earlier
-    * pairs; both strategies therefore apply exactly the same multiset of
-    * merges to every word. Spec-proved equal on the Sennrich corpus and
-    * on real documents (BpeSpec).
-    *
-    * A per-partition memo caches the loop per DISTINCT word (Zipf: the
-    * bulk of token occurrences are repeats), capped so a pathological
-    * vocabulary cannot grow executor memory unboundedly.
-    */
-  def segmentFast(
-      docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)]): DataFrame = {
-    val base = Spread(docs.select(col(idCol), col(textCol)))
-      .select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("word"))
-    val ranks: Map[(String, String), Int] =
-      merges.zipWithIndex.groupBy(_._1).map { case (p, vs) =>
-        p -> vs.map(_._2).min // duplicate pair keeps its FIRST rank
-      }
-    val bc = docs.sparkSession.sparkContext.broadcast(ranks)
-    val outSchema = base.schema
-      .add("symbols", ArrayType(StringType, containsNull = true))
-    base.mapPartitions { it =>
-      val rk = bc.value
-      val byRank = rk.map(_.swap) // rank → pair, built once per partition
-      val memo = new java.util.HashMap[String, Seq[String]]()
-      it.map { row =>
-        val w = row.getString(1)
-        var syms = memo.get(w)
-        if (syms == null) {
-          syms = bpeWord(w, rk, byRank)
-          if (memo.size < (1 << 20)) memo.put(w, syms)
-        }
-        Row.fromSeq(row.toSeq :+ syms)
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** One word through the min-rank merge loop. Initial symbols are CODE
-    * POINTS (never split surrogate pairs — matches `split(word, "")`,
-    * which is regex- and therefore code-point-based) plus the end
-    * marker.
-    */
-  private def bpeWord(
-      w: String, ranks: Map[(String, String), Int],
-      byRank: Map[Int, (String, String)]): Seq[String] = {
-    val init = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < w.length) {
-      val n = Character.charCount(w.codePointAt(i))
-      init += w.substring(i, i + n)
-      i += n
-    }
-    init += EndOfWord
-    var word = init
-    var scanning = word.length > 1
-    while (scanning) {
-      var best = Int.MaxValue
-      var j = 0
-      while (j < word.length - 1) {
-        val r = ranks.getOrElse((word(j), word(j + 1)), Int.MaxValue)
-        if (r < best) best = r
-        j += 1
-      }
-      if (best == Int.MaxValue) scanning = false
-      else {
-        val (l, r) = byRank(best)
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        var k = 0
-        while (k < word.length) {
-          if (k < word.length - 1 && word(k) == l && word(k + 1) == r) {
-            out += (l + r); k += 2
-          } else { out += word(k); k += 1 }
-        }
-        word = out
-        scanning = word.length > 1
-      }
-    }
-    word.toSeq
-  }
 }

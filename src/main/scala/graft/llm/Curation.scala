@@ -58,26 +58,6 @@ object Curation {
         lit("val")).otherwise(lit("train")))
   }
 
-  /** Split-leakage audit: how many related pairs straddle the split. Feed
-    * it the verified near-dup pairs (q26/q110) and a (id → split)
-    * assignment; 0 means the eval set shares no near-duplicate with
-    * train. Shape: two broadcast-or-shuffle hash joins pairs→assignment
-    * (pairs ≪ corpus) and one count — no corpus-side shuffle.
-    */
-  def splitLeakage(
-      pairs: DataFrame, assign: DataFrame, idCol: String): DataFrame = {
-    val a = assign.select(col(idCol).as("__id"), col("split"))
-    pairs
-      .join(a.withColumnRenamed("split", "split_a"),
-        pairs("id_a") === a("__id")).drop("__id")
-      .join(a.withColumnRenamed("split", "split_b"),
-        pairs("id_b") === a("__id")).drop("__id")
-      .agg(
-        count(lit(1)).as("n_pares"),
-        sum(when(col("split_a") =!= col("split_b"), 1L).otherwise(0L))
-          .as("n_vazados"))
-  }
-
   /** Offset-based sequence packing: assign each document to the
     * fixed-`budget` token bin its running token-offset starts in
     * (`bin = floor(offset / budget)` with `offset` = the per-group running
@@ -606,20 +586,6 @@ object Curation {
       .groupBy("url_canonico")
       .agg(min(col("__id")).as(idCol), count(lit(1L)).as("n_copias"))
 
-  /** Streaming twin of [[dedupByCanonicalUrl]] — the crawl-frontier
-    * ingest gate: canonicalize at scan level (stateless expressions),
-    * keep the FIRST arrival per canonical form, dedup state bounded by
-    * the watermark (a frontier's refetch window, not the crawl's
-    * lifetime). A messy refetch variant of an already-admitted URL is
-    * dropped INSIDE the gate; genuinely new canonical forms pass.
-    */
-  def urlIngestGateStream(
-      urls: DataFrame, tsCol: String, urlCol: String,
-      lateness: String = "2 hours"): DataFrame =
-    urls.withColumn("url_canonico", canonicalUrl(col(urlCol)))
-      .withWatermark(tsCol, lateness)
-      .dropDuplicatesWithinWatermark(Seq("url_canonico"))
-
   /** The host part of a URL (scheme-tolerant, '' when unparseable). */
   def urlDomain(url: Column): Column =
     regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1)
@@ -756,38 +722,7 @@ object Curation {
       dsirRatio(target, cr, textCol, buckets), idCol)
   }
 
-  /** The DSIR model: the bucket → importance-ratio table (≤ `buckets`
-    * rows). Split out so the ratios can be fit OFFLINE on reference
-    * corpora and applied elsewhere — including on a STREAM
-    * ([[dsirApply]] is stateless given the table, the
-    * [[keepProbabilities]]/[[applyResample]] production pattern).
-    */
-  def dsirFit(
-      target: DataFrame, raw: DataFrame,
-      textCol: String, buckets: Int): DataFrame = {
-    val cr = dsirBuckets(raw.select(col(textCol)), textCol, buckets, Nil)
-      .groupBy("__b").agg(count(lit(1)).as("__cr"))
-    dsirRatio(target, cr, textCol, buckets)
-  }
-
-  /** Score a document batch against a fitted [[dsirFit]] table: one
-    * scan-level feature fan-out, a BROADCAST ratio probe, one
-    * combinable per-doc aggregation. On a stream, call this inside
-    * `foreachBatch` against offline-fit ratios (the ingest-gate
-    * discipline — per-batch work is batch-bounded, the model stays a
-    * broadcast table; spec-proven equal to scoring the union in batch).
-    */
-  def dsirApply(
-      docs: DataFrame, ratios: DataFrame,
-      idCol: String, textCol: String, buckets: Int): DataFrame =
-    dsirScoreBuckets(
-      docs.select(col(idCol).as("__id")),
-      dsirBuckets(docs.select(col(idCol).as("__id"), col(textCol)),
-        textCol, buckets, Seq("__id")),
-      ratios, idCol)
-
-  /** The ratio algebra shared by [[dsirFit]] and the fused
-    * [[dsirScore]]: add-one-smoothed `p_target/p_raw` per bucket from
+  /** The ratio algebra of [[dsirScore]]: add-one-smoothed `p_target/p_raw` per bucket from
     * exact long products, one IEEE division each. The target side is
     * one combinable ≤`buckets`-row aggregation; totals ride along as a
     * broadcast 1-row cross join.

@@ -203,10 +203,9 @@ object Dedup {
     * as `numHashes` longs plus `bands` bucket rows per document (~200
     * bytes at 20 hashes). Unlike [[BandIndex]] there is NO shingle-set
     * join-back — an audit over the index
-    * ([[estimatedJaccardPairsIndexed]]) or an ingest estimate gate
-    * ([[estimatedGateIndexed]]) touches no corpus text at all, and the
-    * state is ~10³× smaller than the shingle sets it replaces. Use it for
-    * recurring similarity audits and triage gates over an unchanged
+    * ([[estimatedJaccardPairsIndexed]]) touches no corpus text at all,
+    * and the state is ~10³× smaller than the shingle sets it replaces.
+    * Use it for recurring similarity audits over an unchanged
     * corpus; destructive dedup keeps the exact-verify [[BandIndex]] path.
     */
   case class SignatureIndex(sigs: DataFrame, bands: DataFrame)
@@ -223,28 +222,13 @@ object Dedup {
     SignatureIndex(sigArray(sigs, numHashes), sigBands(sigs, numHashes, bands))
   }
 
-  private def saveSignatureIndex(
-      docs: DataFrame, idCol: String, textCol: String, path: String,
-      shingleN: Int, numHashes: Int, bands: Int, mode: String): Unit = {
-    val idx = signatureIndex(docs, idCol, textCol, shingleN, numHashes, bands)
-    idx.sigs.write.mode(mode).parquet(s"$path/sigs")
-    idx.bands.write.mode(mode).parquet(s"$path/bands")
-  }
-
   def writeSignatureIndex(
       docs: DataFrame, idCol: String, textCol: String, path: String,
-      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): Unit =
-    saveSignatureIndex(docs, idCol, textCol, path, shingleN, numHashes, bands,
-      "overwrite")
-
-  /** Extend a persisted signature index with an accepted batch's rows —
-    * same append discipline as [[appendBandIndex]].
-    */
-  def appendSignatureIndex(
-      docs: DataFrame, idCol: String, textCol: String, path: String,
-      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): Unit =
-    saveSignatureIndex(docs, idCol, textCol, path, shingleN, numHashes, bands,
-      "append")
+      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): Unit = {
+    val idx = signatureIndex(docs, idCol, textCol, shingleN, numHashes, bands)
+    idx.sigs.write.mode("overwrite").parquet(s"$path/sigs")
+    idx.bands.write.mode("overwrite").parquet(s"$path/bands")
+  }
 
   def readSignatureIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): SignatureIndex =
@@ -270,43 +254,10 @@ object Dedup {
       .select(col("id_a"), col("id_b"), sigAgreement(numHashes))
       .filter(col("jaccard_est") >= threshold)
 
-  /** Signature-only ingest gate: per batch doc, how many corpus docs have
-    * ESTIMATED Jaccard ≥ `threshold` against it, and the keep verdict.
-    * The corpus contributes only its signature index (no text, no
-    * shingles); only the batch is tokenized and hashed. Exact duplicates
-    * surface as estimate 1.0, so a separate content-hash check is not
-    * needed at thresholds ≤ 1. Triage twin of [[ingestGateIndexed]] —
-    * same verdict columns, sketch-precision instead of exact verify.
-    */
-  def estimatedGateIndexed(
-      batch: DataFrame, index: SignatureIndex, idCol: String, textCol: String,
-      threshold: Double, shingleN: Int = 3, numHashes: Int = 20,
-      bands: Int = 5): DataFrame = {
-    val bs = signatureIndex(batch, idCol, textCol, shingleN, numHashes, bands)
-    val est = crossBandPairs(bs.bands, index.bands)
-      .join(bs.sigs.select(col("__id").as("id_novo"), col("__sig").as("__sig_a")),
-        "id_novo")
-      .join(index.sigs
-          .select(col("__id").as("id_existente"), col("__sig").as("__sig_b")),
-        "id_existente")
-      .select(col("id_novo"), sigAgreement(numHashes))
-      .filter(col("jaccard_est") >= threshold)
-      .groupBy("id_novo").agg(count(lit(1)).as("n_quase_dups"))
-    batch.select(col(idCol).as("id_novo"))
-      .join(est, Seq("id_novo"), "left")
-      .select(col("id_novo").as(idCol),
-        coalesce(col("n_quase_dups"), lit(0L)).as("n_quase_dups"))
-      .withColumn("mantido", col("n_quase_dups") === 0L)
-  }
-
   /** The corpus half of [[ingestGateIndexed]]: sorted shingle sets, band
-    * buckets and content hashes are pure functions of the corpus text, so
-    * they are computed ONCE, written next to the corpus
-    * ([[writeBandIndex]]), and every subsequent ingest batch joins against
-    * them without re-reading a byte of corpus text — the 100 TB contract
-    * (the Staging/Layout manifest pattern applied to dedup state). After
-    * an accepted batch is appended, append its OWN index rows the same
-    * way. [[ingestGate]] builds the same index in memory.
+    * buckets and content hashes are pure functions of the corpus text.
+    * [[ingestGate]] builds the index in memory; a batch joins against it
+    * without re-tokenizing the corpus.
     */
   case class BandIndex(shingles: DataFrame, bands: DataFrame, hashes: DataFrame)
 
@@ -329,113 +280,6 @@ object Dedup {
     BandIndex(keyed, buckets,
       docs.select(sha2(col(textCol).cast("binary"), 256).as("__ch")))
   }
-
-  private def saveBandIndex(
-      docs: DataFrame, idCol: String, textCol: String, path: String,
-      shingleN: Int, numHashes: Int, bands: Int, mode: String): Unit = {
-    val idx = bandIndex(docs, idCol, textCol, shingleN, numHashes, bands)
-    idx.shingles.write.mode(mode).parquet(s"$path/shingles")
-    idx.bands.write.mode(mode).parquet(s"$path/bands")
-    idx.hashes.distinct().write.mode(mode).parquet(s"$path/hashes")
-  }
-
-  def writeBandIndex(
-      corpus: DataFrame, idCol: String, textCol: String, path: String,
-      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): Unit =
-    saveBandIndex(corpus, idCol, textCol, path, shingleN, numHashes, bands,
-      "overwrite")
-
-  def readBandIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): BandIndex =
-    BandIndex(
-      spark.read.parquet(s"$path/shingles"),
-      spark.read.parquet(s"$path/bands"),
-      spark.read.parquet(s"$path/hashes"))
-
-  /** Extend a persisted index with an ACCEPTED batch's rows — the append
-    * half of the grow-a-deduplicated-corpus loop. Per-batch distinct
-    * hashes may repeat across appends; [[ingestGateIndexed]] probes the
-    * hash table through a distinct, so duplicates cost a dedup pass of
-    * the (tiny) hash table, never duplicated verdicts.
-    */
-  def appendBandIndex(
-      docs: DataFrame, idCol: String, textCol: String, path: String,
-      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5): Unit =
-    saveBandIndex(docs, idCol, textCol, path, shingleN, numHashes, bands,
-      "append")
-
-  /** The shared foreachBatch discipline behind EVERY self-extending
-    * ingest gate — text band-index ([[ingestGateStream]]), perceptual
-    * image hash ([[imageGateStream]]), signature-only triage
-    * ([[estimatedGateStream]]), or any future hash space: gate the
-    * micro-batch against persisted state (`gate` returns one verdict row
-    * per batch id with a boolean `mantido`), keep only accepted rows,
-    * `localCheckpoint` BEFORE the state append (the accepted plan reads
-    * the same paths being appended — the lineage must be cut first),
-    * extend the state with the accepted rows, hand them to the sink.
-    * Per-batch work is batch-bounded; corpus state stays on disk.
-    */
-  def hashGateStream(
-      stream: DataFrame, idCol: String,
-      gate: DataFrame => DataFrame,
-      appendState: DataFrame => Unit,
-      onAccepted: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val verdict = gate(batch)
-        val accepted = batch
-          .join(verdict.filter(col("mantido")).select(idCol), Seq(idCol))
-          .localCheckpoint()
-        CacheScope.releaseAll()
-        if (!accepted.isEmpty) {
-          appendState(accepted)
-          CacheScope.releaseAll()
-        }
-        onAccepted(accepted)
-    }.start()
-
-  /** Streaming twin of [[ingestGateIndexed]]: every micro-batch is gated
-    * against the persisted index, accepted rows are handed to
-    * `onAccepted` (write them to the corpus sink there) and the index is
-    * EXTENDED with their band/shingle/hash rows — so a duplicate arriving
-    * two micro-batches after its twin is rejected even though neither is
-    * in the original corpus. The micro-batch is `localCheckpoint`ed
-    * before the index append, cutting the lineage that reads the same
-    * parquet paths being appended. This is the foreachBatch production
-    * shape (the q111 CDC discipline): per-batch work is batch-bounded,
-    * corpus state stays on disk.
-    */
-  def ingestGateStream(
-      stream: DataFrame, indexPath: String, idCol: String, textCol: String,
-      threshold: Double, onAccepted: DataFrame => Unit,
-      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    hashGateStream(stream, idCol,
-      batch => ingestGateIndexed(
-        batch, readBandIndex(batch.sparkSession, indexPath), idCol, textCol,
-        threshold, shingleN, numHashes, bands),
-      accepted => appendBandIndex(accepted, idCol, textCol, indexPath,
-        shingleN, numHashes, bands),
-      onAccepted)
-
-  /** Streaming twin of [[estimatedGateIndexed]]: signature-only triage
-    * per micro-batch, the index self-extends with accepted rows — the
-    * [[ingestGateStream]] discipline at sketch precision and ~10³× less
-    * state IO (no shingle sets ever written or joined).
-    */
-  def estimatedGateStream(
-      stream: DataFrame, indexPath: String, idCol: String, textCol: String,
-      threshold: Double, onAccepted: DataFrame => Unit,
-      shingleN: Int = 3, numHashes: Int = 20, bands: Int = 5)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    hashGateStream(stream, idCol,
-      batch => estimatedGateIndexed(
-        batch, readSignatureIndex(batch.sparkSession, indexPath), idCol,
-        textCol, threshold, shingleN, numHashes, bands),
-      accepted => appendSignatureIndex(accepted, idCol, textCol, indexPath,
-        shingleN, numHashes, bands),
-      onAccepted)
 
   /** The ingestion gate against a [[BandIndex]]: per batch document,
     * whether an EXACT copy exists in the corpus (content-hash semi-join,
@@ -462,7 +306,7 @@ object Dedup {
       .groupBy("id_novo").agg(count(lit(1)).as("n_quase_dups"))
     batch
       .withColumn("__bh", sha2(col(textCol).cast("binary"), 256))
-      // distinct: an appended index may carry a hash more than once
+      // distinct: the index carries a hash once per copy
       .join(index.hashes.distinct().withColumn("__exato", lit(true)),
         col("__bh") === col("__ch"), "left")
       .join(verified, col(idCol) === col("id_novo"), "left")
@@ -1063,8 +907,8 @@ object Dedup {
   /** The direction-space cell index [[semanticDedup]] runs on, built once
     * and reusable: incremental curation pipelines re-dedup a growing
     * corpus every batch, and re-fitting k-means per run is the dominant
-    * avoidable cost — build this (or [[Ivf.writeIndex]] it cell-partitioned)
-    * and pass it to the index-taking overload instead. Clusters UNIT
+    * avoidable cost — build this once and pass it to the index-taking
+    * overload instead. Clusters UNIT
     * vectors: cosine duplicates are scaled copies of one direction, and
     * k-means on raw magnitudes would scatter them across cells and hide
     * them from the within-cell pass.
@@ -1118,8 +962,8 @@ object Dedup {
     */
   val FlatCellLimit = 512
 
-  /** [[semanticDedup]] through a prebuilt [[semanticDedupIndex]] (or one
-    * loaded back via [[Ivf.readIndex]]): identical output, no k-means fit.
+  /** [[semanticDedup]] through a prebuilt [[semanticDedupIndex]]:
+    * identical output, no k-means fit.
     */
   def semanticDedup(
       corpus: DataFrame, idx: Ivf.IvfIndex, idCol: String, vecCol: String,
@@ -1284,66 +1128,4 @@ object Dedup {
         bit_count(col("__h_a").bitwiseXOR(col("__h_b"))).cast("long").as("dist"))
       .withColumn("consistente", col("dist") <= maxDist)
   }
-
-  /** Persisted image-fingerprint index (the [[BandIndex]] pattern for
-    * [[Multimodal.dHash56]] hashes): the corpus's banded hashes are
-    * written ONCE, partitioned by band, and every subsequent ingest
-    * probes them with the BATCH side broadcast — the corpus index is
-    * scanned, never shuffled, and no image byte of the corpus is ever
-    * re-decoded. 16 bytes of state per corpus image ×4 band rows.
-    */
-  def writeImageHashIndex(
-      hashed: DataFrame, idCol: String, hashCol: String, path: String): Unit =
-    banded56(hashed, idCol, hashCol)
-      .write.partitionBy("band").mode("overwrite").parquet(path)
-
-  def appendImageHashIndex(
-      hashed: DataFrame, idCol: String, hashCol: String, path: String): Unit =
-    banded56(hashed, idCol, hashCol)
-      .write.partitionBy("band").mode("append").parquet(path)
-
-  /** Gate a batch of image fingerprints against a persisted index:
-    * verdict per batch id — `n_quase_dups` corpus images within
-    * `maxDist` bits, `mantido` when none. The batch's band rows
-    * broadcast into the index scan (4 rows per batch image — tiny), the
-    * candidate verify is the exact `bit_count(xor)`.
-    */
-  def imageIngestGate(
-      batchHashed: DataFrame, index: DataFrame, idCol: String,
-      hashCol: String, maxDist: Int): DataFrame = {
-    require(maxDist >= 0 && maxDist < 56, s"need 0 <= maxDist < 56, got $maxDist")
-    val bb = banded56(batchHashed, idCol, hashCol)
-      .select(col("__id").as("id_novo"), col("__h").as("__h_novo"),
-        col("band"), col("bhash"))
-    val dups = index
-      .join(broadcast(bb), Seq("band", "bhash"))
-      .filter(bit_count(col("__h").bitwiseXOR(col("__h_novo"))) <= maxDist)
-      .select(col("id_novo"), col("__id").as("id_existente")).distinct()
-      .groupBy("id_novo").agg(count(lit(1)).as("n_quase_dups"))
-    batchHashed.select(col(idCol).as("id_novo"))
-      .join(dups, Seq("id_novo"), "left")
-      .select(col("id_novo").as(idCol),
-        coalesce(col("n_quase_dups"), lit(0L)).as("n_quase_dups"))
-      .withColumn("mantido", col("n_quase_dups") === 0L)
-  }
-
-  /** Streaming image-dedup gate with a SELF-EXTENDING index (the
-    * [[ingestGateStream]] discipline for perceptual hashes): each
-    * micro-batch of (id, dhash) rows is gated against the persisted
-    * index, accepted rows go to `onAccepted` AND their band rows append
-    * to the index — a perceptual twin arriving two micro-batches after
-    * its original is rejected although neither was in the original
-    * corpus. localCheckpoint cuts the lineage reading the paths being
-    * appended; per-batch work is batch-bounded.
-    */
-  def imageGateStream(
-      stream: DataFrame, indexPath: String, idCol: String, hashCol: String,
-      maxDist: Int, onAccepted: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    hashGateStream(stream, idCol,
-      batch => imageIngestGate(
-        batch, batch.sparkSession.read.parquet(indexPath), idCol, hashCol,
-        maxDist),
-      accepted => appendImageHashIndex(accepted, idCol, hashCol, indexPath),
-      onAccepted)
 }

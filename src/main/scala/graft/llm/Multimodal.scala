@@ -20,10 +20,8 @@ import org.apache.spark.sql.types._
   * uncompressed DIB (`00db`) pixel rows directly, MJPEG (`00dc`) through
   * pure-JDK ImageIO ([[encodeAvi]]/[[encodeAviMjpeg]] build genuine AVI
   * payloads for the oracle-checked round-trips). Only inter-frame codecs
-  * (H.264 class) need native decoders absent from this environment, so
-  * [[sampleFrames]] remains as the documented stub for that case — its
-  * Spark-side plumbing (binary representation, batched `mapPartitions`
-  * harness, schemas, frame fan-out) is real and tested either way.
+  * (H.264 class) need native decoders absent from this environment and
+  * are out of scope.
   */
 object Multimodal {
 
@@ -68,33 +66,6 @@ object Multimodal {
     val h = java.util.Arrays.hashCode(payload)
     val feats = Array.tabulate(4)(i => ((h >>> (i * 8)) & 0xFF).toFloat / 255.0f)
     Row(64 + math.floorMod(h, 1024), 64 + math.floorMod(h >> 10, 1024), 3, feats)
-  }
-
-  /** STUB resize kernel — `??? : real resize requires an image library`.
-    * Deterministic fake: honors the target box, preserving aspect via
-    * min-ratio over the decode stub's pseudo dimensions.
-    */
-  def resizeStub(maxW: Int, maxH: Int)(batch: Seq[Array[Byte]]): Seq[Row] =
-    decodeStub(batch).map { d =>
-      val (h, w) = (d.getInt(0), d.getInt(1))
-      val r = math.min(maxW.toDouble / w, maxH.toDouble / h).min(1.0)
-      Row((h * r).toInt.max(1), (w * r).toInt.max(1), d.getInt(2), d.get(3))
-    }
-
-  /** STUB frame-sample kernel for INTER-FRAME video codecs (H.264 class) —
-    * `??? : real codec decode requires native libraries`; RIFF-AVI with
-    * DIB or MJPEG frames has the real path ([[sampleFramesAvi]]).
-    * Deterministic fake: every `stride`-th pseudo-frame offset derived
-    * from the payload length (the batch plumbing — one input row fanning
-    * out to N frame rows — is the real part).
-    */
-  def sampleFrames(
-      df: DataFrame, blobCol: String, stride: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    df.withColumn("frame_indice",
-        explode(sequence(lit(0), greatest(
-          (length(col(blobCol)) / lit(stride)).cast("int") - 1, lit(0)))))
-      .withColumn("frame_offset", col("frame_indice") * stride)
   }
 
   /** REAL image decode kernel — pure-JDK `javax.imageio.ImageIO`, no native
@@ -383,7 +354,7 @@ object Multimodal {
     * integer means, zero libraries) and `00dc` MJPEG (each frame is a
     * complete JPEG image, decoded by pure-JDK ImageIO like
     * [[decodeImage]]). Only inter-frame codecs (H.264 class) remain out
-    * of scope (see [[sampleFrames]] stub). Malformed payloads fail
+    * of scope. Malformed payloads fail
     * loudly.
     */
   def decodeAviFrames(stride: Int)(p: Array[Byte]): Seq[Row] = {
@@ -831,7 +802,7 @@ object Multimodal {
   /** Batched partition-parallel decode harness: each partition iterates its
     * payloads in `batchSize` groups (the shape a vectorized/pandas-style
     * decode kernel wants), appending [[DecodedSchema]] columns. The kernel
-    * is injectable so tests can swap the stub (e.g. [[resizeStub]]).
+    * is injectable.
     */
   def decodeBatches(
       df: DataFrame, blobCol: String, batchSize: Int = 64,

@@ -153,76 +153,6 @@ object Pq {
           slicedDouble(col(vecCol), s, model.subDim), model.codebooks(s))
       }: _*).as("codes"))
 
-  /** ADC top-k for a query batch over an encoded corpus: per query the
-    * m·k sub-distance lookup table is computed once (queries × m × k
-    * rows — broadcast-sized by construction), the corpus explodes its m
-    * codes, hash-probes the broadcast LUT and folds the approximate
-    * squared distance in ONE combinable aggregation (DECIMAL-accumulated
-    * — deterministic under any partitioning). Output one row per
-    * (query_id, corpus id) in the per-query top-k by (distance, id).
-    */
-  def searchAdc(
-      encoded: DataFrame, model: PqModel, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val cb = model.codebooks.zipWithIndex.flatMap { case (cents, s) =>
-      cents.zipWithIndex.map { case (c, j) => (s, j, c) }
-    }.toDF("__sub", "__code", "__cent")
-    val lut = queries
-      .select(col(idCol).as("query_id"),
-        transform(col(vecCol), _.cast("double")).as("__qv"))
-      .crossJoin(broadcast(cb))
-      .select(col("query_id"), col("__sub"), col("__code"),
-        Kmeans.sqDist(
-          slice(col("__qv"), col("__sub") * model.subDim + 1,
-            lit(model.subDim)),
-          col("__cent")).as("__d"))
-    // `encoded` contract: the table [[encode]] produces — the SAME
-    // idCol name as the queries, plus `codes` (named lookup, never
-    // positional)
-    val codes = encoded.select(col(idCol).as("corpus_id"),
-      posexplode(col("codes")).as(Seq("__sub", "__code")))
-    val scored = codes
-      .join(broadcast(lut), Seq("__sub", "__code"))
-      .groupBy("query_id", "corpus_id")
-      .agg(sum(col("__d").cast("decimal(38,12)")).cast("double")
-        .as("dist2"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dist2").asc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
-  /** ADC shortlist + EXACT re-rank (the FAISS refine stage): the
-    * compressed scan nominates `shortlist` candidates per query, only
-    * those rows' ORIGINAL vectors are fetched (a corpus-side semi-join —
-    * at 100 TB the float vectors live cold; the refine touches
-    * |queries|·shortlist of them, never the corpus) and the final top-k
-    * is exact squared L2. Recall is bounded by the shortlist's, cost by
-    * the compressed scan — the standard quality/memory dial.
-    */
-  def searchAdcRerank(
-      encoded: DataFrame, model: PqModel, corpus: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, shortlist: Int): DataFrame = {
-    require(shortlist >= k, s"need shortlist >= k, got $shortlist < $k")
-    val cand = searchAdc(encoded, model, queries, idCol, vecCol, shortlist)
-      .select(col("query_id"), col("corpus_id"))
-    val qd = queries.select(col(idCol).as("query_id"),
-      transform(col(vecCol), _.cast("double")).as("__qv"))
-    val cv = corpus.select(col(idCol).as("corpus_id"),
-      transform(col(vecCol), _.cast("double")).as("__cv"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dist2").asc, col("corpus_id").asc)
-    cand.join(broadcast(qd), Seq("query_id"))
-      .join(cv, Seq("corpus_id"))
-      .select(col("query_id"), col("corpus_id"),
-        Kmeans.sqDist(col("__qv"), col("__cv")).as("dist2"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
   /** IVFADC (Jégou et al. §IV — the composition the paper actually
     * ships, and the architecture FAISS's workhorse index implements):
     * [[Ivf]] cell routing bounds HOW MANY vectors a query scans
@@ -233,9 +163,8 @@ object Pq {
     * Shape: the probe frame (query → nProbe cells, from one broadcast
     * centroid cross) joins the cell-tagged encoded corpus on cell id —
     * shuffle linear in PROBED code rows; ADC then scores only those
-    * (query, vector) pairs through the same broadcast LUT as
-    * [[searchAdc]] (joined per query_id here, so a vector pays only the
-    * queries that probed its cell), one DECIMAL-combinable sum, ADC
+    * (query, vector) pairs through a broadcast LUT (joined per query_id,
+    * so a vector pays only the queries that probed its cell), one DECIMAL-combinable sum, ADC
     * shortlist, exact refine on the shortlist's original vectors.
     *
     * Query batches larger than `queryTile` are folded in SEQUENTIAL

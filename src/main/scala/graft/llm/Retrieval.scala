@@ -221,23 +221,6 @@ object Retrieval {
       spark.read.parquet(s"$path/stats"),
       spark.read.parquet(s"$path/norms"))
 
-  /** Streaming accumulator for the index — the ingest side of a
-    * continuously-queryable corpus: each micro-batch's postings and
-    * norms append, its stats fold in exactly. After any number of
-    * micro-batches, indexed scores equal a batch build over everything
-    * seen bit-for-bit (spec-proven).
-    */
-  def postingsIndexStream(
-      stream: DataFrame, idCol: String, textCol: String, path: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (new java.io.File(s"$path/postings").exists())
-          appendPostingsIndex(batch, idCol, textCol, path)
-        else writePostingsIndex(batch, idCol, textCol, path)
-        CacheScope.releaseAll()
-    }.start()
-
   /** [[bm25TopK]] over a persisted [[PostingsIndex]]: identical scores
     * (the stats fold is exact-integer), zero tokenization — the
     * recurring-query shape at 100 TB: tokenize at ingest, every query
@@ -298,26 +281,6 @@ object Retrieval {
       .agg(count(lit(1L)).as("n_docs"))
     tfidfCore(indexed, stats, queries, idCol, textCol, k,
       maxDfFraction, logWeights)
-  }
-
-  /** [[tfidfTopK]] over a persisted [[PostingsIndex]]: the stored
-    * postings and tf-only norms serve the log-free (oracle-exact) form
-    * directly; `logWeights = true` recomputes its norms from the stored
-    * postings (still zero tokenization). Identical scores to the
-    * from-scratch path — the same index serves BOTH rankers, which is
-    * the point: one ingest-time tokenize, any number of BM25/TF-IDF
-    * query batches.
-    */
-  def tfidfTopKIndexed(
-      index: PostingsIndex, queries: DataFrame, idCol: String,
-      textCol: String, k: Int, maxDfFraction: Double = 0.5,
-      logWeights: Boolean = false): DataFrame = {
-    val indexed = CacheScope.persistTracked(
-      if (logWeights)
-        index.postings.join(tfNorms(index.postings, logWeights), "doc_id")
-      else index.postings.join(index.norms, "doc_id"))
-    tfidfCore(indexed, index.stats.select(col("n_docs")), queries, idCol,
-      textCol, k, maxDfFraction, logWeights)
   }
 
   private def tfidfCore(
@@ -391,7 +354,7 @@ object Retrieval {
 
   /** Average precision @k per query (mean over queries = MAP, THE
     * classic ranked-retrieval summary TREC reports; completes the eval
-    * suite next to [[evalRanking]]'s recall/RR and [[evalNdcg]]):
+    * suite next to [[evalRanking]]'s recall/RR):
     * AP = (Σ_{hit ranks p} precision@p)/n_relevant, i.e. every relevant
     * document contributes the precision at its own rank — rank quality
     * and completeness in one number.
@@ -429,39 +392,6 @@ object Retrieval {
         coalesce(col("n_acertos"), lit(0L)).as("n_acertos"),
         (coalesce(col("__apsum"), lit(0.0)) /
           col("n_relevantes").cast("double")).as("ap"))
-  }
-
-  /** NDCG@k with GRADED relevance (query_id, doc_id, ganho) — the
-    * ranking-quality twin of [[evalRanking]]: DCG = Σ gain/log2(1+rank)
-    * over the top k, normalized by the ideal ordering's DCG (gains
-    * sorted descending). The log2 discount is why this is the one
-    * metric kept OFF the oracle path (`ln`'s last ulp varies across
-    * libm implementations — the q99 idf lesson); the spec pins hand
-    * values instead. Same two-broadcast-join shape as [[evalRanking]].
-    */
-  def evalNdcg(
-      ranking: DataFrame, relevance: DataFrame, k: Int,
-      posCol: String = "posicao"): DataFrame = {
-    val dcg = ranking.filter(col(posCol) <= k)
-      .join(relevance.select(col("query_id"), col("doc_id"), col("ganho")),
-        Seq("query_id", "doc_id"), "left")
-      .groupBy("query_id")
-      .agg(sum(coalesce(col("ganho"), lit(0.0)) /
-        log2(col(posCol).cast("double") + lit(1.0))).as("dcg"))
-    // ideal ordering: gains descending, same discount
-    val iw = Window.partitionBy("query_id")
-      .orderBy(col("ganho").desc, col("doc_id").asc)
-    val idcg = relevance
-      .withColumn("__r", row_number().over(iw))
-      .filter(col("__r") <= k)
-      .groupBy("query_id")
-      .agg(sum(col("ganho") / log2(col("__r").cast("double") + lit(1.0)))
-        .as("idcg"))
-    idcg.join(dcg, Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("dcg"), lit(0.0)).as("dcg"), col("idcg"),
-        when(col("idcg") > 0.0, coalesce(col("dcg"), lit(0.0)) / col("idcg"))
-          .otherwise(0.0).as("ndcg"))
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR 2009) —

@@ -153,33 +153,6 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Multi-probe ANN: each query additionally probes the `planes` buckets
-    * at Hamming distance 1 from its own — recall rises steeply for a
-    * `planes`+1 factor on candidate volume, with the same equi-join shape
-    * (each corpus row still lives in exactly one bucket, so no duplicate
-    * candidates are generated).
-    */
-  def annTopKMultiProbe(
-      corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, planes: Int = 8): DataFrame = {
-    val cb = Spread(corpus).select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"),
-      l2Norm(col(vecCol)).as("__cn"),
-      lshBucket(col(vecCol), planes).as("__bucket"))
-    val bucket = lshBucket(col(vecCol), planes)
-    val probeList = array(bucket +:
-      (0 until planes).map(p => bucket.bitwiseXOR(lit(1L << p))): _*)
-    val qb = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-      l2Norm(col(vecCol)).as("__qn"), explode(probeList).as("__qbucket")))
-    val scored = cb.join(qb, col("__bucket") === col("__qbucket"))
-      .select(col("query_id"), col("corpus_id"),
-        (dotDecimal(col("__qv"), col("__cv")).cast("double") /
-          (col("__qn") * col("__cn"))).as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
   /** Symmetric per-vector int8 quantization — the storage-scale compression
     * step for large embedding stores (4× smaller than float32, exact
     * reconstruction bound |error| ≤ scale/2 per component). Appends

@@ -88,25 +88,15 @@ object TextAnalysis {
         i => concat_ws(" ", slice(toks, i, lit(n)))))
       .otherwise(array().cast("array<string>"))
 
-  /** Distinct-shingle set (dedup/Jaccard building block). */
-  def shingleSet(toks: Column, n: Int): Column = array_distinct(shingles(toks, n))
-
   /** Distinct SORTED shingle set via the native codegen'd
     * [[graft.functions.WordShingles]] — one static call per doc; the
     * higher-order form is CodegenFallback and re-evaluates the token
     * expression per shingle index once projections collapse (O(tokens²)
-    * interpreted). Equals `sort_array(shingleSet(toks, n))`; sorted output
+    * interpreted). Equals `sort_array(array_distinct(shingles(toks, n)))`; sorted output
     * feeds the merge-walk Jaccard.
     */
   def shingleSetSorted(toks: Column, n: Int): Column =
     call_function("word_shingles", toks, lit(n))
-
-  /** Document fingerprint: the minimum md5 over word 3-shingles — a
-    * winnowing-style content signature that is stable under reordering of
-    * document chunks and reproducible cross-engine (md5 is standard).
-    */
-  def fingerprint(text: Column, n: Int = 3): Column =
-    array_min(transform(shingles(tokens(text), n), sh => md5(sh.cast("binary"))))
 
   /** Corpus-relative token frequency scoring — the two-pass quality
     * signal heuristic stacks use before model-based filters: documents

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * detect any shared run of w+k−1 tokens, while storing only ~2/(w+1)
   * of the grams — the density/guarantee trade the paper proves optimal.
   *
-  * Completes the fingerprint family: [[TextAnalysis.fingerprint]] is
-  * one rolling hash per document (whole-doc identity);
+  * Completes the fingerprint family: [[Dedup.exactDedup]] is one content
+  * hash per document (whole-doc identity);
   * [[Curation.dedupExactSubstrings]] finds exact spans but keeps every
   * span; winnowing is the SUBLINEAR substring-evidence sketch — the
   * standard plagiarism/citation-overlap primitive.
@@ -74,41 +74,5 @@ object Winnow {
         col("__sel.__h").as("hash"),
         (-col("__sel.__np")).as("pos"))
       .distinct()
-  }
-
-  /** Near-duplicate pairs by winnowing-fingerprint overlap: documents
-    * sharing at least `minShared` distinct fingerprint hashes, scored by
-    * exact Jaccard over the distinct-hash sets — integer-gated, one
-    * tiled inverted-index join (each shared hash proposes the pair once;
-    * multi-hash collisions collapse with distinct before the sets are
-    * touched).
-    */
-  def fingerprintPairs(
-      docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 4, w: Int = 4, minShared: Int = 2,
-      maxBlock: Int = Dedup.AdaptiveBlock): DataFrame = {
-    val fp = CacheScope.persistTracked(
-      fingerprints(docs, idCol, textCol, k, w)
-        .select(col(idCol).as("__id"), col("hash"))
-        .distinct())
-    val sizes = fp.groupBy("__id").agg(count(lit(1L)).as("__sz"))
-    val keyed = fp.join(sizes, "__id")
-      .select(col("__id"), col("hash").as("__block"), col("__sz"))
-    val cand = Dedup.tiledPairs(keyed, Seq("__sz"), maxBlock)
-      .select(
-        least(col("id_a"), col("id_b")).as("__ida"),
-        greatest(col("id_a"), col("id_b")).as("__idb"),
-        least(col("__sz_a"), col("__sz_b")).as("__sa"),
-        greatest(col("__sz_a"), col("__sz_b")).as("__sb"))
-      .groupBy("__ida", "__idb")
-      .agg(count(lit(1L)).as("shared"),
-        max(col("__sa")).as("__sa"), max(col("__sb")).as("__sb"))
-      .filter(col("shared") >= minShared)
-    cand.select(
-      col("__ida").as("id_a"), col("__idb").as("id_b"),
-      col("shared"),
-      (col("shared").cast("double") /
-        (col("__sa") + col("__sb") - col("shared")).cast("double"))
-        .as("jaccard"))
   }
 }

@@ -69,32 +69,6 @@ object AsOf {
       payloadCols: Seq[String], prefix: String = "asof_"): DataFrame =
     asOfJoinNativeKeys(fact, dim, Seq(keyCol), tsCol, payloadCols, prefix)
 
-  /** FORWARD-direction native as-of: attach the EARLIEST dim row with the
-    * same key and `dim.ts >= fact.ts` (ties match) — pandas
-    * `merge_asof(direction='forward')`; the "next scheduled event /
-    * upcoming rate" lookup. Same Catalyst operator and planner contracts
-    * as [[asOfJoinNative]]; the forward merge needs NO held state at all
-    * (the lookahead dim row is the candidate and is never consumed).
-    */
-  def asOfJoinForwardNative(
-      fact: DataFrame, dim: DataFrame, keyCol: String, tsCol: String,
-      payloadCols: Seq[String], prefix: String = "asof_next_"): DataFrame =
-    asOfJoinNativeKeys(fact, dim, Seq(keyCol), tsCol, payloadCols, prefix,
-      direction = "forward")
-
-  /** NEAREST-direction native as-of: whichever of the backward and
-    * forward matches has the smaller |dim.ts − fact.ts| wins, ties to
-    * backward — pandas `merge_asof(direction='nearest')`. One merged
-    * pass: the backward scan's lookahead row IS the forward candidate,
-    * so nearest costs the same as backward. Integral/timestamp ts only
-    * (the delta needs arithmetic, not just ordering).
-    */
-  def asOfJoinNearestNative(
-      fact: DataFrame, dim: DataFrame, keyCol: String, tsCol: String,
-      payloadCols: Seq[String], prefix: String = "asof_near_"): DataFrame =
-    asOfJoinNativeKeys(fact, dim, Seq(keyCol), tsCol, payloadCols, prefix,
-      direction = "nearest")
-
   /** [[asOfJoinNative]] on a composite key — the exec clusters and merges
     * on the full key tuple (e.g. (entity, region) rate tables).
     * `direction`: "backward" (latest at-or-before, default), "forward"

@@ -55,52 +55,6 @@ object Cdc {
         changes, keyCols, Seq((seqCol, false)), k = 1, posCol = "__pos")
       .drop("__pos")
 
-  /** Fold a changelog batch into a [[graft.sources.Sink]] table WITHOUT
-    * rebuilding the whole result plan: non-delete winners go through the
-    * sink's delete-conflicts upsert, delete winners through its keyed
-    * delete — the two halves of the merge a mutable target supports
-    * directly (for JDBC that touches only the changed keys; the parquet
-    * sink stages+swaps either way).
-    */
-  def applyChangelogSink(
-      spark: org.apache.spark.sql.SparkSession, sink: graft.sources.Sink,
-      table: String, changes: DataFrame, keyCols: Seq[String],
-      seqCol: String, opCol: String, deleteOp: String = "D"): Unit = {
-    // two consumers of the heap aggregation (upserts + deletes): persist
-    // the batch-sized winner set instead of recomputing it
-    val winners = latestWinners(changes, keyCols, seqCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ups = winners.filter(col(opCol) =!= deleteOp).drop(seqCol, opCol)
-      val dels = winners.filter(col(opCol) === deleteOp)
-        .select(keyCols.map(col): _*)
-      sink.upsert(spark, ups, table, keyCols)
-      sink.deleteKeys(spark, table, keyCols, dels)
-    } finally winners.unpersist()
-  }
-
-  /** Streaming CDC: every micro-batch of the change stream folds into the
-    * sink table via [[applyChangelogSink]] — the foreachBatch merge loop
-    * (Delta's streaming MERGE). Within a micro-batch `seqCol` decides;
-    * across batches later batches win, which is correct because
-    * Structured Streaming replays at most the last uncommitted batch on
-    * recovery, in order — and replaying it re-derives the same winners
-    * (the fold is idempotent for stable seq values).
-    */
-  def applyChangelogStream(
-      changes: DataFrame, sink: graft.sources.Sink, table: String,
-      keyCols: Seq[String], seqCol: String, opCol: String,
-      checkpointDir: String,
-      deleteOp: String = "D"): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyChangelogSink(batch.sparkSession, sink, table, batch,
-          keyCols, seqCol, opCol, deleteOp)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-
   /** Changelog EXTRACTION — [[applyChangelog]]'s inverse, the diff→CDC
     * step that turns two table snapshots into the keyed change events a
     * downstream consumer replays (the lakehouse "generate change feed

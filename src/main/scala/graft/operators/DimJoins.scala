@@ -15,24 +15,9 @@ import org.apache.spark.sql.functions._
   */
 object DimJoins {
 
-  /** Left-join the period dim on `start <= dateExpr <= end`.
-    *
-    * With a broadcast dim this is a BroadcastNestedLoopJoin over a
-    * few-hundred-row build side — O(n·|periods|) map-side work with no
-    * shuffle, which at 100 TB beats a sort-merge range join on a skewed date
-    * key by orders of magnitude.
-    */
-  def periodLookup(
-      fact: DataFrame, dateExpr: Column,
-      periods: DataFrame, startCol: String, endCol: String): DataFrame =
-    fact.join(
-      broadcast(periods),
-      dateExpr >= periods(startCol) && dateExpr <= periods(endCol),
-      "left")
-
-  /** Month-aligned fast path for [[periodLookup]]: when every period is
-    * exactly one calendar month, the range predicate collapses to an
-    * equality on the month start — a BroadcastHashJoin instead of a nested
+  /** Left-join the period dim on `start <= dateExpr <= end` when every
+    * period is exactly one calendar month: the range predicate collapses
+    * to an equality on the month start — a BroadcastHashJoin instead of a nested
     * loop, O(n) with no per-period probing. Prefer this whenever the period
     * dimension is the standard monthly competence calendar.
     */
@@ -49,7 +34,8 @@ object DimJoins {
     * joins on month equality (BroadcastHashJoin) and the original range
     * predicate remains as a residual condition on the matches. Per-row
     * probe cost is the handful of periods overlapping one month — constant,
-    * instead of scaling with |periods| like the nested-loop [[periodLookup]].
+    * instead of scaling with |periods| like a broadcast nested-loop range
+    * join.
     * Periods must not overlap within a month-bucket more than a few deep for
     * the left-join multiplicity to stay bounded (true for calendar tilings).
     * Rows with `start > end` are malformed (sequence() would throw at

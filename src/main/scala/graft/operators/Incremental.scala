@@ -150,9 +150,7 @@ object Incremental {
     * 100 TB corpus's n-gram vocabulary), the sketch needs a few thousand
     * rows that build in ONE map-side-combinable aggregation (each scan
     * split emits ≤ depth·width partial rows), merge across
-    * shards/micro-batches by `(i,j)` addition ([[cmsMerge]] — spec proves
-    * split-and-merge equals the whole-corpus build EXACTLY), and answer
-    * point queries by a broadcast probe ([[cmsEstimate]]).
+    * shards by `(i,j)` addition, and answer point queries by a broadcast probe ([[cmsEstimate]]).
     *
     * Estimates are one-sided: `est ≥ true count` always (collisions only
     * ADD), with the classic ε·N overestimation bound at e/width. Hashes
@@ -169,12 +167,6 @@ object Incremental {
       .groupBy("i", "j").agg(count(lit(1L)).as("c"))
   }
 
-  /** Add two sketches built with the same (depth, width): counters sum
-    * cell-wise — the merge is one aggregation over ≤ 2·depth·width rows.
-    */
-  def cmsMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy("i", "j").agg(sum(col("c")).as("c"))
-
   /** Point-estimate the count of every key in `keys`: min over the
     * `depth` probed cells (absent cell = 0). The sketch side is bounded
     * by depth·width rows and BROADCASTS — the probe never shuffles.
@@ -189,30 +181,6 @@ object Incremental {
       .groupBy(keyCol)
       .agg(min(coalesce(col("c"), lit(0L))).as("est"))
   }
-
-  /** Streaming twin of [[cmsBuild]]: every micro-batch reduces to its own
-    * batch-sized sketch, [[cmsMerge]]s into the persisted sketch and
-    * overwrites it — frequency state over an UNBOUNDED stream in
-    * ≤ depth·width rows, with the exactness [[cmsMerge]]'s spec proves:
-    * after any number of micro-batches the persisted sketch is
-    * cell-for-cell identical to a batch build over everything seen. The
-    * merged result is `localCheckpoint`ed BEFORE the overwrite — the
-    * merge plan reads the same files being replaced.
-    */
-  def cmsStream(
-      stream: DataFrame, keyCol: String, depth: Int, width: Int,
-      sketchPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val batchSketch = cmsBuild(batch, keyCol, depth, width)
-        val merged =
-          if (new java.io.File(sketchPath).exists())
-            cmsMerge(s.read.parquet(sketchPath), batchSketch)
-          else batchSketch
-        merged.localCheckpoint()
-          .write.mode("overwrite").parquet(sketchPath)
-    }.start()
 
   /** Misra–Gries heavy-hitter summary over a column: ≤ k (item,
     * contagem) rows NO MATTER the vocabulary — the bounded-state
@@ -233,24 +201,5 @@ object Incremental {
         .as("__mg"))
       .select(explode(col("__mg")).as("__e"))
       .select(col("__e.item").as("item"), col("__e.contagem").as("contagem"))
-  }
-
-  /** Merge two [[heavyHitters]] summaries built with the same k: add
-    * counters, then subtract the (k+1)-th largest sum from all and keep
-    * the positive remainder — the mergeable-summaries trim. Inputs are
-    * ≤ k rows each; the (k+1)-th largest comes from a distributed
-    * TakeOrdered top-(k+1) (its minimum IS the rank-(k+1) counter — the
-    * set is sorted descending), not a partition-less ranking window
-    * (the SmallFold warning discipline).
-    */
-  def heavyHittersMerge(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
-    val summed = a.unionByName(b)
-      .groupBy("item").agg(sum(col("contagem")).as("contagem"))
-    summed.crossJoin(broadcast(
-      summed.orderBy(col("contagem").desc, col("item")).limit(k + 1)
-        .agg(coalesce(when(count(lit(1L)) === k + 1,
-          min(col("contagem"))), lit(0L)).as("__cut"))))
-      .select(col("item"), (col("contagem") - col("__cut")).as("contagem"))
-      .filter(col("contagem") > 0L)
   }
 }

@@ -70,26 +70,9 @@ object Layout {
       .drop(cols.flatMap(c => Seq(s"__mn_$c", s"__mx_$c")): _*)
   }
 
-  /** Write `df` z-order-clustered on `cols` into `nFiles` range-disjoint
-    * files under `path` and read the layout back. Range partitioning on
-    * the Morton value keeps files curve-contiguous (compact bounding
-    * boxes in every dimension); within-file sort maximizes page-level
-    * stats. The `zorder` column is persisted so a lake manifest can prune
-    * on it directly too.
-    */
-  def zorderLayout(
-      spark: SparkSession, df: DataFrame, cols: Seq[String], nFiles: Int,
-      path: String, bits: Int = 16): DataFrame = {
-    zorderValue(df, cols, bits)
-      .repartitionByRange(nFiles, col("zorder"))
-      .sortWithinPartitions("zorder")
-      .write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
-  }
-
   /** Z-order-aware compaction: ONE call unifies the three layout levers —
     * small-file compaction ([[graft.sources.Staging.compact]]),
-    * multi-column curve clustering ([[zorderLayout]]) and the Bloom
+    * multi-column Morton-curve clustering and the Bloom
     * file-skipping manifest ([[writeBloomManifests]]). The table is
     * rewritten into `nFiles` Morton-range-disjoint files (compact
     * bounding boxes in EVERY clustered dimension → min/max prunes RANGE
@@ -123,7 +106,7 @@ object Layout {
     * doesn't multiply manifest bytes the way a largest-file-sized
     * `BloomFilterAggregate` literal would.
     *
-    * Min/max footer stats (what [[zorderLayout]]/`compact` exploit) prune
+    * Min/max footer stats (what curve clustering and `compact` exploit) prune
     * RANGE predicates; a Bloom manifest prunes POINT lookups on columns
     * with no clustering at all — the lake-manifest trick (Delta/Iceberg
     * file skipping) without opening a single parquet footer.

@@ -21,9 +21,7 @@ import org.apache.spark.sql.functions._
   *    years of history never window-sorts (the [[Cdc]] discipline);
   *  - "what should run next" = the source catalog LEFT-joined against that
   *    folded state, BROADCAST — the fold is ≤ #jobs rows, tiny versus a
-  *    catalog scan, so the catalog never shuffles;
-  *  - "is the pipeline healthy" = one map-side-combinable per-job
-  *    aggregation over the same ledger ([[runStats]]).
+  *    catalog scan, so the catalog never shuffles.
   */
 object RunLog {
 
@@ -65,22 +63,5 @@ object RunLog {
         col("__seq").as("ultima_execucao"),
         col("__status").as("ultimo_status"),
         col("motivo")): _*)
-  }
-
-  /** Observability fold (the structured-logging analytics the reference's
-    * logger feeds): per job — run count, failure count, rows written on
-    * successful runs, and the latest finish timestamp. ONE
-    * map-side-combinable aggregation over the append-only ledger.
-    */
-  def runStats(
-      ledger: DataFrame, jobCols: Seq[String], statusCol: String,
-      finishedTsCol: String, rowsCol: String,
-      okStatus: String = "ok"): DataFrame = {
-    val ok = col(statusCol) === okStatus
-    ledger.groupBy(jobCols.map(col): _*).agg(
-      count(lit(1)).as("execucoes"),
-      sum(when(!ok, 1L).otherwise(0L)).as("falhas"),
-      sum(when(ok, col(rowsCol)).otherwise(0L)).as("linhas_ok"),
-      max(col(finishedTsCol)).as("ultimo_fim"))
   }
 }

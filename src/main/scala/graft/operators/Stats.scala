@@ -492,9 +492,7 @@ object Stats {
         .agg(count(lit(1L)).as("n_atual")))
 
   /** [[driftReport]] from pre-aggregated (bucket, n_base) / (bucket,
-    * n_atual) tables — the form the STREAMING monitor uses, where the
-    * current counts accumulate across micro-batches and the baseline is
-    * a persisted fit artifact.
+    * n_atual) tables, for a baseline kept as a persisted fit artifact.
     */
   def driftFromCounts(nb: DataFrame, nc: DataFrame): DataFrame = {
     val joined = nb.join(nc, Seq("bucket"), "full_outer")
@@ -602,39 +600,6 @@ object Stats {
         col("esperado"),
         ((coalesce(col("observado"), lit(0L)).cast("double") /
           col("__n").cast("double")) / col("esperado")).as("razao"))
-  }
-
-  /** Streaming drift monitor — the fit/apply/MONITOR loop closed: each
-    * micro-batch's bucket counts fold into a persisted current-counts
-    * table (exact integer merge, the cmsStream discipline:
-    * localCheckpoint before the overwrite cuts the lineage reading the
-    * files being replaced), then the full [[driftFromCounts]] report
-    * against the fitted baseline overwrites `reportPath`. After any
-    * number of micro-batches the report is IDENTICAL to the batch
-    * [[driftReport]] over everything seen — counts merge exactly, and
-    * the report is a pure function of the counts (spec-proven).
-    */
-  def driftMonitorStream(
-      stream: DataFrame, baseline: DataFrame, bucketCol: String,
-      statePath: String, reportPath: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val nb = baseline.groupBy(col(bucketCol).as("bucket"))
-      .agg(count(lit(1L)).as("n_base"))
-      .localCheckpoint()
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val bc = batch.groupBy(col(bucketCol).as("bucket"))
-          .agg(count(lit(1L)).as("n_atual"))
-        val merged =
-          if (new java.io.File(statePath).exists())
-            s.read.parquet(statePath).unionByName(bc)
-              .groupBy("bucket").agg(sum(col("n_atual")).as("n_atual"))
-          else bc
-        merged.localCheckpoint().write.mode("overwrite").parquet(statePath)
-        driftFromCounts(nb, s.read.parquet(statePath))
-          .write.mode("overwrite").parquet(reportPath)
-    }.start()
   }
 
   /** Robust per-group outlier flags via median/MAD — the

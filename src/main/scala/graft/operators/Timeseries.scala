@@ -83,58 +83,8 @@ object Timeseries {
   /** Recency-weighted (exponentially decayed) per-entity score — the
     * engagement/freshness feature every behavioral model consumes:
     * `score(e) = Σ value · 2^(−age_weeks)` at a reference day, halving
-    * per elapsed week.
-    *
-    * Engine-exactness is why the decay base is 2 and the exponent is an
-    * integer: `1/2^w` has EXACTLY w decimal digits, so for w ≤ 18 the
-    * weight is exactly representable at DECIMAL scale 18 and every term
-    * is an EXACT DECIMAL(18,6) × DECIMAL(19,18) product (precision 38,
-    * scale 24 — no rounding anywhere, no libm `pow`). A double-typed
-    * term would die in the double→decimal cast: the product's binary
-    * value rounds differently into a decimal across engines (measured:
-    * last-digit mismatches at sf0.01). Ages beyond 18 weeks get weight
-    * 0 — an explicit decay floor at 2⁻¹⁸ ≈ 4·10⁻⁶, below any feature's
-    * meaningful contribution; events dated AFTER the reference day
-    * clamp to week 0 (weight 1) — without the clamp a negative week
-    * count would hit Java's masked shift (`1L << -1` =
-    * `Long.MIN_VALUE`) and silently poison the score. The score is
-    * RETURNED as the exact DECIMAL(38,24): a final cast to double
-    * would re-introduce engine dependence (DuckDB's
-    * wide-decimal→double conversion is one ulp off correctly-rounded —
-    * measured), and consumers wanting a double can cast at the edge.
-    * One combinable aggregation; the corpus never shuffles twice.
-    *
-    * NOTE for cross-engine report surfaces: the DECIMAL(38,24) column
-    * is for IN-PLAN consumption. A pyarrow/pandas reader hashes it as
-    * `Decimal` objects while an oracle engine renders float64 — a
-    * dtype-level mismatch even when all values agree (measured,
-    * round 9). Report queries should use [[decayedScoreScaled]].
-    *
-    * Output: (entityCol, atividade, score_decaido) — raw event count
-    * and the decayed sum.
-    */
-  def decayedScore(
-      df: DataFrame, entityCol: String, dayCol: String, valueCol: String,
-      refDay: String): DataFrame = {
-    val ageDays = datediff(lit(refDay).cast("date"), col(dayCol))
-    val weeks = greatest(
-      floor(ageDays.cast("double") / 7.0).cast("int"), lit(0))
-    // 1/2^w as a double is exact, and for w <= 18 its decimal image at
-    // scale 18 is exact too — the cast below is lossless on both engines
-    val weight = when(col("__wk") > 18, lit(0.0))
-      .otherwise(lit(1.0) / expr("shiftleft(1L, __wk)").cast("double"))
-      .cast("decimal(19,18)")
-    df.withColumn("__wk", weeks)
-      .groupBy(col(entityCol))
-      .agg(
-        count(lit(1L)).as("atividade"),
-        sum(col(valueCol).cast("decimal(18,6)") * weight)
-          .cast("decimal(38,24)").as("score_decaido"))
-  }
-
-  /** [[decayedScore]] re-shaped for cross-engine report surfaces: the
-    * same per-week-halving semantics, but every term is an exact
-    * 64-bit integer and the ONLY floating-point step is one final
+    * per elapsed week — shaped for cross-engine report surfaces: every
+    * term is an exact 64-bit integer and the ONLY floating-point step is one final
     * correctly-rounded division — so the output is a plain DOUBLE that
     * hashes identically in every reader (float64 everywhere), with no
     * decimal column in sight.
@@ -151,7 +101,7 @@ object Timeseries {
     * correctly rounded in every engine, the divisor is exactly
     * representable, and one IEEE division is correctly rounded
     * everywhere. Null values contribute nothing (score 0 if all null).
-    * Same one-combinable-aggregation shape as [[decayedScore]].
+    * One combinable aggregation; the corpus never shuffles twice.
     */
   def decayedScoreScaled(
       df: DataFrame, entityCol: String, dayCol: String, valueCol: String,

@@ -23,20 +23,9 @@ object Upsert {
   def deleteConflicts(target: DataFrame, tagCol: String, tag: Column): DataFrame =
     target.filter(!(col(tagCol) <=> tag))
 
-  /** Upsert `incoming` into `target` on `keys`: incoming wins on conflict.
-    * The anti-join build side is the incoming key set only (projected before
-    * the join, so a small batch against a huge target broadcasts).
-    */
-  def upsert(target: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame = {
-    // Distinct renamed key set — avoids ambiguous self-join resolution when
-    // target and incoming share lineage.
-    val incomingKeys = incoming
-      .select(keys.map(k => col(k).as(s"__graft_k_$k")): _*).distinct()
-    val cond = keys.map(k => target(k) <=> col(s"__graft_k_$k")).reduce(_ && _)
-    target.join(incomingKeys, cond, "left_anti").unionByName(incoming)
-  }
-
-  /** [[upsert]] with a Bloom pre-filter over the incoming key set: target
+  /** Upsert `incoming` into `target` on `keys`, incoming winning on
+    * conflict: a null-safe anti-join on the incoming key set plus
+    * `unionByName`, with a Bloom pre-filter over the incoming key set: target
     * rows whose key hash is bloom-NEGATIVE provably have no conflict and
     * bypass the anti-join entirely — only the bloom-positive sliver (true
     * conflicts + fpp false positives) reaches the join. When incoming is
@@ -46,8 +35,9 @@ object Upsert {
     * codegen'd `BloomFilterMightContain` (the runtime-filter expression),
     * evaluated scan-side before any exchange.
     *
-    * Same output as [[upsert]] for every fpp: false positives only route a
-    * row through the exact anti-join, never change the result.
+    * Same output as the plain anti-join merge for every fpp: false
+    * positives only route a row through the exact anti-join, never change
+    * the result.
     */
   def upsertBloomPruned(
       target: DataFrame, incoming: DataFrame, keys: Seq[String],

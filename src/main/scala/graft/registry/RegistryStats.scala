@@ -580,17 +580,20 @@ private[graft] trait RegistryStats extends RegistryBase {
 
   /** q241's oracle: the fixed MM iteration unrolled — each step is one
     * decimal-accumulated denominator aggregation + one division, so
-    * the replay is mechanical (`iters` chained CTE pairs).
+    * the replay is mechanical (`iters` chained CTE pairs). Every CTE that
+    * is read more than once is `MATERIALIZED`: step k reads `p<k-1>`
+    * twice, and an inlined chain would repeat the `cmp` self-join about
+    * 2^k times.
     */
   private def btOracle(iters: Int): String = {
     val steps = (1 to iters).map { k =>
-      s"""d$k AS (SELECT g.i AS i,
+      s"""d$k AS MATERIALIZED (SELECT g.i AS i,
          |    CAST(sum(CASE WHEN pa.p + pb.p > 0 THEN
          |      CAST(CAST(g.nij AS DOUBLE) / (pa.p + pb.p)
          |        AS DECIMAL(38,12)) END) AS DECIMAL(38,12)) AS den
          |  FROM games g JOIN p${k - 1} pa ON g.i = pa.i
          |    JOIN p${k - 1} pb ON g.j = pb.i GROUP BY 1),
-         |p$k AS (SELECT fi.i AS i,
+         |p$k AS MATERIALIZED (SELECT fi.i AS i,
          |    CASE WHEN fi.vit2 = 0 THEN 0.0 ELSE
          |      CAST(fi.vit2 AS DOUBLE) / CAST(d$k.den AS DOUBLE) END AS p
          |  FROM fi LEFT JOIN d$k ON fi.i = d$k.i)""".stripMargin
@@ -600,28 +603,28 @@ private[graft] trait RegistryStats extends RegistryBase {
        |  JOIN part ON l_partkey = p_partkey),
        |cmp AS (SELECT a.m AS w, b.m AS lo FROM l a JOIN l b
        |  ON a.ok = b.ok AND a.m <> b.m AND a.d < b.d),
-       |wins AS (SELECT w, lo, CAST(count(*) AS BIGINT) AS n FROM cmp
+       |wins AS MATERIALIZED (SELECT w, lo, CAST(count(*) AS BIGINT) AS n FROM cmp
        |  GROUP BY 1, 2),
        |wt AS (SELECT w AS i, CAST(sum(n) AS BIGINT) AS vit
        |  FROM wins GROUP BY 1),
        |lt AS (SELECT lo AS i, CAST(sum(n) AS BIGINT) AS der
        |  FROM wins GROUP BY 1),
-       |items AS (SELECT coalesce(wt.i, lt.i) AS i,
+       |items AS MATERIALIZED (SELECT coalesce(wt.i, lt.i) AS i,
        |    coalesce(vit, 0) AS vit, coalesce(der, 0) AS der,
        |    coalesce(vit, 0) > 0 AND coalesce(der, 0) > 0 AS fit
        |  FROM wt FULL OUTER JOIN lt ON wt.i = lt.i),
        |f0 AS (SELECT i FROM items WHERE fit),
-       |wins2 AS (SELECT w, lo, n FROM wins
+       |wins2 AS MATERIALIZED (SELECT w, lo, n FROM wins
        |  WHERE w IN (SELECT i FROM f0) AND lo IN (SELECT i FROM f0)),
        |wt2 AS (SELECT w AS i, CAST(sum(n) AS BIGINT) AS vit2
        |  FROM wins2 GROUP BY 1),
-       |fi AS (SELECT f0.i, coalesce(wt2.vit2, 0) AS vit2
+       |fi AS MATERIALIZED (SELECT f0.i, coalesce(wt2.vit2, 0) AS vit2
        |  FROM f0 LEFT JOIN wt2 ON f0.i = wt2.i),
        |g0 AS (SELECT w AS i, lo AS j, n FROM wins2
        |  UNION ALL SELECT lo, w, n FROM wins2),
-       |games AS (SELECT i, j, CAST(sum(n) AS BIGINT) AS nij FROM g0
+       |games AS MATERIALIZED (SELECT i, j, CAST(sum(n) AS BIGINT) AS nij FROM g0
        |  GROUP BY 1, 2),
-       |p0 AS (SELECT i, CAST(1.0 AS DOUBLE) AS p FROM fi),
+       |p0 AS MATERIALIZED (SELECT i, CAST(1.0 AS DOUBLE) AS p FROM fi),
        |$steps,
        |z AS (SELECT CAST(sum(CAST(p AS DECIMAL(38,12)))
        |    AS DECIMAL(38,12)) AS z FROM p$iters)

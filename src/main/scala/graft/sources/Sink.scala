@@ -12,8 +12,8 @@ import graft.operators.Upsert
   * Spark-first that becomes a [[Sink]]: the TRANSFORM side stays one
   * declarative plan, and only the final materialization differs by target —
   * parquet directories ([[ParquetSink]]) or any JDBC database
-  * ([[JdbcSink]]). Upsert semantics match [[Upsert.upsert]]: incoming wins
-  * on key conflict.
+  * ([[JdbcSink]]). Upsert semantics match [[Upsert.upsertBloomPruned]]:
+  * incoming wins on key conflict.
   */
 trait Sink {
 
@@ -29,16 +29,9 @@ trait Sink {
   def read(spark: SparkSession, table: String): DataFrame
 
   /** Upsert `incoming` on `keys`: delete conflicting target rows, load the
-    * batch. Incoming wins on conflict, exactly [[Upsert.upsert]].
+    * batch. Incoming wins on conflict, exactly [[Upsert.upsertBloomPruned]].
     */
   def upsert(spark: SparkSession, incoming: DataFrame, table: String, keys: Seq[String]): Unit
-
-  /** Remove every target row whose key tuple appears in `keyRows` (one
-    * column per key, same names; extra columns ignored). The delete half
-    * of the changelog contract ([[graft.operators.Cdc]]): [[upsert]]
-    * covers inserts/updates, this covers tombstones.
-    */
-  def deleteKeys(spark: SparkSession, table: String, keys: Seq[String], keyRows: DataFrame): Unit
 }
 
 /** Parquet-directory sink: `root/<table>` per table, optional chunk-column
@@ -66,12 +59,6 @@ final class ParquetSink(root: String, chunkCol: Option[String] = None) extends S
     // Bloom-pruned merge: bloom-negative target rows stream scan→write
     // without touching the anti-join (see Upsert.upsertBloomPruned).
     stagedRewrite(spark, table)(Upsert.upsertBloomPruned(_, incoming, keys))
-
-  def deleteKeys(spark: SparkSession, table: String, keys: Seq[String], keyRows: DataFrame): Unit =
-    stagedRewrite(spark, table)(_.join(
-      org.apache.spark.sql.functions.broadcast(
-        keyRows.selectExpr(keys: _*).distinct()),
-      keys, "left_anti"))
 
   /** Rewrite the table through `transform`, staged to a sibling directory
     * and swapped in (parquet can't mutate in place, and overwriting the
@@ -131,9 +118,6 @@ final class JdbcSink(
     batchDelete(table, keys, incoming)
     append(incoming, table)
   }
-
-  def deleteKeys(spark: SparkSession, table: String, keys: Seq[String], keyRows: DataFrame): Unit =
-    batchDelete(table, keys, keyRows)
 
   /** Distributed batched DELETE of `keyRows`' key set — one connection per
     * partition, `batchSize` statements per round trip (the reference's

@@ -12,9 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    before a commit keeps reading the old, untouched directory — no
   *    torn reads, no partial files, ever (the staged-swap upsert's
   *    guarantee made durable across versions);
-  *  - any past version stays queryable (`readVersion(Some(n))`) until
-  *    an explicit [[vacuum]] — reproducing last week's training run
-  *    reads last week's corpus;
+  *  - any past version stays queryable (`readVersion(Some(n))`) —
+  *    reproducing last week's training run reads last week's corpus;
   *  - a FAILED commit (data written, head never flipped) leaves an
   *    orphan directory that no reader ever resolves — crash-safety by
   *    ordering, not by locks.
@@ -121,28 +120,5 @@ object Versioned {
     require(v >= 1 && v <= head,
       s"version $v was never committed (head is $head)")
     spark.read.parquet(versionDir(tableDir, v))
-  }
-
-  /** Committed versions still present on disk (vacuumed ones excluded),
-    * ascending.
-    */
-  def listVersions(spark: SparkSession, tableDir: String): Seq[Int] = {
-    val head = headVersion(spark, tableDir).getOrElse(return Seq.empty)
-    val f = fs(spark, tableDir)
-    (1 to head).filter(v => f.exists(new Path(versionDir(tableDir, v))))
-  }
-
-  /** Drop all but the newest `keep` committed versions' data
-    * directories. The head is never vacuumed; time travel to a vacuumed
-    * version fails at read (directory gone), which is the Delta/Iceberg
-    * behavior.
-    */
-  def vacuum(spark: SparkSession, tableDir: String, keep: Int): Unit = {
-    require(keep >= 1, s"need keep >= 1, got $keep")
-    val head = headVersion(spark, tableDir).getOrElse(return)
-    val f = fs(spark, tableDir)
-    (1 to head - keep).foreach { v =>
-      f.delete(new Path(versionDir(tableDir, v)), true)
-    }
   }
 }

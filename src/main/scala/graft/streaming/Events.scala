@@ -1,27 +1,14 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Event-stream operators: tumbling-window aggregation and gap-based
-  * sessionization, each in two equivalent forms:
-  *
-  *  - batch (DataFrame over the `events` table) — oracle-checkable;
-  *  - Structured Streaming (watermark + windowed agg / custom
-  *    `flatMapGroupsWithState` session state) — exercised by the scalatest
-  *    suite through MemoryStream.
-  *
-  * The batch and streaming forms share window semantics (epoch-aligned
-  * tumbling windows; >gap starts a new session) so a pipeline can switch
-  * between backfill and live ingestion without changing results.
+/** Event-table operators over the `events` table: tumbling-window
+  * aggregation, gap-based sessionization, interval joins, funnels, paths
+  * and attribution, each a batch DataFrame the oracle checks.
   */
 object Events {
-
-  // ---------------------------------------------------------------- batch
 
   /** Epoch-aligned tumbling-window aggregate (count + exact decimal sum). */
   def tumblingAgg(events: DataFrame, width: String = "1 hour"): DataFrame =
@@ -302,201 +289,5 @@ object Events {
         col("__first.__ttype").as("primeiro_tipo"),
         col("__last.__tid").as("ultimo_id"),
         col("__last.__ttype").as("ultimo_tipo"))
-  }
-
-  /** Streaming twin of [[intervalJoin]] — the canonical stream-stream join:
-    * watermarks on BOTH sides plus the time-range condition let Spark
-    * bound join state (each side's buffered rows expire once the other
-    * side's watermark passes the range). `left` must carry
-    * (user_id, gatilho_id, gatilho_ts), `right`
-    * (user_id, conversao_id, conversao_ts).
-    */
-  def intervalJoinStream(
-      left: DataFrame, right: DataFrame, boundMinutes: Int,
-      lateness: String = "1 hour"): DataFrame = {
-    val l = left.withWatermark("gatilho_ts", lateness)
-    val r = right.withColumnRenamed("user_id", "__uid_c")
-      .withWatermark("conversao_ts", lateness)
-    l.join(r,
-      col("user_id") === col("__uid_c") &&
-        col("conversao_ts") >= col("gatilho_ts") &&
-        col("conversao_ts") <= col("gatilho_ts") +
-          expr(s"INTERVAL $boundMinutes MINUTES"))
-      .select(col("user_id"), col("gatilho_id"), col("conversao_id"),
-        floor((unix_micros(col("conversao_ts")) - unix_micros(col("gatilho_ts")))
-          / 1000000L).cast("long").as("atraso_s"))
-  }
-
-  // ------------------------------------------------------------ streaming
-
-  /** Streaming twin of [[ingestDedup]]: state bounded by the watermark;
-    * keeps the first-seen event per key (equal to earliest-ts when the
-    * source delivers in event-time order).
-    */
-  def ingestDedupStream(
-      events: DataFrame, keys: Seq[String], lateness: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", lateness).dropDuplicatesWithinWatermark(keys)
-
-  /** Streaming twin of [[tumblingAgg]]: event-time window + watermark so
-    * state is bounded and late data beyond `lateness` is dropped.
-    */
-  def tumblingAggStream(
-      events: DataFrame, width: String = "1 hour",
-      lateness: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), width).as("janela"), col("event_type"))
-      .agg(
-        count(lit(1L)).as("eventos"),
-        sum(col("value").cast("decimal(28,6)")).cast("double").as("valor_total"))
-      .select(
-        col("janela.start").as("janela_inicio"),
-        col("janela.end").as("janela_fim"),
-        col("event_type"), col("eventos"), col("valor_total"))
-
-  /** Streaming twin of [[sessionWindowAgg]]: watermark-bounded native
-    * session windows — Spark merges and finalizes session state itself, no
-    * custom `flatMapGroupsWithState` needed (compare [[sessionizeStream]]).
-    * Sessions emit once the watermark passes their close (append mode).
-    */
-  def sessionWindowStream(
-      events: DataFrame, gap: String = "30 minutes",
-      lateness: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("__w"))
-      .agg(
-        count(lit(1L)).as("eventos"),
-        min(col("ts")).as("inicio"),
-        max(col("ts")).as("fim"))
-      .select(col("user_id"), col("eventos"), col("inicio"), col("fim"))
-
-  /** Stream-static enrichment: every micro-batch left-joins the (bounded)
-    * dimension — Spark re-plans the static side per batch, so a dim
-    * refreshed on disk is picked up without restarting the query; the
-    * broadcast keeps the stream side shuffle-free and the join stateless
-    * (no watermark needed, unlike the stream-stream [[intervalJoinStream]]).
-    */
-  def enrichStream(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(broadcast(dim), Seq(key), "left")
-
-  case class SessionEvent(user_id: Long, event_id: Long, ts: Timestamp)
-  case class SessionState(sessao: Long, eventos: Long, inicioUs: Long, fimUs: Long)
-  case class SessionOut(
-      user_id: Long, sessao: Long, eventos: Long, inicio: Timestamp, fim: Timestamp)
-
-  case class AsOfEvent(
-      event_id: Long, user_id: Long, ts: Timestamp, event_type: String, value: Double)
-  case class AsOfDimState(tsUs: Long, value: Double)
-  case class AsOfJoined(
-      event_id: Long, user_id: Long, ts: Timestamp, event_type: String,
-      value: Double, cfg_ts: Option[Timestamp], cfg_value: Option[Double])
-
-  /** Streaming as-of join: facts in the stream pick up the payload of the
-    * LATEST dim row (`event_type == dimType`) with the same key and
-    * timestamp at-or-before theirs — the streaming twin of
-    * [[graft.operators.AsOf.asOfJoin]] / the q91 native operator, the
-    * shape a live feature-store or rate-table lookup takes.
-    *
-    * State per key is ONE dim row (the latest), updated and probed in one
-    * `flatMapGroupsWithState` pass with each micro-batch's rows processed
-    * in (ts, dim-first, event_id) order — dims at a fact's exact
-    * timestamp match, like the batch form. O(keys) state, no timeline
-    * buffer; the trade is ordered-arrival semantics ACROSS batches: a
-    * fact arriving in a later batch than a dim that SUPERSEDED its
-    * at-or-before match joins against the superseding row's state (or
-    * none), where the batch form would recover the older dim row. Feeds
-    * that need full out-of-order recovery should run the batch operator
-    * over a watermark-complete table instead.
-    */
-  def asOfStream(
-      spark: SparkSession, events: Dataset[AsOfEvent],
-      dimType: String = "error"): Dataset[AsOfJoined] = {
-    import spark.implicits._
-    def us(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-    def fromUs(u: Long): Timestamp = {
-      val t = new Timestamp((u / 1000000L) * 1000L)
-      t.setNanos(((u % 1000000L) * 1000L).toInt)
-      t
-    }
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, batch: Iterator[AsOfEvent], state: GroupState[AsOfDimState]) =>
-          val sorted = batch.toSeq.sortBy(e =>
-            (us(e.ts), if (e.event_type == dimType) 0 else 1, e.event_id))
-          var cur = state.getOption
-          val out = Seq.newBuilder[AsOfJoined]
-          sorted.foreach { e =>
-            if (e.event_type == dimType) {
-              // keep the latest dim; an out-of-order OLDER dim never
-              // regresses the state
-              if (cur.forall(_.tsUs <= us(e.ts)))
-                cur = Some(AsOfDimState(us(e.ts), e.value))
-            } else {
-              val m = cur.filter(_.tsUs <= us(e.ts))
-              out += AsOfJoined(e.event_id, e.user_id, e.ts, e.event_type,
-                e.value, m.map(s => fromUs(s.tsUs)), m.map(_.value))
-            }
-          }
-          cur.foreach(state.update)
-          out.result().iterator
-      }
-  }
-
-  /** Streaming twin of [[sessionize]]: per-user custom state via
-    * `flatMapGroupsWithState`. Emits a session when the gap closes it; a
-    * processing-time timeout flushes the open session when the group goes
-    * quiet. State is one small record per active user — bounded.
-    */
-  def sessionizeStream(
-      spark: SparkSession, events: Dataset[SessionEvent],
-      gapMinutes: Int = 30,
-      timeout: GroupStateTimeout = GroupStateTimeout.ProcessingTimeTimeout()): Dataset[SessionOut] = {
-    import spark.implicits._
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
-    val useTimeout = timeout == GroupStateTimeout.ProcessingTimeTimeout()
-
-    def us(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), timeout) {
-        (userId: Long, batch: Iterator[SessionEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionOut(userId, s.sessao, s.eventos,
-              new Timestamp(s.inicioUs / 1000L), new Timestamp(s.fimUs / 1000L)))
-          } else {
-            val sorted = batch.toSeq.sortBy(e => (us(e.ts), e.event_id))
-            var cur = state.getOption
-            val closed = Seq.newBuilder[SessionOut]
-            sorted.foreach { e =>
-              val t = us(e.ts)
-              cur match {
-                case Some(s) if t - s.fimUs <= gapUs =>
-                  // out-of-order arrivals extend the session on BOTH ends;
-                  // events > gap before the current window still merge here
-                  // (cross-batch reordering beyond that needs event-time
-                  // sessionization, see tumblingAggStream's watermarking)
-                  cur = Some(s.copy(eventos = s.eventos + 1,
-                    inicioUs = math.min(s.inicioUs, t),
-                    fimUs = math.max(s.fimUs, t)))
-                case Some(s) =>
-                  closed += SessionOut(userId, s.sessao, s.eventos,
-                    new Timestamp(s.inicioUs / 1000L), new Timestamp(s.fimUs / 1000L))
-                  cur = Some(SessionState(s.sessao + 1, 1L, t, t))
-                case None =>
-                  cur = Some(SessionState(1L, 1L, t, t))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              if (useTimeout) state.setTimeoutDuration(s"$gapMinutes minutes")
-            }
-            closed.result().iterator
-          }
-      }
   }
 }

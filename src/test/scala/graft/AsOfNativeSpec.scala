@@ -72,7 +72,8 @@ class AsOfNativeSpec extends SparkSpec {
   }
 
   test("forward direction attaches the earliest at-or-after dim row") {
-    val got = AsOf.asOfJoinForwardNative(fact, dim, "k", "t", Seq("payload"))
+    val got = AsOf.asOfJoinNativeKeys(fact, dim, Seq("k"), "t", Seq("payload"),
+        "asof_next_", direction = "forward")
       .select("id", "asof_next_t", "asof_next_payload")
       .as[(Long, Option[Long], Option[String])].collect().sortBy(_._1).toSeq
     assert(got == Seq(
@@ -94,7 +95,8 @@ class AsOfNativeSpec extends SparkSpec {
       // unique (k, t) so ties between dim rows can't make either form
       // pick arbitrarily
       .groupBy("k", "t").agg(first("payload").as("payload"))
-    val fwd = AsOf.asOfJoinForwardNative(f, d, "k", "t", Seq("payload"), "n_")
+    val fwd = AsOf.asOfJoinNativeKeys(f, d, Seq("k"), "t", Seq("payload"), "n_",
+        direction = "forward")
       .select("id", "n_t", "n_payload")
       .as[(Long, Option[Long], Option[String])].collect().sortBy(_._1).toSeq
     // backward on negated ts = forward on the original axis
@@ -111,7 +113,8 @@ class AsOfNativeSpec extends SparkSpec {
     val f = Seq((1L, 1L, 12L), (2L, 1L, 18L), (3L, 1L, 15L), // tie → backward
       (4L, 1L, 3L), (5L, 1L, 99L), (6L, 2L, 1L), (7L, 3L, 5L))
       .toDF("id", "k", "t")
-    val got = AsOf.asOfJoinNearestNative(f, dim, "k", "t", Seq("payload"))
+    val got = AsOf.asOfJoinNativeKeys(f, dim, Seq("k"), "t", Seq("payload"),
+        "asof_near_", direction = "nearest")
       .select("id", "asof_near_t", "asof_near_payload")
       .as[(Long, Option[Long], Option[String])].collect().sortBy(_._1).toSeq
     assert(got == Seq(
@@ -131,12 +134,14 @@ class AsOfNativeSpec extends SparkSpec {
       (col("id") % 13).as("k"), ((col("id") * 31) % 89).as("t"),
       concat(lit("p"), col("id")).as("payload"))
       .groupBy("k", "t").agg(first("payload").as("payload"))
-    val near = AsOf.asOfJoinNearestNative(f, d, "k", "t", Seq("payload"), "x_")
+    val near = AsOf.asOfJoinNativeKeys(f, d, Seq("k"), "t", Seq("payload"), "x_",
+        direction = "nearest")
       .select("id", "x_t", "x_payload")
       .as[(Long, Option[Long], Option[String])].collect().sortBy(_._1).toSeq
     // reference: run backward and forward independently, choose per row
     val b = AsOf.asOfJoinNative(f, d, "k", "t", Seq("payload"), "b_")
-    val fw = AsOf.asOfJoinForwardNative(f, d, "k", "t", Seq("payload"), "f_")
+    val fw = AsOf.asOfJoinNativeKeys(f, d, Seq("k"), "t", Seq("payload"), "f_",
+      direction = "forward")
     val want = b.join(fw.select("id", "f_t", "f_payload"), "id")
       .select(col("id"), col("t"), col("b_t"), col("b_payload"), col("f_t"), col("f_payload"))
       .as[(Long, Long, Option[Long], Option[String], Option[Long], Option[String])]

@@ -116,61 +116,6 @@ class BpeSpec extends SparkSpec {
       s"surrogate halves leaked into symbols: $got")
   }
 
-
-  test("segment applies the learned merges greedily ('lowest' splits low|est</w>)") {
-    val merges = Seq(("e", "s"), ("es", "t"), ("est", "</w>"),
-      ("l", "o"), ("lo", "w"))
-    val out = Bpe.segment(
-        Seq((1L, "lowest")).toDF("doc_id", "text"), "doc_id", "text", merges)
-      .as[(Long, String, Seq[String])].collect().head
-    assert(out == ((1L, "lowest", Seq("low", "est</w>"))))
-  }
-
-  test("segmentFast equals the fold form on the Sennrich corpus") {
-    val docs = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
-      Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).toDF("text")
-    val merges = Bpe.train(docs, "text", numMerges = 6)
-      .as[(Int, String, String, Long)].collect().sortBy(_._1)
-      .map(m => (m._2, m._3)).toSeq
-    // segment BOTH seen and unseen words (unseen exercises partial
-    // merges and the no-applicable-pair exit)
-    val probe = Seq((1L, "low lower lowest newest widest news wide ow"))
-      .toDF("doc_id", "text")
-    val slow = Bpe.segment(probe, "doc_id", "text", merges)
-      .as[(Long, String, Seq[String])].collect().sortBy(_._2).toSeq
-    val fast = Bpe.segmentFast(probe, "doc_id", "text", merges)
-      .as[(Long, String, Seq[String])].collect().sortBy(_._2).toSeq
-    assert(fast == slow, s"fast $fast\nslow $slow")
-  }
-
-  test("segmentFast equals the fold form on real documents") {
-    val docs = Tables.documents(spark, sfDir)
-      .select("doc_id", "text").limit(40)
-    val merges = Bpe.train(docs, "text", numMerges = 10)
-      .as[(Int, String, String, Long)].collect().sortBy(_._1)
-      .map(m => (m._2, m._3)).toSeq
-    def norm(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, String, Seq[String])].collect()
-        .sortBy(t => (t._1, t._2)).toSeq
-    val slow = norm(Bpe.segment(docs, "doc_id", "text", merges))
-    val fast = norm(Bpe.segmentFast(docs, "doc_id", "text", merges))
-    assert(fast == slow)
-    assert(fast.nonEmpty && fast.exists(_._3.size > 1))
-  }
-
-  test("segmentFast takes a 10k-merge table without plan blow-up") {
-    // the fold form would nest 10k aggregate lambdas into one Catalyst
-    // plan here; the broadcast rank map never touches the plan at all
-    val noise = (0 until 9998).map(i => (s"x$i", s"y$i"))
-    val merges = Seq(("a", "b"), ("ab", Bpe.EndOfWord)) ++ noise
-    val out = Bpe.segmentFast(
-        Seq((1L, "ab ba")).toDF("doc_id", "text"), "doc_id", "text", merges)
-      .as[(Long, String, Seq[String])].collect().sortBy(_._2).toSeq
-    assert(out == Seq(
-      (1L, "ab", Seq("ab" + Bpe.EndOfWord)),
-      (1L, "ba", Seq("b", "a", Bpe.EndOfWord))))
-  }
-
   test("minFreq stops the loop before degenerate merges") {
     val docs = Seq("a b").toDF("text")
     // every pair occurs once — below the default minFreq of 2

@@ -483,11 +483,17 @@ class CurationSpec extends SparkSpec {
     }.toDF("doc_id", "source")
     val pairs = (0L until 40L).map(s => (s * 2, s * 2 + 1))
       .toDF("id_a", "id_b")
+    // (pairs, pairs whose two docs land on different sides)
+    def leakage(split: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val side = split.select("doc_id", "split")
+      val both = pairs
+        .join(side.toDF("id_a", "split_a"), "id_a")
+        .join(side.toDF("id_b", "split_b"), "id_b")
+      (both.count(), both.filter(col("split_a") =!= col("split_b")).count())
+    }
 
     val byGroup = Curation.leakageSafeSplit(docs, "source", valPct = 30)
-    val (nPairs, leakedGroup) = Curation
-      .splitLeakage(pairs, byGroup.select("doc_id", "split"), "doc_id")
-      .as[(Long, Long)].head()
+    val (nPairs, leakedGroup) = leakage(byGroup)
     assert(nPairs == 40L && leakedGroup == 0L,
       s"group split must never straddle a same-site pair, leaked $leakedGroup")
 
@@ -505,9 +511,7 @@ class CurationSpec extends SparkSpec {
     // the CONTROL: hashing the doc id splits twins apart
     val byDoc = docs.withColumn("split",
       when(Curation.pctHash(col("doc_id")) < 30, "val").otherwise("train"))
-    val (_, leakedDoc) = Curation
-      .splitLeakage(pairs, byDoc.select("doc_id", "split"), "doc_id")
-      .as[(Long, Long)].head()
+    val (_, leakedDoc) = leakage(byDoc)
     assert(leakedDoc > 0L,
       "doc-level split on this corpus should strand at least one twin pair")
   }
@@ -542,47 +546,6 @@ class CurationSpec extends SparkSpec {
     val again = Curation.dsirScore(target, raw, "doc_id", "text", buckets = 256)
       .as[(Long, Long, Double, Boolean)].collect().map(r => r._1 -> r).toMap
     assert(again == out)
-
-    // the split surface: offline fit + apply equals the fused path
-    val ratios = Curation.dsirFit(target, raw, "text", buckets = 256)
-    val split = Curation.dsirApply(raw, ratios, "doc_id", "text", buckets = 256)
-      .as[(Long, Long, Double, Boolean)].collect().map(r => r._1 -> r).toMap
-    assert(split == out, "dsirFit+dsirApply must equal the fused dsirScore")
-  }
-
-  test("dsirApply in foreachBatch scores a stream identically to batch " +
-      "(offline-fit model)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val target = (0L until 20L)
-      .map(i => (i, "alpha beta alpha gamma beta alpha"))
-      .toDF("doc_id", "text")
-    val rawRows = (100L until 110L)
-      .map(i => (i, "alpha beta gamma alpha beta")) ++
-      (200L until 210L).map(i => (i, "zeta yota kappa zeta yota kappa"))
-    val raw = rawRows.toDF("doc_id", "text")
-    val ratios = Curation.dsirFit(target, raw, "text", buckets = 256)
-      .localCheckpoint() // the offline model artifact
-
-    val got = scala.collection.mutable.Set.empty[(Long, Long, Double, Boolean)]
-    val mem = MemoryStream[(Long, String)]
-    val q = mem.toDF.toDF("doc_id", "text").writeStream
-      .outputMode("append").foreachBatch {
-        (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        got ++= Curation
-          .dsirApply(batch, ratios, "doc_id", "text", buckets = 256)
-          .as[(Long, Long, Double, Boolean)].collect()
-        ()
-      }.start()
-    try {
-      val (b1, b2) = rawRows.splitAt(rawRows.length / 2)
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val want = Curation.dsirApply(raw, ratios, "doc_id", "text", buckets = 256)
-      .as[(Long, Long, Double, Boolean)].collect().toSet
-    assert(got.toSet == want,
-      "per-micro-batch scoring must equal batch scoring of the union")
   }
 
   test("ppsSample: uniform weights hit the target count with multiplicity 1; " +

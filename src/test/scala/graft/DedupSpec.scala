@@ -245,21 +245,12 @@ class DedupSpec extends SparkSpec {
       .select("vec_id").as[Long].collect().toSet
     assert(kept == again)
 
-    // a prebuilt index reproduces the one-shot result without re-fitting,
-    // including after a parquet round-trip of the index (the incremental
-    // pipeline shape: build/persist once, reuse per batch)
+    // a prebuilt index reproduces the one-shot result without re-fitting
     val idx = Dedup.semanticDedupIndex(df, "vec_id", "embedding", nCells = 2)
     val viaIdx = Dedup.semanticDedup(
       df, idx, "vec_id", "embedding", threshold = 0.999, maxBlock = 1000)
       .select("vec_id").as[Long].collect().toSet
     assert(viaIdx == kept)
-    val path = s"${GraftSession.scratchRoot}/graft-semdedup-idx"
-    graft.llm.Ivf.writeIndex(idx, path)
-    val viaDisk = Dedup.semanticDedup(
-      df, graft.llm.Ivf.readIndex(spark, path), "vec_id", "embedding",
-      threshold = 0.999, maxBlock = 1000)
-      .select("vec_id").as[Long].collect().toSet
-    assert(viaDisk == kept)
   }
 
   test("containment catches engulfed prefixes that Jaccard-LSH misses") {
@@ -334,32 +325,6 @@ class DedupSpec extends SparkSpec {
       val r = byId(2000000L + i)
       assert(!r._2 && r._3 == 0L && r._4, s"fresh doc ${r._1} must be kept")
     }
-  }
-
-  test("ingestGateIndexed over a persisted band index equals the inline gate") {
-    val corpus = Tables.documents(spark, sfDir).select("doc_id", "text")
-      .filter(col("doc_id") < 200)
-    val toks = llm.TextAnalysis.tokens(col("text"))
-    val batch = corpus.filter(col("doc_id") % 9 === 0)
-      .select((col("doc_id") + 3000000).as("doc_id"), col("text"))
-      .unionByName(corpus.filter(col("doc_id") % 9 === 1)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat_ws(" ", slice(toks, 2, 100000)).as("text")))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bandindex").toString
-    Dedup.writeBandIndex(corpus, "doc_id", "text", dir)
-    graft.llm.CacheScope.releaseAll()
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "exato", "n_quase_dups", "mantido")
-        .as[(Long, Boolean, Long, Boolean)].collect().toSet
-    val indexed = rows(Dedup.ingestGateIndexed(
-      batch, Dedup.readBandIndex(spark, dir), "doc_id", "text", 0.5))
-    graft.llm.CacheScope.releaseAll()
-    val inline = rows(Dedup.ingestGate(batch, corpus, "doc_id", "text", 0.5))
-    graft.llm.CacheScope.releaseAll()
-    assert(indexed == inline, "persisted-index gate must match inline gate")
-    assert(indexed.exists(r => r._2) && indexed.exists(r => r._3 > 0),
-      "plants must exercise both checks")
   }
 
   test("dHash56 is resolution-invariant; hammingNearDups finds the " +
@@ -460,54 +425,8 @@ class DedupSpec extends SparkSpec {
       maxDist = 4, minFrames = 5).isEmpty)
   }
 
-  test("image hash index gates batches; streaming gate self-extends " +
-      "(late perceptual twin rejected)") {
-    import graft.llm.Multimodal
-    def hashed(rows: Seq[(Long, String, Int)]) = {
-      val blobbed = Multimodal.encodePatternPng(
-        rows.toDF("doc_id", "seed", "delta"), "seed", "delta", "payload")
-      Multimodal.decodeBatches(blobbed, "payload",
-          kernel = Multimodal.dHash56, decodedSchema = Multimodal.DHashSchema)
-        .select("doc_id", "dhash")
-    }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-imgindex").toString
-    // corpus: patterns 1..10
-    Dedup.writeImageHashIndex(
-      hashed((1L to 10L).map(i => (i, i.toString, 0))),
-      "doc_id", "dhash", dir)
-
-    // batch: an exact perceptual dup of 3, a one-block edit of 7, a fresh
-    val batch = hashed(Seq((103L, "3", 0), (107L, "7", 8), (200L, "200", 0)))
-    val verdict = Dedup.imageIngestGate(
-        batch, spark.read.parquet(dir), "doc_id", "dhash", maxDist = 4)
-      .as[(Long, Long, Boolean)].collect().map(r => r._1 -> r).toMap
-    assert(!verdict(103L)._3 && verdict(103L)._2 >= 1L, "exact dup rejected")
-    assert(!verdict(107L)._3, "one-block edit rejected")
-    assert(verdict(200L)._3 && verdict(200L)._2 == 0L, "fresh accepted")
-
-    // streaming: twin "300" arrives a micro-batch AFTER its original —
-    // neither is in the corpus; the self-extended index must reject it
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val accepted = scala.collection.mutable.Set.empty[Long]
-    val mem = MemoryStream[(Long, Long)]
-    val hashRows = hashed(Seq((300L, "300", 0), (301L, "300", 0)))
-      .as[(Long, Long)].collect().toMap
-    val q = Dedup.imageGateStream(
-      mem.toDF.toDF("doc_id", "dhash"), dir, "doc_id", "dhash", maxDist = 4,
-      b => accepted ++= b.select("doc_id").as[Long].collect())
-    try {
-      mem.addData(Seq((300L, hashRows(300L)))); q.processAllAvailable()
-      mem.addData(Seq((301L, hashRows(301L)))); q.processAllAvailable()
-    } finally q.stop()
-    assert(accepted.contains(300L), "first arrival is fresh")
-    assert(!accepted.contains(301L),
-      "the index must have self-extended to reject the late twin")
-  }
-
   test("signature index: the persisted audit equals the from-scratch " +
-      "estimator, append covers growth, and the audit plan reads no text") {
+      "estimator and the audit plan reads no text") {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .filter(col("doc_id") < 300)
     val toks = llm.TextAnalysis.tokens(col("text"))
@@ -520,12 +439,7 @@ class DedupSpec extends SparkSpec {
 
     val dir = java.nio.file.Files
       .createTempDirectory("graft-sigindex").toString
-    // write half, append the rest: the audit must see the grown index
-    Dedup.writeSignatureIndex(
-      corpus.filter(col("doc_id") % 2 === 0), "doc_id", "text", dir)
-    graft.llm.CacheScope.releaseAll()
-    Dedup.appendSignatureIndex(
-      corpus.filter(col("doc_id") % 2 === 1), "doc_id", "text", dir)
+    Dedup.writeSignatureIndex(corpus, "doc_id", "text", dir)
     graft.llm.CacheScope.releaseAll()
 
     val audit = Dedup.estimatedJaccardPairsIndexed(
@@ -542,39 +456,6 @@ class DedupSpec extends SparkSpec {
       s"the audit must scan ONLY the signature index, got $scans")
     assert(audit.as[(Long, Long, Double)].collect().toSet == fromScratch,
       "persisted audit must replay the from-scratch estimator exactly")
-
-    // the signature-only gate: batch of planted variants vs the corpus
-    // index — verdicts must agree with the cross-boundary slice of a
-    // from-scratch union audit over the same documents
-    val batch = docs.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 2000000).as("doc_id"),
-        concat_ws(" ", slice(toks, 2, 100000)).as("text"))
-    Dedup.writeSignatureIndex(corpus, "doc_id", "text", dir + "-full")
-    graft.llm.CacheScope.releaseAll()
-    val gate = Dedup.estimatedGateIndexed(
-        batch, Dedup.readSignatureIndex(spark, dir + "-full"),
-        "doc_id", "text", 0.5)
-      .as[(Long, Long, Boolean)].collect()
-      .map { case (id, n, kept) => id -> (n, kept) }.toMap
-    graft.llm.CacheScope.releaseAll()
-    val unionAudit = Dedup.estimatedJaccardPairs(
-        corpus.unionByName(batch), "doc_id", "text", 0.5)
-      .as[(Long, Long, Double)].collect()
-    graft.llm.CacheScope.releaseAll()
-    val batchIds = batch.select("doc_id").as[Long].collect().toSet
-    val expected = unionAudit
-      .map { case (a, b, _) => if (batchIds(a) && !batchIds(b)) (a, 1L)
-        else if (batchIds(b) && !batchIds(a)) (b, 1L) else (-1L, 0L) }
-      .filter(_._1 >= 0)
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
-    assert(gate.keySet == batchIds, "one verdict per batch doc")
-    for (id <- batchIds) {
-      val (n, kept) = gate(id)
-      assert(n == expected.getOrElse(id, 0L),
-        s"gate count for $id: got $n, want ${expected.getOrElse(id, 0L)}")
-      assert(kept == (n == 0L))
-    }
-    assert(gate.values.exists(!_._2), "plants must reject some batch docs")
   }
 
   test("crossModalConsistency: pairs only within exact-text groups, " +

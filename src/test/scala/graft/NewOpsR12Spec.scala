@@ -83,20 +83,6 @@ class NewOpsR12Spec extends SparkSpec {
       s"winnow density $density out of the ~2/(w+1)=0.4 band")
   }
 
-  test("fingerprintPairs finds the planted near-dup, jaccard-exact") {
-    val base = Tables.documents(spark, sfDir).limit(40)
-    val variants = base.filter(col("doc_id") % 10 === 0)
-      .withColumn("doc_id", col("doc_id") + 1000000L)
-      .withColumn("text", concat(col("text"), lit(" trailing marker")))
-    val pairs = Winnow.fingerprintPairs(
-        base.unionByName(variants), "doc_id", "text", 4, 4, minShared = 2)
-      .select("id_a", "id_b", "shared", "jaccard")
-      .as[(Long, Long, Long, Double)].collect()
-    val planted = pairs.filter { case (a, b, _, _) => b - a == 1000000L }
-    assert(planted.nonEmpty, "planted near-dups must surface")
-    assert(planted.forall(_._4 > 0.5), "near-identical docs share most fingerprints")
-  }
-
   // ---- margin mining ----------------------------------------------------
 
   test("marginMine: hub correction beats raw cosine, output is argmax per id_a") {

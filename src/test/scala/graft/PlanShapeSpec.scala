@@ -66,7 +66,7 @@ class PlanShapeSpec extends SparkSpec {
     def proj(df: org.apache.spark.sql.DataFrame) = df
       .select("l_orderkey", "l_linenumber", "l_shipdate", "periodo_codigo")
       .collect().map(_.toSeq).toSet
-    val viaRange = proj(DimJoins.periodLookup(
+    val viaRange = proj(ReferenceForms.periodLookup(
       li, to_date(col("l_shipdate")), periods, "data_inicio", "data_fim"))
     val viaBucketed = proj(DimJoins.periodLookupBucketed(
       li, to_date(col("l_shipdate")), periods, "data_inicio", "data_fim"))
@@ -84,7 +84,7 @@ class PlanShapeSpec extends SparkSpec {
     def proj(df: org.apache.spark.sql.DataFrame) = df
       .select("l_orderkey", "l_linenumber", "l_shipdate", "periodo_codigo")
       .collect().map(_.toSeq).toSet
-    val viaRange = proj(DimJoins.periodLookup(
+    val viaRange = proj(ReferenceForms.periodLookup(
       li, to_date(col("l_shipdate")), periods, "data_inicio", "data_fim"))
     val aligned = DimJoins.periodLookupMonthAligned(
       li, col("l_shipdate"), periods, "data_inicio")
@@ -206,7 +206,7 @@ class PlanShapeSpec extends SparkSpec {
       s"bloom probe not a Filter:\n$plan")
     // identical output to the exact path: false positives only re-route
     // rows through the anti-join, never change the result
-    val plain = Upsert.upsert(target, incoming, Seq("o_orderkey"))
+    val plain = ReferenceForms.upsert(target, incoming, Seq("o_orderkey"))
       .collect().map(_.toSeq).toSet
     assert(pruned.collect().map(_.toSeq).toSet == plain)
   }

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Pure-expression forms of native functions: the composed Spark
-  * expressions each kernel replaces, kept as the references FunctionsSpec
-  * checks the native expressions against and as documentation of the
+/** Plain forms of native functions and operators: the composed Spark
+  * expressions and joins each kernel or fast path replaces, kept as the
+  * references the specs check them against and as documentation of the
   * algorithms.
   */
 object ReferenceForms {
@@ -51,4 +51,57 @@ object ReferenceForms {
     aggregate(
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
+
+  /** [[graft.llm.TextAnalysis.shingleSetSorted]] before sorting: the
+    * distinct word n-grams in first-seen order.
+    */
+  def shingleSet(toks: Column, n: Int): Column =
+    array_distinct(graft.llm.TextAnalysis.shingles(toks, n))
+
+  /** [[graft.operators.Upsert.upsertBloomPruned]] without the Bloom
+    * pre-filter: drop target rows whose key is in the incoming batch
+    * (null-safe), then append the batch.
+    */
+  def upsert(target: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame = {
+    // renamed key set: no ambiguous self-join when both sides share lineage
+    val incomingKeys = incoming
+      .select(keys.map(k => col(k).as(s"__graft_k_$k")): _*).distinct()
+    val cond = keys.map(k => target(k) <=> col(s"__graft_k_$k")).reduce(_ && _)
+    target.join(incomingKeys, cond, "left_anti").unionByName(incoming)
+  }
+
+  /** [[graft.operators.Timeseries.decayedScoreScaled]] as a DECIMAL sum:
+    * the weight `1/2^w` is exact at scale 18 for w <= 18 (0 beyond), each
+    * term an exact DECIMAL(18,6) x DECIMAL(19,18) product, and the score
+    * stays DECIMAL(38,24). Future-dated rows clamp to week 0.
+    */
+  def decayedScore(
+      df: DataFrame, entityCol: String, dayCol: String, valueCol: String,
+      refDay: String): DataFrame = {
+    val ageDays = datediff(lit(refDay).cast("date"), col(dayCol))
+    val weeks = greatest(
+      floor(ageDays.cast("double") / 7.0).cast("int"), lit(0))
+    val weight = when(col("__wk") > 18, lit(0.0))
+      .otherwise(lit(1.0) / expr("shiftleft(1L, __wk)").cast("double"))
+      .cast("decimal(19,18)")
+    df.withColumn("__wk", weeks)
+      .groupBy(col(entityCol))
+      .agg(
+        count(lit(1L)).as("atividade"),
+        sum(col(valueCol).cast("decimal(18,6)") * weight)
+          .cast("decimal(38,24)").as("score_decaido"))
+  }
+
+  /** The period-dim range lookup that
+    * [[graft.operators.DimJoins.periodLookupBucketed]] and
+    * [[graft.operators.DimJoins.periodLookupMonthAligned]] replace: a
+    * broadcast nested-loop left join on `start <= dateExpr <= end`.
+    */
+  def periodLookup(
+      fact: DataFrame, dateExpr: Column,
+      periods: DataFrame, startCol: String, endCol: String): DataFrame =
+    fact.join(
+      broadcast(periods),
+      dateExpr >= periods(startCol) && dateExpr <= periods(endCol),
+      "left")
 }

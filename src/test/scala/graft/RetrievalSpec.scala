@@ -271,20 +271,6 @@ class RetrievalSpec extends SparkSpec {
     graft.llm.CacheScope.releaseAll()
     assert(got == inline,
       "two-append indexed scores must equal the from-scratch path exactly")
-    // the SAME index serves the tfidf ranker: stored tf-only norms
-    val tfInline = Retrieval
-      .tfidfTopK(docs, queries, "doc_id", "text", 5, maxDfFraction = 1.0)
-      .select("query_id", "doc_id", "score", "posicao")
-      .as[(Long, Long, Double, Int)].collect().toSet
-    graft.llm.CacheScope.releaseAll()
-    val tfIndexed = Retrieval.tfidfTopKIndexed(
-        Retrieval.readPostingsIndex(spark, dir), queries, "doc_id", "text",
-        5, maxDfFraction = 1.0)
-      .select("query_id", "doc_id", "score", "posicao")
-      .as[(Long, Long, Double, Int)].collect().toSet
-    graft.llm.CacheScope.releaseAll()
-    assert(tfIndexed == tfInline && tfIndexed.nonEmpty,
-      "indexed tfidf must equal the from-scratch path exactly")
   }
 
   test("evalRanking: exact recall and reciprocal rank per query, " +
@@ -322,30 +308,6 @@ class RetrievalSpec extends SparkSpec {
       math.abs(got(1L)._4 - want1) < 1e-15, s"q1: ${got(1L)}")
     assert(got(2L) == ((2L, 1L, 0L, 0.0)), s"q2: ${got(2L)}")
     assert(got(3L) == ((3L, 1L, 0L, 0.0)), s"q3: ${got(3L)}")
-  }
-
-  test("evalNdcg: graded gains, log2 discount, ideal normalization — " +
-      "hand-exact; perfect rankings score 1") {
-    def lg(x: Double) = math.log(x) / math.log(2.0)
-    val ranking = Seq((1L, 10L, 1), (1L, 11L, 2), (1L, 12L, 3))
-      .toDF("query_id", "doc_id", "posicao")
-    val rel = Seq((1L, 10L, 1.0), (1L, 11L, 3.0), (1L, 13L, 2.0))
-      .toDF("query_id", "doc_id", "ganho")
-    val (dcg, idcg, ndcg) = graft.llm.Retrieval
-      .evalNdcg(ranking, rel, k = 3)
-      .select("dcg", "idcg", "ndcg")
-      .as[(Double, Double, Double)].head()
-    val wantDcg = 1.0 / lg(2.0) + 3.0 / lg(3.0)
-    val wantIdcg = 3.0 / lg(2.0) + 2.0 / lg(3.0) + 1.0 / lg(4.0)
-    assert(math.abs(dcg - wantDcg) < 1e-12, s"dcg $dcg vs $wantDcg")
-    assert(math.abs(idcg - wantIdcg) < 1e-12)
-    assert(math.abs(ndcg - wantDcg / wantIdcg) < 1e-12)
-    // a ranking in exact ideal order scores 1.0
-    val perfect = Seq((1L, 11L, 1), (1L, 13L, 2), (1L, 10L, 3))
-      .toDF("query_id", "doc_id", "posicao")
-    val p = graft.llm.Retrieval.evalNdcg(perfect, rel, k = 3)
-      .select("ndcg").as[Double].head()
-    assert(math.abs(p - 1.0) < 1e-12, s"perfect ranking must score 1, got $p")
   }
 
   test("tfidf lnc.ltc scores equal a hand computation; no-overlap docs " +

@@ -43,37 +43,6 @@ class SinkSpec extends SparkSpec {
     val got = sink.read(spark, table).as[(Long, String, Double)].collect().toSet
     assert(got == Set(
       (1L, "a", 10.0), (2L, "b2", 99.0), (3L, "c", 30.0), (4L, "d", 40.0)))
-
-    // deleteKeys: exactly the keyed rows go; absent keys are a no-op
-    sink.deleteKeys(spark, table, Seq("k"), Seq(2L, 99L).toDF("k"))
-    val afterDel = sink.read(spark, table).as[(Long, String, Double)].collect().toSet
-    assert(afterDel == Set((1L, "a", 10.0), (3L, "c", 30.0), (4L, "d", 40.0)))
-  }
-
-  private def changelogFoldCheck(sink: Sink, table: String): Unit = {
-    import graft.operators.Cdc
-    val target = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
-      .toDF("k", "tag", "v")
-    val changes = Seq(
-      (2L, "b2", 21.0, 1L, "U"), (2L, "dead", 0.0, 2L, "D"),
-      (3L, "dead", 0.0, 1L, "D"), (3L, "c2", 33.0, 2L, "U"),
-      (4L, "d", 40.0, 1L, "I"))
-      .toDF("k", "tag", "v", "seq", "op")
-    sink.overwrite(target, table)
-    Cdc.applyChangelogSink(spark, sink, table, changes, Seq("k"), "seq", "op")
-    val got = sink.read(spark, table).as[(Long, String, Double)].collect().toSet
-    val inPlan = Cdc.applyChangelog(target, changes, Seq("k"), "seq", "op")
-      .as[(Long, String, Double)].collect().toSet
-    assert(got == inPlan &&
-      got == Set((1L, "a", 10.0), (3L, "c2", 33.0), (4L, "d", 40.0)))
-  }
-
-  test("ParquetSink folds a changelog like the in-plan applyChangelog") {
-    changelogFoldCheck(parquetSink(), "t_cdc")
-  }
-
-  test("JdbcSink folds a changelog like the in-plan applyChangelog") {
-    changelogFoldCheck(derbySink("cdc"), "t_cdc")
   }
 
   test("ParquetSink honors the sink contract") {
@@ -92,7 +61,7 @@ class SinkSpec extends SparkSpec {
     sink.upsert(spark, incoming, "t_merge", Seq("k"))
     val viaSink = sink.read(spark, "t_merge")
       .as[(Long, Double)].collect().toSet
-    val viaPlan = Upsert.upsert(target, incoming, Seq("k"))
+    val viaPlan = ReferenceForms.upsert(target, incoming, Seq("k"))
       .as[(Long, Double)].collect().toSet
     assert(viaSink == viaPlan)
   }
@@ -104,7 +73,7 @@ class SinkSpec extends SparkSpec {
     sink.overwrite(target, "t_txn")
     sink.upsertTransactional(spark, incoming, "t_txn", Seq("k"))
     val viaSink = sink.read(spark, "t_txn").as[(Long, Double)].collect().toSet
-    val viaPlan = Upsert.upsert(target, incoming, Seq("k"))
+    val viaPlan = ReferenceForms.upsert(target, incoming, Seq("k"))
       .as[(Long, Double)].collect().toSet
     assert(viaSink == viaPlan)
     // batch cap: fact-scale batches are refused, not silently collected

@@ -6,10 +6,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.streaming.Events
-import graft.streaming.Events.{SessionEvent, SessionOut}
 
-/** Structured Streaming twins verified against their batch forms through
-  * MemoryStream — same data, same windows, same results.
+/** Batch operators fed by Structured Streaming: foreachBatch drives the
+  * sinks and the postings index through MemoryStream with the batch
+  * results; the event-window operators are checked against each other.
   */
 class StreamingSpec extends SparkSpec {
 
@@ -25,120 +25,7 @@ class StreamingSpec extends SparkSpec {
     (5L, ts("2026-01-01 13:00:00"), 8L, "view", 3.0),
   )
 
-  test("streaming tumbling agg equals the batch tumbling agg") {
-    val batch = Events.tumblingAgg(
-      sample.toDF("event_id", "ts", "user_id", "event_type", "value"))
-      .collect().map(_.toSeq).toSet
-
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val streamed = Events.tumblingAggStream(
-      mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value"))
-    val q = streamed.writeStream
-      .format("memory").queryName("win_agg").outputMode("complete").start()
-    try {
-      mem.addData(sample)
-      q.processAllAvailable()
-      val got = spark.table("win_agg").collect().map(_.toSeq).toSet
-      assert(got == batch, s"stream $got\nbatch $batch")
-    } finally q.stop()
-  }
-
-  test("streaming ingest dedup drops later duplicates within the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val deduped = Events.ingestDedupStream(
-      mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value"),
-      Seq("user_id", "event_type"))
-    val q = deduped.writeStream
-      .format("memory").queryName("dedup").outputMode("append").start()
-    try {
-      mem.addData(Seq(
-        (1L, ts("2026-01-01 10:00:00"), 7L, "view", 1.0),
-        (2L, ts("2026-01-01 10:01:00"), 7L, "view", 2.0)))
-      q.processAllAvailable()
-      mem.addData(Seq(
-        (3L, ts("2026-01-01 10:02:00"), 7L, "view", 3.0),
-        (4L, ts("2026-01-01 10:02:00"), 7L, "buy", 4.0)))
-      q.processAllAvailable()
-      val ids = spark.table("dedup").select("event_id").as[Long].collect().toSet
-      assert(ids == Set(1L, 4L), s"got $ids")
-    } finally q.stop()
-
-    // batch twin keeps the earliest per key
-    val batchIds = Events.ingestDedup(
-      sample.toDF("event_id", "ts", "user_id", "event_type", "value"),
-      Seq("user_id", "event_type"))
-      .select("event_id").as[Long].collect().toSet
-    assert(batchIds == Set(1L, 3L, 4L))
-  }
-
-  test("streaming canonical-URL ingest gate drops a later messy refetch " +
-      "variant, admits new canonical forms") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val gated = graft.llm.Curation.urlIngestGateStream(
-      mem.toDF.toDF("id", "ts", "url"), "ts", "url")
-    val q = gated.writeStream
-      .format("memory").queryName("url_gate").outputMode("append").start()
-    try {
-      mem.addData(Seq(
-        (1L, ts("2026-01-01 10:00:00"), "https://site.com/a?b=2&a=1")))
-      q.processAllAvailable()
-      mem.addData(Seq(
-        // messy refetch of the SAME page: case, www, :443, trailing
-        // slash, reordered + tracking params, fragment
-        (2L, ts("2026-01-01 10:05:00"),
-          "HTTPS://WWW.site.com:443/a/?a=1&utm_source=x&b=2#frag"),
-        // genuinely new canonical form
-        (3L, ts("2026-01-01 10:06:00"), "https://site.com/b")))
-      q.processAllAvailable()
-      val ids = spark.table("url_gate").select("id").as[Long].collect().toSet
-      assert(ids == Set(1L, 3L), s"got $ids")
-    } finally q.stop()
-  }
-
-  test("file-source e2e: dedup and windowed agg over real on-disk micro-batches") {
-    // Closes the MemoryStream-only gap: a genuine file source (directory
-    // listing, offset tracking, schema enforcement) feeding the streaming
-    // operators, with each micro-batch arriving as a new parquet file.
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-src").toString
-    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
-    def writeBatch(rows: Seq[(Long, Timestamp, Long, String, Double)]): Unit =
-      rows.toDF(cols: _*).coalesce(1).write.mode("append").parquet(dir)
-
-    writeBatch(Seq(
-      (1L, ts("2026-01-01 10:00:00"), 7L, "view", 1.0),
-      (2L, ts("2026-01-01 10:01:00"), 7L, "view", 2.0)))
-
-    val schema = sample.toDF(cols: _*).schema
-    val src = spark.readStream.schema(schema).parquet(dir)
-    val deduped = Events.ingestDedupStream(src, Seq("user_id", "event_type"))
-    val q = deduped.writeStream
-      .format("memory").queryName("file_dedup").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      writeBatch(Seq(
-        (3L, ts("2026-01-01 10:02:00"), 7L, "view", 3.0),
-        (4L, ts("2026-01-01 10:02:00"), 7L, "buy", 4.0)))
-      q.processAllAvailable()
-      val ids = spark.table("file_dedup").select("event_id").as[Long].collect().toSet
-      assert(ids == Set(1L, 4L), s"got $ids")
-    } finally q.stop()
-
-    // windowed agg over the same files must equal the batch form on them
-    val agg = Events.tumblingAggStream(spark.readStream.schema(schema).parquet(dir))
-    val q2 = agg.writeStream
-      .format("memory").queryName("file_agg").outputMode("complete").start()
-    try {
-      q2.processAllAvailable()
-      val got = spark.table("file_agg").collect().map(_.toSeq).toSet
-      val batch = Events.tumblingAgg(spark.read.parquet(dir)).collect().map(_.toSeq).toSet
-      assert(got == batch, s"stream $got\nbatch $batch")
-    } finally q2.stop()
-  }
-
-  test("native session_window: batch matches cumsum form; stream emits closed sessions") {
+  test("native session_window: batch matches the cumsum form") {
     // the sample includes an EXACTLY-30min spacing (user 7, 10:40 -> 11:10):
     // both forms merge it, pinning the boundary semantics to strictly->
     val df = sample.toDF("event_id", "ts", "user_id", "event_type", "value")
@@ -148,102 +35,6 @@ class StreamingSpec extends SparkSpec {
       .select("user_id", "eventos", "inicio", "fim")
       .as[(Long, Long, Timestamp, Timestamp)].collect().toSet
     assert(viaNative == viaCumsum, s"native $viaNative\ncumsum $viaCumsum")
-
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val q = Events.sessionWindowStream(
-        mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value"))
-      .writeStream.format("memory").queryName("sw_sessions").outputMode("append").start()
-    try {
-      mem.addData(sample)
-      q.processAllAvailable()
-      // watermark hasn't advanced past any session close yet
-      // second batch pushes the watermark (max ts 13:00 - 2h lateness)
-      // far enough to close user 7's morning session
-      mem.addData(Seq((9L, ts("2026-01-01 16:00:00"), 9L, "view", 1.0)))
-      q.processAllAvailable()
-      val closed = spark.table("sw_sessions")
-        .as[(Long, Long, Timestamp, Timestamp)].collect().toSet
-      // user 7: 10:05 alone (35min > gap to 10:40), then 10:40+11:10 merged
-      // (exactly 30min — merges under strictly-> semantics)
-      assert(closed.contains(
-        (7L, 1L, ts("2026-01-01 10:05:00"), ts("2026-01-01 10:05:00"))) &&
-        closed.contains(
-          (7L, 2L, ts("2026-01-01 10:40:00"), ts("2026-01-01 11:10:00"))),
-        s"user 7 sessions must close once the watermark passes: $closed")
-    } finally q.stop()
-  }
-
-  test("streaming sessionization closes sessions on gap like the batch form") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SessionEvent]
-    val out = Events.sessionizeStream(spark, mem.toDS(),
-      timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())
-    val q = out.writeStream
-      .format("memory").queryName("sessions").outputMode("append").start()
-    try {
-      // batch 1: user 8 opens a session; user 7 chains two events (≤ gap).
-      mem.addData(Seq(
-        SessionEvent(8L, 4L, ts("2026-01-01 10:20:00")),
-        SessionEvent(7L, 1L, ts("2026-01-01 10:05:00")),
-        SessionEvent(7L, 2L, ts("2026-01-01 10:25:00"))))
-      q.processAllAvailable()
-      assert(spark.table("sessions").isEmpty, "no gap crossed yet — nothing closes")
-      // batch 2: user 8 comes back after > 30 min — session 1 closes.
-      mem.addData(Seq(SessionEvent(8L, 5L, ts("2026-01-01 13:00:00"))))
-      q.processAllAvailable()
-      val closed = spark.table("sessions").as[SessionOut].collect()
-      assert(closed.toSeq == Seq(
-        SessionOut(8L, 1L, 1L, ts("2026-01-01 10:20:00"), ts("2026-01-01 10:20:00"))))
-    } finally q.stop()
-
-    val batch = Events.sessionize(
-      sample.toDF("event_id", "ts", "user_id", "event_type", "value"))
-    val u8 = batch.filter(col("user_id") === 8 && col("sessao") === 1)
-      .select("eventos").as[Long].head()
-    assert(u8 == 1L, "batch form agrees: user 8 session 1 has one event")
-  }
-
-  test("streaming as-of join equals the batch as-of on an ordered feed") {
-    import graft.operators.AsOf
-    import graft.streaming.Events.{AsOfEvent, AsOfJoined}
-    implicit val sqlCtx = spark.sqlContext
-
-    // dims ("error") interleaved with facts, fed across THREE micro-batches
-    // in ts order — state must carry dim payloads across batch boundaries
-    val feed = Seq(
-      Seq(
-        AsOfEvent(1L, 7L, ts("2026-01-01 10:00:00"), "view", 1.0),   // before any dim
-        AsOfEvent(2L, 7L, ts("2026-01-01 10:05:00"), "error", 0.5),  // dim v0.5
-        AsOfEvent(3L, 7L, ts("2026-01-01 10:05:00"), "view", 2.0)),  // tie: matches dim
-      Seq(
-        AsOfEvent(4L, 7L, ts("2026-01-01 10:30:00"), "view", 3.0),   // carried from batch 1
-        AsOfEvent(5L, 8L, ts("2026-01-01 10:31:00"), "view", 4.0)),  // key with no dim
-      Seq(
-        AsOfEvent(6L, 7L, ts("2026-01-01 11:00:00"), "error", 9.5),  // dim update
-        AsOfEvent(7L, 7L, ts("2026-01-01 11:10:00"), "buy", 5.0)))   // matches update
-
-    val mem = MemoryStream[AsOfEvent]
-    val out = Events.asOfStream(spark, mem.toDS())
-    val q = out.writeStream
-      .format("memory").queryName("asof_stream").outputMode("append").start()
-    try {
-      feed.foreach { b => mem.addData(b); q.processAllAvailable() }
-      val got = spark.table("asof_stream").as[AsOfJoined].collect()
-        .map(j => (j.event_id, j.cfg_ts, j.cfg_value)).sortBy(_._1).toSeq
-
-      val all = feed.flatten
-        .map(e => (e.event_id, e.user_id, e.ts, e.event_type, e.value))
-        .toDF("event_id", "user_id", "ts", "event_type", "value")
-      val dim = all.filter(col("event_type") === "error")
-        .select("user_id", "ts", "value")
-      val fact = all.filter(col("event_type") =!= "error")
-      val want = AsOf.asOfJoin(fact, dim, "user_id", "ts", Seq("value"), "cfg_")
-        .select("event_id", "cfg_ts", "cfg_value")
-        .as[(Long, Option[Timestamp], Option[Double])].collect().sortBy(_._1).toSeq
-      assert(got == want && got.size == 5)
-      assert(got.map(_._3) == Seq(None, Some(0.5), Some(0.5), None, Some(9.5)))
-    } finally q.stop()
   }
 
   test("foreachBatch drives the upsert sink: last write per key wins") {
@@ -320,271 +111,5 @@ class StreamingSpec extends SparkSpec {
       .select("query_id", "doc_id", "posicao")
       .as[(Long, Long, Int)].collect().toSet
     assert(got.toSet == batchWant, s"stream ${got.toSet} vs batch $batchWant")
-  }
-
-  test("streaming CDC apply folds micro-batches to the batch changelog result") {
-    import graft.operators.Cdc
-    import graft.sources.ParquetSink
-    implicit val sqlCtx = spark.sqlContext
-    val target = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
-      .toDF("k", "tag", "v")
-    val sink = new ParquetSink(
-      java.nio.file.Files.createTempDirectory("graft-cdc-stream").toString)
-    sink.overwrite(target, "t")
-    val mem = MemoryStream[(Long, String, Double, Long, String)]
-    val q = Cdc.applyChangelogStream(
-      mem.toDF.toDF("k", "tag", "v", "seq", "op"), sink, "t",
-      Seq("k"), "seq", "op",
-      java.nio.file.Files.createTempDirectory("graft-cdc-ckpt").toString)
-    try {
-      // batch 1 upserts a key the stream later deletes — the delete must
-      // land on the already-folded state, not the original snapshot
-      mem.addData((2L, "b2", 21.0, 1L, "U"), (4L, "d", 40.0, 2L, "I"))
-      q.processAllAvailable()
-      mem.addData((2L, "dead", 0.0, 3L, "D"), (3L, "c2", 33.0, 4L, "U"))
-      q.processAllAvailable()
-      val got = sink.read(spark, "t").as[(Long, String, Double)].collect().toSet
-      val wholeLog = Seq(
-        (2L, "b2", 21.0, 1L, "U"), (4L, "d", 40.0, 2L, "I"),
-        (2L, "dead", 0.0, 3L, "D"), (3L, "c2", 33.0, 4L, "U"))
-        .toDF("k", "tag", "v", "seq", "op")
-      val batchForm = Cdc.applyChangelog(target, wholeLog, Seq("k"), "seq", "op")
-        .as[(Long, String, Double)].collect().toSet
-      assert(got == batchForm &&
-        got == Set((1L, "a", 10.0), (3L, "c2", 33.0), (4L, "d", 40.0)))
-    } finally q.stop()
-  }
-
-  test("stream-static enrichment joins each micro-batch against the dim") {
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((7L, "premium"), (8L, "free")).toDF("user_id", "segmento")
-    val mem = MemoryStream[(Long, Long)]
-    val enriched = Events.enrichStream(
-      mem.toDF.toDF("event_id", "user_id"), dim, "user_id")
-    val q = enriched.writeStream
-      .format("memory").queryName("enriched").outputMode("append").start()
-    try {
-      mem.addData(Seq((1L, 7L), (2L, 9L)))
-      q.processAllAvailable()
-      mem.addData(Seq((3L, 8L)))
-      q.processAllAvailable()
-      val got = spark.table("enriched")
-        .select("event_id", "segmento").as[(Long, Option[String])]
-        .collect().toSet
-      // unmatched stream rows survive (left join), matched ones enrich
-      assert(got == Set((1L, Some("premium")), (2L, None), (3L, Some("free"))),
-        s"got $got")
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join matches the batch interval join") {
-    val events = Seq(
-      // user 7: click at 10:00, purchases at 10:10 (in) and 11:00 (out)
-      (1L, ts("2026-01-01 10:00:00"), 7L, "click", 0.0),
-      (2L, ts("2026-01-01 10:10:00"), 7L, "purchase", 5.0),
-      (3L, ts("2026-01-01 11:00:00"), 7L, "purchase", 6.0),
-      // user 8: purchase BEFORE the click never joins
-      (4L, ts("2026-01-01 09:50:00"), 8L, "purchase", 1.0),
-      (5L, ts("2026-01-01 10:00:00"), 8L, "click", 0.0),
-      // user 9: simultaneous click+purchase joins at delay 0
-      (6L, ts("2026-01-01 12:00:00"), 9L, "click", 0.0),
-      (7L, ts("2026-01-01 12:00:00"), 9L, "purchase", 2.0))
-    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
-    val batch = Events.intervalJoin(events.toDF(cols: _*), "click", "purchase", 30)
-      .collect().map(_.toSeq).toSet
-    assert(batch == Set(
-      Seq(7L, 1L, 2L, 600L), Seq(9L, 6L, 7L, 0L)), s"batch: $batch")
-
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = events.filter(_._4 == "click")
-      .map(e => (e._1, e._2, e._3))
-    val purchases = events.filter(_._4 == "purchase")
-      .map(e => (e._1, e._2, e._3))
-    val memClicks = MemoryStream[(Long, Long, Timestamp)]
-    val memPurch = MemoryStream[(Long, Long, Timestamp)]
-    val joined = Events.intervalJoinStream(
-      memClicks.toDF.toDF("user_id", "gatilho_id", "gatilho_ts"),
-      memPurch.toDF.toDF("user_id", "conversao_id", "conversao_ts"),
-      boundMinutes = 30)
-    val q = joined.writeStream
-      .format("memory").queryName("attrib").outputMode("append").start()
-    try {
-      memClicks.addData(clicks.map(e => (e._3, e._1, e._2)))
-      memPurch.addData(purchases.map(e => (e._3, e._1, e._2)))
-      q.processAllAvailable()
-      val got = spark.table("attrib").collect().map(_.toSeq).toSet
-      assert(got == batch, s"stream $got\nbatch $batch")
-    } finally q.stop()
-  }
-
-  test("streaming ingest gate self-extends the index: a twin arriving in " +
-      "a later micro-batch is rejected") {
-    import graft.llm.Dedup
-    implicit val sqlCtx = spark.sqlContext
-    // 30 tokens: the drop-first-token variant changes ONE trigram of 28,
-    // so the banded signatures agree on (27/28)^4-ish per band — a miss
-    // on all 5 bands is ~0 and the md5 family makes the outcome a fixed
-    // function of this exact text (no RNG, deterministic forever)
-    val longDoc = (1 to 30).map(i => s"palavra$i").mkString(" ")
-    val corpus = Seq(
-      (1L, longDoc),
-      (2L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-    ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-stream-gate").toString
-    Dedup.writeBandIndex(corpus, "doc_id", "text", dir)
-    graft.llm.CacheScope.releaseAll()
-    val accepted = scala.collection.mutable.ListBuffer.empty[Long]
-    val mem = MemoryStream[(Long, String)]
-    val q = Dedup.ingestGateStream(
-      mem.toDF.toDF("doc_id", "text"), dir, "doc_id", "text",
-      threshold = 0.5,
-      onAccepted = b =>
-        accepted.synchronized {
-          accepted ++= b.select("doc_id").as[Long](newLongEncoder).collect()
-        })
-    try {
-      // batch 1: a fresh doc + a near-dup of corpus doc 1 (drop first token)
-      mem.addData(Seq(
-        (10L, "frase totalmente nova sem nenhum par na base corrente"),
-        (11L, longDoc.split(" ").drop(1).mkString(" "))))
-      q.processAllAvailable()
-      // batch 2: an EXACT copy of the doc accepted in batch 1 (not in the
-      // original corpus!) + another fresh doc
-      mem.addData(Seq(
-        (20L, "frase totalmente nova sem nenhum par na base corrente"),
-        (21L, "conteudo inedito chegando depois com vocabulario proprio")))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(accepted.toSet == Set(10L, 21L),
-      s"accepted ${accepted.toSet}: 11 is a corpus near-dup, 20 duplicates " +
-        "batch-1's accepted doc via the self-extended index")
-  }
-
-  test("estimatedGateStream: signature-only triage rejects corpus " +
-      "near-dups and late twins through the self-extending index") {
-    import spark.implicits._
-    import graft.llm.Dedup
-    implicit val sqlCtx = spark.sqlContext
-    val longDoc = (1 to 30).map(i => s"palavra$i").mkString(" ")
-    val corpus = Seq(
-      (1L, longDoc),
-      (2L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-    ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-sig-gate").toString
-    Dedup.writeSignatureIndex(corpus, "doc_id", "text", dir)
-    graft.llm.CacheScope.releaseAll()
-    val accepted = scala.collection.mutable.ListBuffer.empty[Long]
-    val mem = MemoryStream[(Long, String)]
-    val q = Dedup.estimatedGateStream(
-      mem.toDF.toDF("doc_id", "text"), dir, "doc_id", "text",
-      threshold = 0.5,
-      onAccepted = b =>
-        accepted.synchronized {
-          accepted ++= b.select("doc_id").as[Long](newLongEncoder).collect()
-        })
-    try {
-      // batch 1: fresh doc + a near-dup of corpus doc 1 (drop first token)
-      mem.addData(Seq(
-        (10L, "frase totalmente nova sem nenhum par na base corrente"),
-        (11L, longDoc.split(" ").drop(1).mkString(" "))))
-      q.processAllAvailable()
-      // batch 2: an EXACT copy of batch-1's accepted doc (estimate 1.0 —
-      // no separate content-hash check needed) + another fresh doc
-      mem.addData(Seq(
-        (20L, "frase totalmente nova sem nenhum par na base corrente"),
-        (21L, "conteudo inedito chegando depois com vocabulario proprio")))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(accepted.toSet == Set(10L, 21L),
-      s"accepted ${accepted.toSet}: 11 is a sketch-caught corpus near-dup, " +
-        "20 duplicates batch-1's accepted doc via the self-extended index")
-  }
-
-  test("driftMonitorStream: the persisted report after two micro-batches " +
-      "equals the batch driftReport over everything seen") {
-    import spark.implicits._
-    import graft.operators.Stats
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-drift-stream").toString
-    val baseline = (Seq.fill(6)("A") ++ Seq.fill(4)("B")).toDF("b")
-    val b1 = Seq("A", "C", "C")
-    val b2 = Seq("B", "C", "C", "C")
-    val mem = MemoryStream[String]
-    val q = Stats.driftMonitorStream(
-      mem.toDF.toDF("b"), baseline, "b",
-      statePath = s"$root/state", reportPath = s"$root/report")
-    try {
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.as[(String, Long, Long, Option[Double], Option[Double], Boolean)]
-        .collect().toSet
-    val streamed = rows(spark.read.parquet(s"$root/report"))
-    val whole = rows(Stats.driftReport(
-      baseline, (b1 ++ b2).toDF("b"), "b"))
-    assert(streamed == whole && streamed.exists(_._6),
-      s"streamed report must equal the batch report (and flag the new " +
-        s"category C): $streamed vs $whole")
-  }
-
-  test("cmsStream: the persisted sketch after N micro-batches equals the " +
-      "batch build over everything seen, cell for cell") {
-    import spark.implicits._
-    import graft.operators.Incremental
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-cms-stream").toString + "/sketch"
-    val b1 = Seq("a", "b", "a", "c", "a")
-    val b2 = Seq("b", "d", "d", "a")
-    val mem = MemoryStream[String]
-    val q = Incremental.cmsStream(
-      mem.toDF.toDF("w"), "w", depth = 3, width = 16, sketchPath = dir)
-    try {
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.read.parquet(dir)
-      .as[(Int, Long, Long)].collect().toSet
-    val whole = Incremental.cmsBuild(
-        (b1 ++ b2).toDF("w"), "w", depth = 3, width = 16)
-      .as[(Int, Long, Long)].collect().toSet
-    assert(streamed == whole,
-      "streamed sketch must equal the whole-history batch build exactly")
-  }
-
-  test("postingsIndexStream: indexed BM25 after two micro-batches equals " +
-      "a from-scratch build over everything seen, bit for bit") {
-    import spark.implicits._
-    import graft.llm.Retrieval
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-post-stream").toString + "/idx"
-    val b1 = Seq((1L, "alpha beta alpha"), (2L, "beta gamma"))
-    val b2 = Seq((3L, "alpha delta delta"), (4L, "gamma gamma beta"))
-    val mem = MemoryStream[(Long, String)]
-    val q = Retrieval.postingsIndexStream(
-      mem.toDF.toDF("doc_id", "text"), "doc_id", "text", dir)
-    try {
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val docs = (b1 ++ b2).toDF("doc_id", "text")
-    val queries = Seq((100L, "alpha gamma")).toDF("doc_id", "text")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "doc_id", "score", "posicao")
-        .as[(Long, Long, Double, Int)].collect().toSet
-    val streamed = rows(Retrieval.bm25TopKIndexed(
-      Retrieval.readPostingsIndex(spark, dir), queries, "doc_id", "text",
-      k = 3, maxDfFraction = 1.0))
-    graft.llm.CacheScope.releaseAll()
-    val scratch = rows(Retrieval.bm25TopK(
-      docs, queries, "doc_id", "text", k = 3, maxDfFraction = 1.0))
-    graft.llm.CacheScope.releaseAll()
-    assert(streamed == scratch && streamed.nonEmpty,
-      "stream-accumulated index must score bit-identically")
   }
 }
