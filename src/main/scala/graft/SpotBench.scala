@@ -11,7 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `<q>`: time the query with the noop sink;
   *   - `count:<q>`: its row count instead of a timed noop write, for
   *     attributing stage costs to data volume;
-  *   - `explain:<q>`: print its `explain("formatted")` plan;
+  *   - `explain:<q>`: print its `explain("formatted")` plan between
+  *     `===== <q> =====` and `===== end <q> =====` (a failure prints its
+  *     `SPOT-FAILED` line inside the block);
   *   - `profile:<q>`: time it with a listener that prints each job's wall
   *     and, per completed stage, the summed task time, record counts and
   *     shuffle volumes with the stage's call site.
@@ -176,7 +178,8 @@ object SpotBench {
             run(_.count()).map { case (n, _) => s"SPOT-COUNT $name $n" }
           case "explain" =>
             println(s"===== $name =====")
-            run(_.explain("formatted")).map(_ => s"===== end $name =====")
+            run(_.explain("formatted")).left.foreach(msg => println(s"SPOT-FAILED $arg $msg"))
+            Right(s"===== end $name =====")
           case "profile" =>
             val log = new JobStageLog
             spark.sparkContext.addSparkListener(log)

@@ -25,13 +25,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StructType}
   * ≤ k rows before the exchange, instead of shuffling and sorting every
   * row the way the window form does.
   *
-  * `k` may be a positive integer LITERAL (the `row_number() <= k` path)
-  * or any integer expression that is CONSTANT WITHIN EACH GROUP — e.g. a
-  * per-group row count joined onto the input, which is how the rewrite
-  * handles `ntile()`/`percent_rank()` bounds whose retained-row count
-  * depends on the group size. In the dynamic form the buffer learns k
-  * from the first row it sees (negative values clamp to 0 = keep
-  * nothing).
+  * `kExpr` must be a positive integer literal.
   *
   * `sortKey` and `payload` must be struct expressions; `dirs`/`nullOrds`
   * give the per-sort-column direction exactly as in the window's ORDER BY.
@@ -51,12 +45,10 @@ case class TopKRows(
   extends TypedImperativeAggregate[TopKRowsBuffer]
   with TernaryLike[Expression] {
 
-  /** Some(k) for the literal form; None = learn k per group from kExpr. */
-  private lazy val staticK: Option[Int] = kExpr match {
-    case Literal(v: Int, IntegerType) if v > 0 => Some(v)
-    case Literal(_, _) => throw new IllegalArgumentException(
+  private lazy val k: Int = kExpr match {
+    case Literal(v: Int, IntegerType) if v > 0 => v
+    case _ => throw new IllegalArgumentException(
       s"$prettyName requires a positive integer literal k, got $kExpr")
-    case _ => None
   }
 
   private def keyType: StructType = sortKey.dataType.asInstanceOf[StructType]
@@ -95,24 +87,15 @@ case class TopKRows(
     RowOrdering.create(bound.toIndexedSeq, Nil)
   }
 
-  private def mkBuffer(initialK: Int): TopKRowsBuffer =
-    new TopKRowsBuffer(initialK, keyType.length, payloadType.length, ordering)
-
   override def createAggregationBuffer(): TopKRowsBuffer =
-    mkBuffer(staticK.getOrElse(-1))
+    new TopKRowsBuffer(k, keyType.length, payloadType.length, ordering)
 
   override def update(buffer: TopKRowsBuffer, input: InternalRow): TopKRowsBuffer = {
-    if (staticK.isEmpty) {
-      val kv = kExpr.eval(input)
-      if (kv == null) throw new IllegalArgumentException(s"$prettyName: k is null")
-      buffer.ensureK(math.max(kv.asInstanceOf[Int], 0))
-    }
     buffer.add(pairProj(input))
     buffer
   }
 
   override def merge(buffer: TopKRowsBuffer, other: TopKRowsBuffer): TopKRowsBuffer = {
-    if (other.k >= 0) buffer.ensureK(other.k)
     buffer.addAll(other)
     buffer
   }
@@ -123,8 +106,7 @@ case class TopKRows(
   override def serialize(buffer: TopKRowsBuffer): Array[Byte] = {
     val top = buffer.sortedTop()
     val bytes = top.map(_.getBytes)
-    val bb = ByteBuffer.allocate(8 + bytes.map(_.length + 4).sum)
-    bb.putInt(buffer.k)
+    val bb = ByteBuffer.allocate(4 + bytes.map(_.length + 4).sum)
     bb.putInt(top.length)
     bytes.foreach { b => bb.putInt(b.length); bb.put(b) }
     bb.array()
@@ -132,9 +114,8 @@ case class TopKRows(
 
   override def deserialize(bytes: Array[Byte]): TopKRowsBuffer = {
     val bb = ByteBuffer.wrap(bytes)
-    val kRead = bb.getInt
     val n = bb.getInt
-    val buf = mkBuffer(kRead)
+    val buf = createAggregationBuffer()
     var j = 0
     while (j < n) {
       val len = bb.getInt
@@ -161,39 +142,28 @@ case class TopKRows(
 /** Bounded store of (key, payload) UnsafeRows; compaction sorts by the
   * window order (ascending, stable — arrival order breaks ties like
   * `row_number`) and truncates to k. Entries are whole-row byte copies,
-  * so held rows never alias a projection buffer. k = -1 means "not yet
-  * learned" (dynamic-k mode before the first row/merge): the store keeps
-  * and grows until a k arrives.
+  * so held rows never alias a projection buffer.
   */
 final class TopKRowsBuffer(
-    initialK: Int, keyFields: Int, payloadFields: Int, ordering: BaseOrdering) {
-  private var kVar = initialK
-  private var rows = new Array[UnsafeRow](
-    if (initialK > 0) math.max(4 * initialK, 16) else 16)
+    k: Int, keyFields: Int, payloadFields: Int, ordering: BaseOrdering) {
+  private val rows = new Array[UnsafeRow](math.max(math.min(4L * k, Int.MaxValue - 8L), 16L).toInt)
   private var n = 0
   private var floor: UnsafeRow = null // kth kept key, once k entries exist
-
-  def k: Int = kVar
-
-  /** Learn k once (dynamic mode); later calls are no-ops. */
-  def ensureK(v: Int): Unit = if (kVar < 0) kVar = v
 
   private def keyOf(row: UnsafeRow): InternalRow = row.getStruct(0, keyFields)
 
   /** Add a candidate from a REUSED projection buffer (copied on accept). */
   def add(candidate: UnsafeRow): Unit = {
-    if (kVar == 0) return
     if (floor != null && ordering.compare(keyOf(candidate), keyOf(floor)) >= 0) return
-    if (n == rows.length) compactOrGrow()
+    if (n == rows.length) compact()
     rows(n) = candidate.copy()
     n += 1
   }
 
   /** Add a row this buffer may keep without copying (deserialize path). */
   def addOwned(candidate: UnsafeRow): Unit = {
-    if (kVar == 0) return
     if (floor != null && ordering.compare(keyOf(candidate), keyOf(floor)) >= 0) return
-    if (n == rows.length) compactOrGrow()
+    if (n == rows.length) compact()
     rows(n) = candidate
     n += 1
   }
@@ -203,22 +173,18 @@ final class TopKRowsBuffer(
     while (j < other.n) { addOwned(other.rows(j)); j += 1 }
   }
 
-  private def compactOrGrow(): Unit = {
-    if (kVar >= 0) {
-      val top = sortedTop()
-      java.util.Arrays.fill(rows.asInstanceOf[Array[AnyRef]], null)
-      top.copyToArray(rows)
-      n = top.length
-      if (n == kVar && n > 0) floor = rows(n - 1)
-    }
-    // k unset, or k so large nothing was droppable: grow instead
-    if (n == rows.length) {
-      val target = math.max(rows.length * 2, if (kVar > 0) 4 * kVar else 32)
-      rows = java.util.Arrays.copyOf(rows, target)
-    }
+  /** Sort and truncate to the first k; the array is longer than k, so
+    * this always frees room.
+    */
+  private def compact(): Unit = {
+    val top = sortedTop()
+    java.util.Arrays.fill(rows.asInstanceOf[Array[AnyRef]], null)
+    top.copyToArray(rows)
+    n = top.length
+    if (n == k) floor = rows(n - 1)
   }
 
-  /** Final ascending-by-window-order first-k (all rows while k unset). */
+  /** Final ascending-by-window-order first-k. */
   def sortedTop(): Array[UnsafeRow] = {
     val present = java.util.Arrays.copyOfRange(rows, 0, n)
     // TimSort on objects is stable: equal keys stay in arrival order
@@ -226,7 +192,6 @@ final class TopKRowsBuffer(
       override def compare(a: UnsafeRow, b: UnsafeRow): Int =
         ordering.compare(keyOf(a), keyOf(b))
     })
-    val keep = if (kVar < 0) n else math.min(n, kVar)
-    java.util.Arrays.copyOfRange(present, 0, keep)
+    java.util.Arrays.copyOfRange(present, 0, math.min(n, k))
   }
 }

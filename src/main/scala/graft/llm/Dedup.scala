@@ -627,10 +627,15 @@ object Dedup {
   }
 
   /** Sentinel `maxBlock` value: derive the tile size from the observed
-    * block-size distribution ([[adaptiveMaxBlock]]) instead of a static
+    * block-size distribution ([[adaptiveMaxBlockStats]]) instead of a static
     * guess.
     */
   val AdaptiveBlock: Int = 0
+
+  /** What [[adaptiveMaxBlockStats]] reads off the block counts. */
+  private[graft] final case class BlockStats(
+      effBlock: Int, pairVolume: Double, nMulti: Long,
+      totalRows: Long, multiRows: Long)
 
   /** Pick the tile side from RUNTIME stats — the observed per-block
     * counts (the same aggregation the hot-block filter needs anyway) and
@@ -655,21 +660,14 @@ object Dedup {
     * block counts) so sizing the tiles costs no separate action — an
     * eager pre-action here re-derived the caller's whole `keyed` lineage
     * once more just to learn the threshold.
-    */
-  private[graft] def adaptiveMaxBlock(counts: DataFrame, parallelism: Int): Int =
-    adaptiveMaxBlockStats(counts, parallelism).effBlock
-
-  /** Block-distribution stats from ONE action over the counts table:
-    * the adaptive tile side, the observed pair volume W = Σn² (the
+    *
+    * Block-distribution stats come from ONE action over the counts table:
+    * the adaptive tile side (`effBlock`), the observed pair volume W = Σn² (the
     * round-15 width-pinning gate reads it), the count of MULTI-row
     * blocks (n ≥ 2 — the only blocks that can emit a pair; sizes the
     * round-16 singleton-pruning broadcast), and the row totals on each
     * side of that split (the pruning PAYOFF gate — see
     * [[tiledPairsStats]]). */
-  private[graft] final case class BlockStats(
-      effBlock: Int, pairVolume: Double, nMulti: Long,
-      totalRows: Long, multiRows: Long)
-
   private[graft] def adaptiveMaxBlockStats(
       counts: DataFrame, parallelism: Int): BlockStats = {
     val row = counts.agg(

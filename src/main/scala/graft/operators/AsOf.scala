@@ -58,42 +58,20 @@ object AsOf {
     * ([[graft.plans.AsOfJoinNode]] → [[graft.plans.AsOfJoinExec]]): one
     * sort-merge pass with a single held dim row of state instead of the
     * union + running-window plan of [[asOfJoin]]. Same output columns,
-    * same semantics (see the node's scaladoc for the null rules); prefer
-    * it when the fact side is large or already clustered/sorted on the
-    * key — the operator declares its distribution/ordering requirements,
-    * so Catalyst elides the sort for bucketed-sorted inputs and reuses
-    * the fact-side partitioning downstream.
-    */
-  def asOfJoinNative(
-      fact: DataFrame, dim: DataFrame, keyCol: String, tsCol: String,
-      payloadCols: Seq[String], prefix: String = "asof_"): DataFrame =
-    asOfJoinNativeKeys(fact, dim, Seq(keyCol), tsCol, payloadCols, prefix)
-
-  /** [[asOfJoinNative]] on a composite key — the exec clusters and merges
-    * on the full key tuple (e.g. (entity, region) rate tables).
-    * `direction`: "backward" (latest at-or-before, default), "forward"
-    * (earliest at-or-after) or "nearest" (smaller |delta|, ties
-    * backward).
-    *
-    * The remaining pandas `merge_asof` knobs, applied in the same merge
-    * pass at zero extra cost:
-    *  - `tolerance` (≥ 0): a candidate farther than this from the fact's
-    *    ts does NOT match (the fact keeps null payloads). Raw ts units —
-    *    µs for timestamps, days for dates; integral/timestamp ts only.
-    *  - `allowExactMatches = false`: `dim.ts == fact.ts` no longer
-    *    matches — backward becomes strictly-before, forward strictly-
-    *    after (a same-instant dim row must not leak into the feature row
-    *    it describes). Unsupported for `nearest`, which would need a
-    *    look past equal-ts runs.
+    * same at-or-before semantics (see the node's scaladoc for the null
+    * rules); `keyCols` may be a composite key, on whose full tuple the
+    * exec clusters and merges. Prefer it when the fact side is large or
+    * already clustered/sorted on the key — the operator declares its
+    * distribution/ordering requirements, so Catalyst elides the sort for
+    * bucketed-sorted inputs and reuses the fact-side partitioning
+    * downstream.
     *
     * The returned plan holds an [[graft.plans.AsOfJoinNode]], which only
     * a session built with [[graft.functions.GraftExtensions]] can plan.
     */
-  def asOfJoinNativeKeys(
+  def asOfJoinNative(
       fact: DataFrame, dim: DataFrame, keyCols: Seq[String], tsCol: String,
-      payloadCols: Seq[String], prefix: String = "asof_",
-      direction: String = "backward", tolerance: Long = -1L,
-      allowExactMatches: Boolean = true): DataFrame = {
+      payloadCols: Seq[String], prefix: String = "asof_"): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
     import org.apache.spark.sql.graft.Shims
@@ -121,7 +99,6 @@ object AsOf {
       lp, rp,
       leftKeys = keyCols.map(attrOf(lp, _)), rightKeys = keyCols.map(attrOf(rp, _)),
       leftTs = attrOf(lp, tsCol), rightTs = rightTs,
-      rightCarried = rightCarried, outAttrs = outAttrs, direction = direction,
-      tolerance = tolerance, allowExact = allowExactMatches))
+      rightCarried = rightCarried, outAttrs = outAttrs))
   }
 }

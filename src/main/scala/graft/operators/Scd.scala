@@ -172,7 +172,7 @@ object Scd {
       tsCol: String, payloadCols: Seq[String],
       prefix: String = "dim_"): DataFrame = {
     val dim = history.withColumn(tsCol, col("valid_from"))
-    val joined = AsOf.asOfJoinNativeKeys(
+    val joined = AsOf.asOfJoinNative(
       fact, dim, keyCols, tsCol, payloadCols :+ "valid_to", prefix)
     val invalid = col(s"${prefix}valid_to").isNotNull &&
       col(tsCol) >= col(s"${prefix}valid_to")

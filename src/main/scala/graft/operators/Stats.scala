@@ -135,25 +135,8 @@ object Stats {
     * this replaces; typical spread keeps each window task ~1/256 of
     * the distinct table.
     *
-    * `base` must be persisted by the caller with a non-null numeric
-    * column `v`. Returns one row per distinct value: (__v, __cnt,
-    * __below). The distinct collapse is persisted internally — bounds,
-    * bucket totals and the windowed main side are three consumers, and
-    * re-deriving the corpus aggregation per consumer measured ~35%
-    * slower at sf1 (an offsets-from-raw-rows variant that avoided this
-    * cache measured worse still: two extra FULL passes over the fact
-    * cache per rank map).
-    */
-  private[graft] def valueBelow(base: DataFrame, v: String): DataFrame = {
-    val counts = graft.llm.CacheScope.persistTracked(
-      base.groupBy(col(v).as("__v")).agg(count(lit(1L)).as("__cnt"))
-        .withColumn("__c", lit("v")))
-    belowFromCounts(counts).drop("__c")
-  }
-
-  /** The bucket-decomposition core behind [[valueBelow]], generalized to
-    * MULTIPLE labeled columns in one pass: `counts` holds one row per
-    * (column label `__c`, distinct value `__v`) with its multiplicity
+    * It handles MULTIPLE labeled columns in one pass: `counts` holds one
+    * row per (column label `__c`, distinct value `__v`) with its multiplicity
     * `__cnt`, and the result adds `__below` = Σ __cnt over same-`__c`
     * rows with strictly smaller `__v` — ONE bounds aggregate, ONE
     * SmallFold offset fold and ONE per-(__c,__bk) window serve every
@@ -173,10 +156,7 @@ object Stats {
     * ranks NaN in both Spark and DuckDB (greatest, equal to itself).
     *
     * `counts` must be persisted by the caller (bounds, bucket totals
-    * and the windowed main side are three consumers). Worst-case value
-    * skew (every value in one bucket) degrades to the single-partition
-    * sort this replaces; typical spread keeps each window task ~1/256
-    * of the distinct-value table.
+    * and the windowed main side are three consumers).
     */
   private[graft] def belowFromCounts(counts: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window

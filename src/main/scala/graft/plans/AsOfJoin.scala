@@ -53,10 +53,7 @@ case class AsOfJoinNode(
     leftTs: Attribute,
     rightTs: Attribute,
     rightCarried: Seq[Attribute],
-    outAttrs: Seq[Attribute],
-    direction: String = "backward",
-    tolerance: Long = -1L,
-    allowExact: Boolean = true)
+    outAttrs: Seq[Attribute])
   extends BinaryNode {
 
   override def output: Seq[Attribute] = left.output ++ outAttrs
@@ -76,8 +73,7 @@ object AsOfJoinStrategy extends SparkStrategy {
     case n: AsOfJoinNode =>
       AsOfJoinExec(planLater(n.left), planLater(n.right),
         n.leftKeys, n.rightKeys, n.leftTs, n.rightTs,
-        n.rightCarried, n.outAttrs, n.direction, n.tolerance,
-        n.allowExact) :: Nil
+        n.rightCarried, n.outAttrs) :: Nil
     case _ => Nil
   }
 }
@@ -103,34 +99,11 @@ class AsOfMerger(
     rKeys: Seq[Attribute],
     lTs: Attribute,
     rTs: Attribute,
-    carried: Seq[Attribute],
-    direction: String = "backward",
-    tolerance: Long = -1L,
-    allowExact: Boolean = true) extends Serializable {
+    carried: Seq[Attribute]) extends Serializable {
 
   require(rKeys.map(_.dataType) == lKeys.map(_.dataType) &&
     rTs.dataType == lTs.dataType,
     "as-of join sides disagree on key/ts types — cast upstream")
-  require(Set("backward", "forward", "nearest")(direction),
-    s"unknown as-of direction '$direction'")
-  private val forward = direction == "forward"
-  private val nearest = direction == "nearest"
-  // strict (non-exact) matching would need a look PAST runs of equal-ts
-  // dim rows for the nearest direction's forward candidate — unsupported;
-  // backward/forward strictness is a one-comparison change
-  require(allowExact || !nearest,
-    "nearest as-of does not support allowExact = false")
-  // `nearest` and `tolerance` need |delta| arithmetic, not just ordering:
-  // restrict to ts types whose single-field row value is an integral we
-  // can subtract (tolerance is in the ts column's raw units — µs for
-  // timestamps, days for dates)
-  if (nearest || tolerance >= 0L) {
-    import org.apache.spark.sql.types._
-    require(Seq(LongType, IntegerType, TimestampType, TimestampNTZType, DateType)
-      .exists(_ == lTs.dataType),
-      s"nearest/tolerance as-of needs an integral/timestamp ts, got ${lTs.dataType}")
-  }
-  private val needTsState = nearest || tolerance >= 0L
 
   def create(
       factIter: Iterator[InternalRow],
@@ -138,14 +111,6 @@ class AsOfMerger(
     val keyTypes = lKeys.map(_.dataType)
     val keyOrd = RowOrdering.createNaturalAscendingOrdering(keyTypes)
     val tsOrd = RowOrdering.createNaturalAscendingOrdering(Seq(lTs.dataType))
-    val tsType = lTs.dataType
-    // nearest-direction delta arithmetic (types pre-checked in the ctor)
-    def tsValue(r: InternalRow): Long = tsType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.TimestampType |
-           org.apache.spark.sql.types.TimestampNTZType => r.getLong(0)
-      case _ => r.getInt(0).toLong
-    }
     val factKeyProj = UnsafeProjection.create(lKeys, leftOutput)
     val factTsProj = UnsafeProjection.create(Seq(lTs), leftOutput)
     val dimKeyProj = UnsafeProjection.create(rKeys, rightOutput)
@@ -161,7 +126,6 @@ class AsOfMerger(
       // reused on the next dim row)
       private var heldKey: UnsafeRow = null
       private var heldCarried: UnsafeRow = null
-      private var heldTs: UnsafeRow = null // nearest mode only
 
       override def hasNext: Boolean = factIter.hasNext
 
@@ -170,36 +134,6 @@ class AsOfMerger(
         val fKey = factKeyProj(fact)
         val fTs = factTsProj(fact)
         val factUnmatchable = fKey.anyNull || fTs.anyNull
-        if (forward) {
-          // FORWARD direction (earliest dim at-or-after): no held state at
-          // all - advance past dims before (fKey, fTs); the lookahead dim
-          // IS the candidate, and it is not consumed (later facts with the
-          // same key and larger ts may need it too, facts arrive ascending)
-          var fwdMatched = false
-          if (!factUnmatchable) {
-            var scanning = nextDim != null
-            while (scanning) {
-              val dKey = dimKeyProj(nextDim)
-              if (dKey.anyNull || dimTsProj(nextDim).anyNull) {
-                advance()
-              } else {
-                val c = keyOrd.compare(dKey, fKey)
-                val cTs =
-                  if (c == 0) tsOrd.compare(dimTsProj(nextDim), fTs) else 0
-                if (c < 0 || (c == 0 && (cTs < 0 || (!allowExact && cTs == 0)))) {
-                  advance()
-                } else {
-                  fwdMatched = c == 0
-                  scanning = false
-                }
-              }
-              if (nextDim == null) scanning = false
-            }
-          }
-          val fwdOk = fwdMatched && (tolerance < 0L ||
-            tsValue(dimTsProj(nextDim)) - tsValue(fTs) <= tolerance)
-          return joined(fact, if (fwdOk) carriedProj(nextDim) else nullCarried)
-        }
         if (!factUnmatchable) {
           var scanning = nextDim != null
           while (scanning) {
@@ -208,14 +142,11 @@ class AsOfMerger(
               advance()
             } else {
               val c = keyOrd.compare(dKey, fKey)
-              val cTs =
-                if (c == 0) tsOrd.compare(dimTsProj(nextDim), fTs) else 0
               if (c < 0) {
                 advance()
-              } else if (c == 0 && (cTs < 0 || (allowExact && cTs == 0))) {
+              } else if (c == 0 && tsOrd.compare(dimTsProj(nextDim), fTs) <= 0) {
                 heldKey = dKey.copy()
                 heldCarried = carriedProj(nextDim).copy()
-                if (needTsState) heldTs = dimTsProj(nextDim).copy()
                 advance()
               } else {
                 scanning = false
@@ -226,34 +157,7 @@ class AsOfMerger(
         }
         val matched = !factUnmatchable && heldKey != null &&
           keyOrd.compare(heldKey, fKey) == 0
-        if (nearest) {
-          // the backward scan stopped exactly at the first dim AFTER the
-          // fact, so the lookahead row (if the key matches) is the forward
-          // candidate; pick the smaller |delta|, ties to backward (pandas)
-          val fwdOk = !factUnmatchable && nextDim != null && {
-            val dKey = dimKeyProj(nextDim)
-            !dKey.anyNull && !dimTsProj(nextDim).anyNull &&
-              keyOrd.compare(dKey, fKey) == 0
-          }
-          val ft = if (factUnmatchable) 0L else tsValue(fTs)
-          val bOk = matched &&
-            (tolerance < 0L || ft - tsValue(heldTs) <= tolerance)
-          val fOk = fwdOk &&
-            (tolerance < 0L || tsValue(dimTsProj(nextDim)) - ft <= tolerance)
-          val pick: InternalRow =
-            if (bOk && fOk) {
-              if (ft - tsValue(heldTs) <= tsValue(dimTsProj(nextDim)) - ft)
-                heldCarried
-              else carriedProj(nextDim)
-            } else if (bOk) heldCarried
-            else if (fOk) carriedProj(nextDim)
-            else nullCarried
-          joined(fact, pick)
-        } else {
-          val ok = matched && (tolerance < 0L ||
-            tsValue(fTs) - tsValue(heldTs) <= tolerance)
-          joined(fact, if (ok) heldCarried else nullCarried)
-        }
+        joined(fact, if (matched) heldCarried else nullCarried)
       }
 
       private def advance(): Unit =
@@ -288,10 +192,7 @@ case class AsOfJoinExec(
     leftTs: Attribute,
     rightTs: Attribute,
     rightCarried: Seq[Attribute],
-    outAttrs: Seq[Attribute],
-    direction: String = "backward",
-    tolerance: Long = -1L,
-    allowExact: Boolean = true)
+    outAttrs: Seq[Attribute])
   extends BinaryExecNode with CodegenSupport {
 
   override def output: Seq[Attribute] = left.output ++ outAttrs
@@ -312,7 +213,7 @@ case class AsOfJoinExec(
 
   private def merger = new AsOfMerger(
     left.output, right.output, leftKeys, rightKeys, leftTs, rightTs,
-    rightCarried, direction, tolerance, allowExact)
+    rightCarried)
 
   protected override def doExecute(): RDD[InternalRow] = {
     val numOutputRows = longMetric("numOutputRows")

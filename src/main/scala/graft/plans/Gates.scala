@@ -30,7 +30,7 @@ object Gates {
   val PruneMinDropFraction: Double = 0.25
 
   /** Tile side = k·√(W/P): a block is hot only when its own pair space
-    * exceeds k² fair task shares (see `Dedup.adaptiveMaxBlock`). */
+    * exceeds k² fair task shares (see `Dedup.adaptiveMaxBlockStats`). */
   val TileBudgetFactor: Double = 4.0
 
   /** Linkage's string-recovery probes broadcast the class table only up

@@ -1,14 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
-  AggregateExpression, AggregateFunction, Average, Complete, Count, First,
-  Last, Max, Min, Sum}
+  AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, And, Ascending, Attribute, CreateStruct, CurrentRow, Descending,
-  EqualNullSafe, Expression, GetStructField, NamedExpression, NullsFirst,
-  NullsLast, RowFrame, RowOrdering, SortOrder, SpecifiedWindowFrame,
-  UnboundedFollowing, UnboundedPreceding, WindowExpression,
-  WindowSpecDefinition}
+  Alias, And, EqualNullSafe, Expression, NamedExpression, RowFrame,
+  SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding,
+  WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.{
   Aggregate, Join, JoinHint, LogicalPlan, Project, Window}
@@ -55,18 +52,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * row) rewrites too — to a single-row cross join, replacing the
   * worst window shape there is (every row sorted into ONE partition).
   *
-  * ORDERED windows rewrite when every expression is `first_value(x)`
-  * (any prefix frame — the prefix always contains the group's first
-  * row), `last_value(x)` (full frame only) or an order-insensitive
-  * aggregate over the full frame: first/last become `min`/`max` over a
-  * `(orderKeys…, x)` struct — struct comparison is field-wise ascending
-  * nulls-first, exactly the default order's semantics — and the value is
-  * extracted from the extremum struct. Uniform directions only (all
-  * asc-nulls-first, or all desc-nulls-last with min/max swapped); ties
-  * on the full order key resolve by the value field, deterministic where
-  * the window's pick is partition-order-arbitrary; `ignoreNulls`
-  * variants and running `last_value` keep their window.
-  * Disable with
+  * Any ORDER BY (a running frame, `first_value`/`last_value`) keeps the
+  * window. Disable with
   * `spark.sql.optimizer.excludedRules=graft.plans.WindowAggRewrite`.
   */
 object WindowAggRewrite extends Rule[LogicalPlan] {
@@ -76,36 +63,7 @@ object WindowAggRewrite extends Rule[LogicalPlan] {
       case w @ Window(windowExprs, partSpec, Seq(), child, _)
           if windowExprs.nonEmpty && windowExprs.forall(isRewritableAgg) =>
         rewrite(w, partSpec, child)
-
-      // ordered windows: first_value(x) (running or full frame — its
-      // prefix always contains the group's first row) and last_value(x)
-      // (full frame only) become min/max over (orderKeys…, x) structs —
-      // struct comparison is field-wise ascending nulls-first, exactly
-      // the default ascending order's semantics, so the extremum row IS
-      // the window's pick (ties on the full order key resolve by the
-      // VALUE field — deterministic where the window's choice is
-      // partition-order-arbitrary). Order-insensitive aggregates over an
-      // explicit full frame rewrite alongside. Uniform-direction orders
-      // only (all asc nulls-first → min picks first; all desc nulls-last
-      // → max does).
-      case w @ Window(windowExprs, partSpec, orderSpec, child, _)
-          if windowExprs.nonEmpty && orderSpec.nonEmpty &&
-            uniformDirection(orderSpec).isDefined &&
-            RowOrdering.isOrderable(orderSpec.map(_.child).toIndexedSeq) &&
-            windowExprs.forall(e =>
-              orderedRewritable(e, uniformDirection(orderSpec).get)) =>
-        rewriteOrdered(w, partSpec, orderSpec, child)
     }
-
-  /** Some(true) = all ascending nulls-first (the defaults), Some(false) =
-    * all descending nulls-last; None = mixed/custom (not rewritable).
-    */
-  private def uniformDirection(orderSpec: Seq[SortOrder]): Option[Boolean] =
-    if (orderSpec.forall(so =>
-        so.direction == Ascending && so.nullOrdering == NullsFirst)) Some(true)
-    else if (orderSpec.forall(so =>
-        so.direction == Descending && so.nullOrdering == NullsLast)) Some(false)
-    else None
 
   /** `Alias(WindowExpression(order-insensitive agg, entire-partition
     * frame))` — the shape the analyzer produces for a window aggregate
@@ -121,80 +79,24 @@ object WindowAggRewrite extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  private def isFull(f: SpecifiedWindowFrame): Boolean =
-    f.lower == UnboundedPreceding && f.upper == UnboundedFollowing
-  private def runningOrFull(f: SpecifiedWindowFrame): Boolean =
-    f.lower == UnboundedPreceding &&
-      (f.upper == CurrentRow || f.upper == UnboundedFollowing)
-
-  /** Per-expression check for the ordered-window case. */
-  private def orderedRewritable(ne: NamedExpression, asc: Boolean): Boolean = ne match {
-    case Alias(WindowExpression(ae: AggregateExpression,
-        WindowSpecDefinition(_, _, f: SpecifiedWindowFrame)), _)
-        if !ae.isDistinct && ae.filter.isEmpty =>
-      ae.aggregateFunction match {
-        // first_value: any prefix frame contains the group's first row
-        case First(x, false) =>
-          runningOrFull(f) && RowOrdering.isOrderable(x.dataType)
-        // last_value: only the FULL frame sees the group's last row (the
-        // default running frame's last_value is the current peer group)
-        case Last(x, false) => isFull(f) && RowOrdering.isOrderable(x.dataType)
-        case _: Min | _: Max | _: Count | _: Sum | _: Average => isFull(f)
-        case _ => false
-      }
-    case _ => false
-  }
-
-  private def rewriteOrdered(
-      w: Window, partSpec: Seq[Expression], orderSpec: Seq[SortOrder],
-      child: LogicalPlan): LogicalPlan = {
-    val asc = uniformDirection(orderSpec).get
-    val orderKeys = orderSpec.map(_.child)
-    def extremum(x: Expression, wantFirst: Boolean): AggregateFunction = {
-      val s = CreateStruct((orderKeys :+ x).toSeq)
-      if (wantFirst == asc) Min(s) else Max(s)
+  /** Aggregate per group, join back on null-safe group equality, and
+    * restore each window column under its original attribute id.
+    */
+  private def rewrite(
+      w: Window, partSpec: Seq[Expression], child: LogicalPlan): LogicalPlan = {
+    val pairs = w.windowExpressions.map {
+      case orig @ Alias(WindowExpression(ae: AggregateExpression, _), name) =>
+        (orig, Alias(ae, name)())
     }
-    val pairs: Seq[(Alias, Alias, Attribute => Expression)] =
-      w.windowExpressions.map {
-        case orig @ Alias(WindowExpression(ae: AggregateExpression, _), name) =>
-          ae.aggregateFunction match {
-            case First(x, _) =>
-              val inner = Alias(AggregateExpression(
-                extremum(x, wantFirst = true), Complete, isDistinct = false), name)()
-              (orig, inner,
-                (a: Attribute) => GetStructField(a, orderKeys.length, Some(name)))
-            case Last(x, _) =>
-              val inner = Alias(AggregateExpression(
-                extremum(x, wantFirst = false), Complete, isDistinct = false), name)()
-              (orig, inner,
-                (a: Attribute) => GetStructField(a, orderKeys.length, Some(name)))
-            case _ =>
-              (orig, Alias(ae, name)(), (a: Attribute) => a: Expression)
-          }
-      }
-    joinBack(partSpec, child, pairs)
-  }
-
-  /** Aggregate → join-back → restore skeleton shared by both cases. */
-  private def joinBack(
-      partSpec: Seq[Expression], child: LogicalPlan,
-      pairs: Seq[(Alias, Alias, Attribute => Expression)]): LogicalPlan = {
     val gAliases = partSpec.map(e => Alias(e, "__graft_wk")())
     val agg = Aggregate(partSpec, gAliases ++ pairs.map(_._2), child)
     val cond = partSpec.zip(gAliases.map(_.toAttribute))
       .map { case (l, r) => EqualNullSafe(l, r): Expression }.reduceOption(And)
     val join = Join(child, agg, if (cond.isEmpty) Cross else Inner, cond, JoinHint.NONE)
-    val restored = pairs.map { case (orig, inner, restore) =>
-      Alias(restore(inner.toAttribute), orig.name)(
+    val restored = pairs.map { case (orig, inner) =>
+      Alias(inner.toAttribute, orig.name)(
         exprId = orig.exprId, qualifier = orig.qualifier)
     }
     Project(child.output ++ restored, join)
   }
-
-  private def rewrite(
-      w: Window, partSpec: Seq[Expression], child: LogicalPlan): LogicalPlan =
-    joinBack(partSpec, child, w.windowExpressions.map {
-      case orig @ Alias(WindowExpression(ae: AggregateExpression, _), name) =>
-        (orig, Alias(ae, name)(), (a: Attribute) => a: Expression)
-    })
 }

@@ -252,7 +252,7 @@ private[graft] trait RegistryWarehouse extends RegistryBase {
       val dim = ev.filter(col("event_type") === "error")
         .select("user_id", "ts", "value")
       val fact = ev.filter(col("event_type") =!= "error")
-      ordered(AsOf.asOfJoinNative(fact, dim, "user_id", "ts", Seq("value"), "cfg_"))
+      ordered(AsOf.asOfJoinNative(fact, dim, Seq("user_id"), "ts", Seq("value"), "cfg_"))
     },
 
     // Generalized bounded-heap per-group top-k (arbitrary payload types —

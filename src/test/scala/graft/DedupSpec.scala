@@ -147,12 +147,12 @@ class DedupSpec extends SparkSpec {
     // (zero replication waste, unlike a static cap below 8)
     val uniformCounts = (0 until 64).map(b => (b.toString, 8L))
       .toDF("__block", "__cnt")
-    val effU = Dedup.adaptiveMaxBlock(uniformCounts, parallelism = 4)
+    val effU = Dedup.adaptiveMaxBlockStats(uniformCounts, parallelism = 4).effBlock
     assert(effU >= 8 && effU == 256, s"uniform data must not tile, got $effU")
     // planted skew: a 2M-row hot block — W ≈ 4·10¹²; √(W/32) ≈ 354k hits
     // the 32768 per-task cap, so the hot block tiles into ~62 salt groups
     val skewCounts = Seq(("hot", 2000000L), ("cold", 10L)).toDF("__block", "__cnt")
-    val effS = Dedup.adaptiveMaxBlock(skewCounts, parallelism = 32)
+    val effS = Dedup.adaptiveMaxBlockStats(skewCounts, parallelism = 32).effBlock
     assert(effS == 32768, s"skewed data must tile at the cap, got $effS")
     // end-to-end: the adaptive default must emit exactly the pairs the
     // effectively-unsalted run does

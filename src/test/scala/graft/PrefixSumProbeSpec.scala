@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Pins Stats.valueBelow (the bucket-decomposed rank-map engine behind
-  * spearman/kruskal) to the single-partition window oracle — including
+/** Pins the bucket-decomposed rank-map engine behind spearman/kruskal
+  * (`Stats.belowFromCounts`, one column at a time through
+  * `ReferenceForms.valueBelow`) to the single-partition window oracle — including
   * on real data, where the round-14 repartitionByRange prototype
   * produced piecewise-constant rank errors from per-evaluation boundary
   * sampling.
@@ -14,7 +15,7 @@ class PrefixSumProbeSpec extends SparkSpec {
 
   private def check(base: org.apache.spark.sql.DataFrame): Unit = {
     val cached = graft.llm.CacheScope.persistTracked(base)
-    val got = graft.operators.Stats.valueBelow(cached, "__v")
+    val got = ReferenceForms.valueBelow(cached, "__v")
       .select("__v", "__below")
     val counts = cached.groupBy("__v").agg(count(lit(1L)).as("__cnt"))
     val wBelow = Window.orderBy(col("__v"))

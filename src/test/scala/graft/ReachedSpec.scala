@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every public `def` of an `object` under `src/main/scala` is reached
-  * from a root: a registry shard, a main (`Bench`, `SpotBench`, `Verify`),
+/** Every public or `private[graft]` `def` of an `object` under
+  * `src/main/scala` is reached from a root: a registry shard, a main (`Bench`, `SpotBench`, `Verify`),
   * the native functions that SQL calls by name, or the benchmark program
   * under `perfbench/src`. A def that nothing reaches is deleted, or it
   * sits on [[ReachedScan.allowed]] with the reason it stays.
@@ -39,7 +39,10 @@ class ReachedSpec extends AnyFunSuite {
   */
 object ReachedScan {
 
-  /** Defs no query reaches that stay, each with its reason. */
+  /** Defs no query reaches that stay, each with its reason. Specs are
+    * not roots: a def only a spec calls is a reference form and lives in
+    * `graft.ReferenceForms` under `src/test/scala`.
+    */
   val allowed: Map[String, String] = {
     val etl = "the source pipeline's own ETL operator (ROADMAP direction 3)"
     val hll = "PAPER §1 lists mergeable HLL distinct sketches"
@@ -64,7 +67,7 @@ object ReachedScan {
     p.getParent.getFileName.toString == "registry" || rootFiles(p.getFileName.toString)
 
   final case class Def(obj: String, name: String, file: Path, line: Int, start: Int, end: Int,
-      public: Boolean, implicitlyCalled: Boolean)
+      checked: Boolean, implicitlyCalled: Boolean)
 
   private final case class Obj(name: String, start: Int, end: Int)
 
@@ -159,7 +162,8 @@ object ReachedScan {
         val mods = m.group(1)
         val name = m.group(3)
         Def(o.name, name, src.path, src.lineOf(m.start(2)), m.start, end,
-          public = !mods.contains("private") && !mods.contains("protected"),
+          checked = mods.contains("private[graft]") ||
+            !mods.contains("private") && !mods.contains("protected"),
           implicitlyCalled = name == "apply" || name == "unapply" ||
             mods.contains("override") || mods.contains("implicit"))
       }
@@ -169,7 +173,9 @@ object ReachedScan {
 
   def defs(main: Path): Seq[Def] = sources(main).flatMap(s => parse(s)._2)
 
-  /** `file:line Obj.name` of each public def outside `registry/` that no root reaches. */
+  /** `file:line Obj.name` of each public or `private[graft]` def outside
+    * `registry/` that no root reaches.
+    */
   def unreached(main: Path, extraRoots: Path*): Seq[String] = {
     val srcs = sources(main)
     val parsed = srcs.map(s => s -> parse(s)).toMap
@@ -215,6 +221,6 @@ object ReachedScan {
       }
     }
 
-    allDefs.filter(d => d.public && !reached(d)).map(d => s"${d.file}:${d.line} ${d.obj}.${d.name}")
+    allDefs.filter(d => d.checked && !reached(d)).map(d => s"${d.file}:${d.line} ${d.obj}.${d.name}")
   }
 }

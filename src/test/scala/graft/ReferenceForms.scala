@@ -104,4 +104,16 @@ object ReferenceForms {
       broadcast(periods),
       dateExpr >= periods(startCol) && dateExpr <= periods(endCol),
       "left")
+
+  /** The one-column form of [[graft.operators.Stats.belowFromCounts]]:
+    * one row per distinct non-null numeric `v` of the persisted `base`,
+    * as (__v, __cnt, __below). The distinct collapse is persisted
+    * through CacheScope, since the engine reads it three times.
+    */
+  def valueBelow(base: DataFrame, v: String): DataFrame = {
+    val counts = graft.llm.CacheScope.persistTracked(
+      base.groupBy(col(v).as("__v")).agg(count(lit(1L)).as("__cnt"))
+        .withColumn("__c", lit("v")))
+    graft.operators.Stats.belowFromCounts(counts).drop("__c")
+  }
 }

@@ -7,10 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Properties}
 
-import graft.functions.{RankKRowsBuffer, TopKRowsBuffer}
+import graft.functions.TopKRowsBuffer
 
-/** JVM-level property suite for the bounded-heap buffers behind
-  * [[graft.functions.TopKRows]] / [[graft.functions.RankKRows]] — the
+/** JVM-level property suite for the bounded-heap buffer behind
+  * [[graft.functions.TopKRows]] — the
   * partial-aggregation path the SQL specs can't stress: arbitrary data
   * with heavy ties, arbitrary partition splits, arbitrary merge orders.
   * No Spark session needed (catalyst codegen is session-free), so
@@ -59,21 +59,6 @@ object TopKProps extends Properties("TopKBuffers") {
     acc
   }
 
-  private def splitMergeRank(
-      xs: List[(Long, Long)], k: Int, seed: Long): RankKRowsBuffer = {
-    val rnd = new scala.util.Random(seed)
-    val parts = xs.grouped(math.max(1, if (xs.isEmpty) 1 else rnd.nextInt(xs.size) + 1))
-      .toSeq.map { slice =>
-        val b = new RankKRowsBuffer(k, 1, ord)
-        slice.foreach { case (key, id) => b.add(pair(key, id)) }
-        b
-      }
-    val shuffled = rnd.shuffle(parts)
-    val acc = new RankKRowsBuffer(k, 1, ord)
-    shuffled.foreach(acc.addAll)
-    acc
-  }
-
   property("row_number mode: any partition split + merge order gives the sorted first-k keys") =
     Prop.forAll(genCase) { case (xs, k, seed) =>
       val got = splitMergeTopK(xs, k, seed).sortedTop().toSeq.map(keyOf)
@@ -84,105 +69,5 @@ object TopKProps extends Properties("TopKBuffers") {
     Prop.forAll(genCase) { case (xs, k, seed) =>
       val got = splitMergeTopK(xs, k, seed).sortedTop().toSeq.map(r => (keyOf(r), idOf(r)))
       got.distinct == got && got.forall(xs.contains)
-    }
-
-  property("rank mode: retention is EXACTLY the rank<=k rows, any split/order") =
-    Prop.forAll(genCase) { case (xs, k, seed) =>
-      val (rows, ranks) = splitMergeRank(xs, k, seed).rankedTop()
-      val got = rows.toSeq.map(r => (keyOf(r), idOf(r))).sortBy(identity)
-      // reference: rank = 1 + count of strictly smaller keys
-      val want = xs.filter { case (key, _) =>
-        xs.count(_._1 < key) + 1 <= k
-      }.sortBy(identity)
-      got == want
-    }
-
-  property("rank mode: carried ranks match the window definition") =
-    Prop.forAll(genCase) { case (xs, k, seed) =>
-      val (rows, ranks) = splitMergeRank(xs, k, seed).rankedTop()
-      rows.toSeq.map(keyOf).zip(ranks.toSeq).forall { case (key, rk) =>
-        rk == xs.count(_._1 < key) + 1
-      }
-    }
-
-  private def splitMergeDense(
-      xs: List[(Long, Long)], k: Int, seed: Long): RankKRowsBuffer = {
-    val rnd = new scala.util.Random(seed)
-    val parts = xs.grouped(math.max(1, if (xs.isEmpty) 1 else rnd.nextInt(xs.size) + 1))
-      .toSeq.map { slice =>
-        val b = new RankKRowsBuffer(k, 1, ord, dense = true)
-        slice.foreach { case (key, id) => b.add(pair(key, id)) }
-        b
-      }
-    val acc = new RankKRowsBuffer(k, 1, ord, dense = true)
-    rnd.shuffle(parts).foreach(acc.addAll)
-    acc
-  }
-
-  property("dense mode: retention is the k smallest distinct keys with ALL their rows") =
-    Prop.forAll(genCase) { case (xs, k, seed) =>
-      val (rows, _) = splitMergeDense(xs, k, seed).rankedTop()
-      val kept = xs.map(_._1).distinct.sorted.take(k).toSet
-      val got = rows.toSeq.map(r => (keyOf(r), idOf(r))).sortBy(identity)
-      got == xs.filter(p => kept(p._1)).sortBy(identity)
-    }
-
-  property("dense mode: carried ranks count distinct smaller keys") =
-    Prop.forAll(genCase) { case (xs, k, seed) =>
-      val (rows, ranks) = splitMergeDense(xs, k, seed).rankedTop()
-      rows.toSeq.map(keyOf).zip(ranks.toSeq).forall { case (key, rk) =>
-        rk == xs.map(_._1).distinct.count(_ < key) + 1
-      }
-    }
-
-  // --- dynamic k (the ntile/percent_rank/cume_dist two-pass path): k is
-  // learned from the first row per partial, adopted across merges, and
-  // partials that saw no rows never learn one ---
-
-  private def splitMergeDynamicTopK(
-      xs: List[(Long, Long)], k: Int, seed: Long): TopKRowsBuffer = {
-    val rnd = new scala.util.Random(seed)
-    val parts = xs.grouped(math.max(1, if (xs.isEmpty) 1 else rnd.nextInt(xs.size) + 1))
-      .toSeq.map { slice =>
-        val b = new TopKRowsBuffer(-1, 1, 1, ord)
-        slice.foreach { case (key, id) => b.ensureK(k); b.add(pair(key, id)) }
-        b
-      }
-    val acc = new TopKRowsBuffer(-1, 1, 1, ord)
-    // same shuffle consumption as the static path (comparable tie order),
-    // plus a never-learned empty partial merged last
-    (rnd.shuffle(parts) :+ new TopKRowsBuffer(-1, 1, 1, ord)).foreach { o =>
-      if (o.k >= 0) acc.ensureK(o.k) // mirrors TopKRows.merge
-      acc.addAll(o)
-    }
-    acc
-  }
-
-  property("dynamic k: learned-k buffers equal the static-k result exactly") =
-    Prop.forAll(genCase) { case (xs, k, seed) =>
-      val got = splitMergeDynamicTopK(xs, k, seed)
-        .sortedTop().toSeq.map(r => (keyOf(r), idOf(r)))
-      val want = splitMergeTopK(xs, k, seed)
-        .sortedTop().toSeq.map(r => (keyOf(r), idOf(r)))
-      got == want
-    }
-
-  property("dynamic k = 0 keeps nothing; unlearned buffers keep everything") =
-    Prop.forAll(genCase) { case (xs, _, _) =>
-      val zero = new TopKRowsBuffer(-1, 1, 1, ord)
-      zero.ensureK(0)
-      xs.foreach { case (key, id) => zero.add(pair(key, id)) }
-      val unlearned = new TopKRowsBuffer(-1, 1, 1, ord)
-      xs.foreach { case (key, id) => unlearned.add(pair(key, id)) }
-      zero.sortedTop().isEmpty &&
-        unlearned.sortedTop().length == xs.length
-    }
-
-  property("peer counts equal each retained key's full multiplicity (cume_dist contract)") =
-    Prop.forAll(genCase) { case (xs, k, seed) =>
-      val (rows, _, peers) = splitMergeRank(xs, k, seed).rankedTopWithPeers()
-      rows.toSeq.map(keyOf).zip(peers.toSeq).forall { case (key, pc) =>
-        pc == xs.count(_._1 == key)
-      }
     }
 }

@@ -82,127 +82,23 @@ class TopKRewriteSpec extends SparkSpec {
     assert(planString(rwEq).contains("graft_top_k_rows"))
   }
 
-  test("rank() rewrites through RankKRows, boundary tie groups kept whole") {
-    // l_quantity alone ties heavily: rank()<=2 keeps whole tie groups,
-    // so the output exceeds 2 rows per group where quantities repeat
-    def ranked() = {
-      val w = Window.partitionBy("l_suppkey").orderBy(col("l_quantity").desc)
-      Tables.lineitem(spark, sfDir)
-        .select("l_suppkey", "l_orderkey", "l_linenumber", "l_quantity")
-        .withColumn("rk", rank().over(w)).filter(col("rk") <= 2)
-    }
-    val want = withRuleOff(ranked().collect().toSeq.sortBy(_.toString))
-    val rw = ranked()
-    val got = rw.collect().toSeq.sortBy(_.toString)
-    assert(planString(rw).contains("graft_rank_k_rows"), planString(rw))
-    assert(got == want && got.nonEmpty)
-  }
-
-  test("dense_rank() rewrites too: k smallest distinct keys, all their rows") {
-    def ranked() = {
-      val w = Window.partitionBy("l_suppkey").orderBy(col("l_quantity").desc)
-      Tables.lineitem(spark, sfDir)
-        .select("l_suppkey", "l_orderkey", "l_linenumber", "l_quantity")
-        .withColumn("rk", dense_rank().over(w)).filter(col("rk") <= 2)
-    }
-    val want = withRuleOff(ranked().collect().toSeq.sortBy(_.toString))
-    val rw = ranked()
-    val got = rw.collect().toSeq.sortBy(_.toString)
-    assert(planString(rw).contains("graft_dense_rank_k_rows"), planString(rw))
-    assert(got == want && got.nonEmpty)
-  }
-
   test("non-rewritable shapes are left alone (above maxFraction, no upper bound)") {
-    // percent_rank/ntile bounds past maxFraction keep most of each group:
-    // the bounded aggregate would buffer more than the window sorts
+    // only row_number rewrites: every other ranking function keeps its
+    // window, bounded or not
     val w = Window.partitionBy("l_suppkey").orderBy(col("l_quantity").desc)
     val li = Tables.lineitem(spark, sfDir)
-    val ranked = li.withColumn("rk", percent_rank().over(w)).filter(col("rk") <= 0.9)
+    val ranked = li.withColumn("rk", percent_rank().over(w)).filter(col("rk") <= 0.1)
     assert(!planString(ranked).contains("graft_"))
-    val wide = li.withColumn("nt", ntile(4).over(w)).filter(col("nt") <= 3)
+    val wide = li.withColumn("nt", ntile(4).over(w)).filter(col("nt") <= 1)
     assert(!planString(wide).contains("graft_"))
+    val rank2 = li.withColumn("rk", rank().over(w)).filter(col("rk") <= 2)
+    assert(!planString(rank2).contains("graft_"))
+    val dense2 = li.withColumn("rk", dense_rank().over(w)).filter(col("rk") <= 2)
+    assert(!planString(dense2).contains("graft_"))
+    val cume = li.withColumn("cd", cume_dist().over(w)).filter(col("cd") <= 0.3)
+    assert(!planString(cume).contains("graft_"))
     val lower = topkDf.filter(col("rn") >= 5)
     assert(!planString(lower).contains("graft_top_k_rows"))
-  }
-
-  test("ntile(b) <= k rewrites: first-k buckets via a broadcast count join") {
-    def q() = {
-      // unique composite ordering — ntile ties are arbitrary like
-      // row_number, so the comparison needs a deterministic order
-      val w = Window.partitionBy("l_suppkey")
-        .orderBy(col("l_quantity").desc, col("l_orderkey").asc, col("l_linenumber").asc)
-      Tables.lineitem(spark, sfDir)
-        .select("l_suppkey", "l_orderkey", "l_linenumber", "l_quantity")
-        .withColumn("nt", ntile(4).over(w)).filter(col("nt") <= 1)
-    }
-    val want = withRuleOff(q().collect().toSeq.sortBy(_.toString))
-    val rw = q()
-    val got = rw.collect().toSeq.sortBy(_.toString)
-    val plan = planString(rw)
-    assert(plan.contains("graft_top_k_rows"), s"rule did not fire:\n$plan")
-    assert(!plan.contains("Window"), s"window survived:\n$plan")
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
-      s"count side not broadcast:\n$plan")
-    assert(got == want && got.nonEmpty)
-  }
-
-  test("percent_rank() <= p rewrites: rank cutoff from the group count") {
-    def q(bound: Double, strict: Boolean = false) = {
-      // quantity-only ordering ties heavily: percent_rank is rank-based,
-      // so retained tie groups and values are still deterministic
-      val w = Window.partitionBy("l_suppkey").orderBy(col("l_quantity").desc)
-      val pr = Tables.lineitem(spark, sfDir)
-        .select("l_suppkey", "l_orderkey", "l_linenumber", "l_quantity")
-        .withColumn("pr", percent_rank().over(w))
-      if (strict) pr.filter(col("pr") < bound) else pr.filter(col("pr") <= bound)
-    }
-    for ((bound, strict) <- Seq((0.25, false), (0.25, true), (0.0, false))) {
-      val want = withRuleOff(q(bound, strict).collect().toSeq.sortBy(_.toString))
-      val rw = q(bound, strict)
-      val got = rw.collect().toSeq.sortBy(_.toString)
-      val plan = planString(rw)
-      assert(plan.contains("graft_rank_k_rows"),
-        s"rule did not fire for bound=$bound strict=$strict:\n$plan")
-      assert(got == want, s"mismatch for bound=$bound strict=$strict")
-      assert(got.nonEmpty)
-    }
-  }
-
-  test("cume_dist() <= p rewrites with carried tie-group sizes") {
-    def q(bound: Double) = {
-      // quantity-only ordering ties heavily: cume_dist depends on the
-      // tie-group END position, exercising the carried peer counts
-      val w = Window.partitionBy("l_suppkey").orderBy(col("l_quantity").desc)
-      Tables.lineitem(spark, sfDir)
-        .select("l_suppkey", "l_orderkey", "l_linenumber", "l_quantity")
-        .withColumn("cd", cume_dist().over(w)).filter(col("cd") <= bound)
-    }
-    for (bound <- Seq(0.3, 0.5)) {
-      val want = withRuleOff(q(bound).collect().toSeq.sortBy(_.toString))
-      val rw = q(bound)
-      val got = rw.collect().toSeq.sortBy(_.toString)
-      val plan = planString(rw)
-      assert(plan.contains("graft_rank_k_rows"),
-        s"rule did not fire for bound=$bound:\n$plan")
-      assert(!plan.contains("Window"), s"window survived:\n$plan")
-      assert(got == want, s"mismatch for bound=$bound")
-      assert(got.nonEmpty)
-    }
-  }
-
-  test("fraction rewrites handle a global (unpartitioned) window") {
-    def q() = {
-      val w = Window.orderBy(col("l_quantity").desc, col("l_orderkey").asc,
-        col("l_linenumber").asc)
-      Tables.lineitem(spark, sfDir)
-        .select("l_orderkey", "l_linenumber", "l_quantity")
-        .withColumn("pr", percent_rank().over(w)).filter(col("pr") <= 0.1)
-    }
-    val want = withRuleOff(q().collect().toSeq.sortBy(_.toString))
-    val rw = q()
-    val got = rw.collect().toSeq.sortBy(_.toString)
-    assert(planString(rw).contains("graft_rank_k_rows"), planString(rw))
-    assert(got == want && got.nonEmpty)
   }
 
   test("groupTopKRows carries arbitrary payload types and null sort keys") {

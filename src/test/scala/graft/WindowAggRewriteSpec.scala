@@ -65,44 +65,6 @@ class WindowAggRewriteSpec extends SparkSpec {
     assert(got.count(_.isNullAt(0)) == 2)
   }
 
-  test("first_value/last_value over ordered windows rewrite to struct extrema") {
-    def q() = {
-      // unique composite order → the window itself is deterministic, so
-      // exact equality with the rewrite is well-defined
-      val w = Window.partitionBy("l_suppkey")
-        .orderBy(col("l_shipdate").asc, col("l_orderkey").asc, col("l_linenumber").asc)
-      Tables.lineitem(spark, sfDir)
-        .select("l_suppkey", "l_orderkey", "l_linenumber", "l_shipdate", "l_quantity")
-        .withColumn("first_qty", first(col("l_quantity")).over(w))
-        .withColumn("last_qty", last(col("l_quantity")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .withColumn("n", count(lit(1)).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-    }
-    val want = withRuleOff(q().collect().toSeq.sortBy(_.toString))
-    val rw = q()
-    val got = rw.collect().toSeq.sortBy(_.toString)
-    val plan = planString(rw)
-    assert(!plan.contains("Window"), s"window survived:\n$plan")
-    assert(got == want && got.nonEmpty)
-  }
-
-  test("descending nulls-last first_value rewrites with swapped extrema") {
-    def q() = {
-      val w = Window.partitionBy("l_suppkey")
-        .orderBy(col("l_quantity").desc_nulls_last, col("l_orderkey").desc_nulls_last,
-          col("l_linenumber").desc_nulls_last)
-      Tables.lineitem(spark, sfDir)
-        .select("l_suppkey", "l_orderkey", "l_linenumber", "l_quantity")
-        .withColumn("top_qty", first(col("l_quantity")).over(w))
-    }
-    val want = withRuleOff(q().collect().toSeq.sortBy(_.toString))
-    val rw = q()
-    val got = rw.collect().toSeq.sortBy(_.toString)
-    assert(!planString(rw).contains("Window"), planString(rw))
-    assert(got == want && got.nonEmpty)
-  }
-
   test("order-sensitive and ordered windows are left alone") {
     val li = Tables.lineitem(spark, sfDir)
       .select("l_suppkey", "l_orderkey", "l_quantity")
@@ -121,7 +83,12 @@ class WindowAggRewriteSpec extends SparkSpec {
       last(col("l_quantity")).over(
         Window.partitionBy("l_suppkey").orderBy("l_orderkey")))
     assert(planString(runningLast).contains("Window"))
-    // mixed sort directions have no single struct extremum — left alone
+    // first_value over an ordered window — must NOT rewrite
+    val firstValue = li.withColumn("fv",
+      first_value(col("l_quantity")).over(
+        Window.partitionBy("l_suppkey").orderBy("l_orderkey")))
+    assert(planString(firstValue).contains("Window"))
+    // mixed sort directions — left alone
     val mixed = li.withColumn("m",
       first(col("l_quantity")).over(
         Window.partitionBy("l_suppkey")
