@@ -104,6 +104,16 @@ object SpotBench {
           kCoarse = 64, kFine = 64)
         .assigned.groupBy("__cell").count()
     },
+    // q42_ann_ivf's inputs through the prebuilt-index (distributed) path:
+    // `SpotBench q42_ann_ivf probe:ivf_topk_distributed` is a same-JVM
+    // A/B of the one-shot query's driver-local path
+    "ivf_topk_distributed" -> { (s, dir) =>
+      val emb = graft.sources.Tables.embeddings(s, dir)
+      val queries = llm.CacheScope.persistTracked(emb.orderBy("vec_id").limit(32))
+      SparkEntry.ordered(llm.Ivf.ivfTopK(
+        llm.Ivf.index(emb, "vec_id", "embedding", nCells = 16),
+        queries, "vec_id", "embedding", 10, nProbe = 4))
+    },
     // vector_dot_decimal alone: every embedding against 32 query vectors,
     // scored with Similarity.cosine (three DECIMAL(38,18) folds per pair)
     "dot_decimal" -> { (s, dir) =>

@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType}
 
 import graft.functions.{DecimalOps, NearestCellOps}
+import graft.plans.Gates
 
 /** Deterministic, partition-INDEPENDENT Lloyd k-means — the cell-routing
   * fit behind [[Ivf]].
@@ -44,9 +45,9 @@ import graft.functions.{DecimalOps, NearestCellOps}
   *    collect gives the vector width, one bounded collect of at most
   *    [[localMaxRows]] + 1 rows probes the training set. If it holds at
   *    most [[localMaxRows]] rows — about 8 MiB of held heap
-  *    ([[LocalMaxBytes]]; 13617 rows at 64 dims) — every round runs on
-  *    the driver: the same nearest-cell kernel on the engine's
-  *    `ArrayData`, and `BigDecimal` sums of each element cast to
+  *    ([[Gates.DriverLocalMaxBytes]]; 13617 rows at 64 dims) — every
+  *    round runs on the driver: the same nearest-cell kernel on the
+  *    engine's `ArrayData`, and `BigDecimal` sums of each element cast to
   *    `DECIMAL(38,12)` by the engine's own [[Cast]] expression. The whole
   *    fit is two collects (seeds, probe) instead of one more per round:
   *    at small scale each round is fixed cost — a shuffle, an adaptive
@@ -59,29 +60,24 @@ import graft.functions.{DecimalOps, NearestCellOps}
   */
 object Kmeans {
 
-  /** Driver-local gate: the training rows held on the driver for the
-    * whole fit take at most about this many bytes of heap. The collect
-    * that brings them there briefly holds Spark's external rows too —
-    * boxed doubles, about 3 times the held bytes.
-    */
-  private val LocalMaxBytes = 8L << 20
-
   /** Heap one held row of `dim` doubles takes: the doubles, its null-bitmap
     * words, and about 96 bytes of array object and headers. Measured at
     * dim 64: about 620 bytes per held row (8.1 MiB at the bound), plus
     * about 1.9 KB per row of external rows while the collect runs (25
     * MiB at the bound).
     */
-  private def heldRowBytes(dim: Int): Long = 8L * dim + 8L * ((dim + 63) / 64) + 96
+  private[graft] def heldRowBytes(dim: Int): Long =
+    8L * dim + 8L * ((dim + 63) / 64) + 96
 
   /** The most training rows the driver-local path takes for `dim`-wide
-    * vectors. The cell count plays no part: on a 4-core VM, five driver
-    * rounds beat five distributed ones at every size measured around the
-    * bound (64 dims; 2000 rows at k = 16 to 1024, 16000 rows at k = 16
-    * to 256: 0.3–5 s on the driver against 2–90 s distributed).
+    * vectors: [[Gates.driverLocalRows]] at [[heldRowBytes]]. The cell
+    * count plays no part: on a 4-core VM, five driver rounds beat five
+    * distributed ones at every size measured around the bound (64 dims;
+    * 2000 rows at k = 16 to 1024, 16000 rows at k = 16 to 256: 0.3–5 s on
+    * the driver against 2–90 s distributed).
     */
   private[graft] def localMaxRows(dim: Int): Int =
-    (LocalMaxBytes / heldRowBytes(dim)).toInt
+    Gates.driverLocalRows(heldRowBytes(dim))
 
   /** Squared euclidean distance between two double-array columns. */
   def sqDist(a: Column, b: Column): Column =

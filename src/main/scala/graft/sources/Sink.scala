@@ -1,6 +1,9 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.operators.Upsert
 
@@ -44,16 +47,47 @@ final class ParquetSink(root: String, chunkCol: Option[String] = None) extends S
 
   private def path(table: String) = s"$root/$table"
 
+  /** Each table's schema as this sink last wrote it, in the form a
+    * parquet read gives it back: every field nullable, the chunk column
+    * last. Reading with it skips the schema-inference job a plain
+    * `spark.read.parquet` runs over the footers. A table this sink did
+    * not write, or appended to with another schema, is inferred as
+    * before. The chunk column reads back as the type written, where
+    * inference would type it from the directory names.
+    */
+  private val written = new ConcurrentHashMap[String, StructType]()
+
+  private def readBack(schema: StructType, part: Option[String]): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(
+        s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType =>
+        MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    val (chunk, data) = schema.fields.partition(f => part.contains(f.name))
+    nullable(StructType(data ++ chunk)).asInstanceOf[StructType]
+  }
+
   private def write(df: DataFrame, table: String, mode: SaveMode): Unit = {
     val w = df.write.mode(mode)
-    chunkCol.filter(df.columns.contains).fold(w)(w.partitionBy(_)).parquet(path(table))
+    val part = chunkCol.filter(df.columns.contains)
+    val schema = readBack(df.schema, part)
+    // an append keeps the schema only when it writes the same one; a
+    // write that fails part-way leaves the table to inference
+    val known = mode == SaveMode.Overwrite || written.get(table) == schema
+    written.remove(table)
+    part.fold(w)(w.partitionBy(_)).parquet(path(table))
+    if (known) written.put(table, schema)
   }
 
   def overwrite(df: DataFrame, table: String): Unit = write(df, table, SaveMode.Overwrite)
 
   def append(df: DataFrame, table: String): Unit = write(df, table, SaveMode.Append)
 
-  def read(spark: SparkSession, table: String): DataFrame = spark.read.parquet(path(table))
+  def read(spark: SparkSession, table: String): DataFrame =
+    Option(written.get(table)).fold(spark.read)(spark.read.schema(_)).parquet(path(table))
 
   def upsert(spark: SparkSession, incoming: DataFrame, table: String, keys: Seq[String]): Unit =
     // Bloom-pruned merge: bloom-negative target rows stream scan→write
@@ -69,6 +103,8 @@ final class ParquetSink(root: String, chunkCol: Option[String] = None) extends S
     val staging = s"${table}__graft_staging"
     write(transform(read(spark, table)), staging, SaveMode.Overwrite)
     val (live, tmp) = (new java.io.File(path(table)), new java.io.File(path(staging)))
+    val staged = Option(written.remove(staging))
+    written.remove(table)
     import scala.reflect.io.Directory
     new Directory(live).deleteRecursively()
     // Distinguish "couldn't clear the live dir" (a lingering handle or a
@@ -76,6 +112,7 @@ final class ParquetSink(root: String, chunkCol: Option[String] = None) extends S
     // which side broke.
     require(!live.exists(), s"could not clear live dir ${path(table)} for swap")
     require(tmp.renameTo(live), s"staging swap failed for ${path(table)}")
+    staged.foreach(written.put(table, _)) // what the staging write wrote
   }
 }
 

@@ -21,6 +21,19 @@ class GatesSpec extends SparkSpec {
     assert(Gates.TileBudgetFactor == 4.0)
     assert(Gates.RecoveryBroadcastMaxClasses == 33554432L)
     assert(Gates.FrontierBroadcastMax == 4194304L)
+    assert(Gates.DriverLocalMaxBytes == 8388608L)
+    assert(Gates.DriverScoreMaxPairs == 131072L)
+  }
+
+  test("driver-local rows flip at 8 MiB of held bytes") {
+    assert(Gates.driverLocalRows(616) == 13617) // 13617·616 ≤ 2^23 < 13618·616
+    assert(Gates.driverLocalRows(1L << 23) == 1)
+    assert(Gates.driverLocalRows((1L << 23) + 1) == 0)
+  }
+
+  test("driver-side IVF scoring flips at 2^17 candidate pairs") {
+    assert(Gates.scoreOnDriver(1L << 17))
+    assert(!Gates.scoreOnDriver((1L << 17) + 1))
   }
 
   test("width pin flips at 2^24 pairs") {

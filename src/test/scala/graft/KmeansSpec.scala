@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.llm.{Ivf, Kmeans, Pq}
+import graft.plans.Gates
 import graft.sources.Tables
 
 /** [[Kmeans]]'s two Lloyd paths — driver-local and distributed — fit
@@ -115,10 +116,12 @@ class KmeansSpec extends SparkSpec {
   }
 
   test("gate: driver-local up to localMaxRows rows, distributed one row past it") {
-    // 8 MiB over (8·dim + 8·ceil(dim/64) + 96) bytes per held row; k
-    // plays no part
+    // Gates.DriverLocalMaxBytes (8 MiB) over (8·dim + 8·ceil(dim/64) +
+    // 96) bytes per held row; k plays no part
     assert(Kmeans.localMaxRows(64) == 13617)
     assert(Kmeans.localMaxRows(65536) == 15)
+    for (dim <- Seq(64, 65536))
+      assert(Kmeans.localMaxRows(dim) == Gates.driverLocalRows(Kmeans.heldRowBytes(dim)))
     def probe(rows: Long, k: Int, dim: Int) = Kmeans.trainSet(
       spark.range(rows).select(col("id"),
         array_repeat(col("id").cast("double"), dim).as("v")),

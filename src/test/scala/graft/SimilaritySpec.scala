@@ -65,10 +65,15 @@ class SimilaritySpec extends SparkSpec {
     // one-shot convenience path with identical parameters (fixed seed +
     // deterministic sample → bit-identical centroids, no re-fit needed).
     val q = emb.filter(col("vec_id") % 100 === 0)
-    val viaIndex = graft.llm.Ivf.ivfTopK(idx, q, "vec_id", "embedding", 5, nProbe = 4)
-      .select("query_id", "corpus_id").as[(Long, Long)].collect().sorted.toSeq
-    val oneShot = graft.llm.Ivf.ivfTopK(emb, q, "vec_id", "embedding", 5, nCells = 8, nProbe = 4)
-      .select("query_id", "corpus_id").as[(Long, Long)].collect().sorted.toSeq
+    // cosine as raw bits: the one-shot path may score on the driver
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "corpus_id", "cosine", "rank")
+        .as[(Long, Long, Double, Long)].collect()
+        .map(r => (r._1, r._2, java.lang.Double.doubleToRawLongBits(r._3), r._4))
+        .sorted.toSeq
+    val viaIndex = rows(graft.llm.Ivf.ivfTopK(idx, q, "vec_id", "embedding", 5, nProbe = 4))
+    val oneShot = rows(graft.llm.Ivf.ivfTopK(
+      emb, q, "vec_id", "embedding", 5, nCells = 8, nProbe = 4))
     assert(viaIndex == oneShot, "prebuilt-index results equal the one-shot path")
   }
 

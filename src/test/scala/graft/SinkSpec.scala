@@ -149,4 +149,41 @@ class SinkSpec extends SparkSpec {
     val got = sink.read(spark, "t_comp").as[(Long, String, Double)].collect().toSet
     assert(got == Set((1L, "x", 1.0), (1L, "y", 99.0), (2L, "x", 3.0)))
   }
+
+  test("ParquetSink reads back with the schema it wrote, as inference types it") {
+    val root = java.nio.file.Files.createTempDirectory("graft-psink").toString
+    def inferred(table: String) = spark.read.parquet(s"$root/$table").schema
+    val df = Seq((3, 1L, "a", 1.5), (5, 2L, null, 2.5)).toDF("chunk", "k", "tag", "v")
+      .withColumn("nested", struct(col("k"), array(col("v")), map(col("k"), col("v"))))
+    val plain = new ParquetSink(root)
+    plain.overwrite(df, "t_plain")
+    assert(plain.read(spark, "t_plain").schema == inferred("t_plain"))
+    // the chunk column is written first and read back last
+    val chunked = new ParquetSink(root, Some("chunk"))
+    chunked.overwrite(df, "t_chunked")
+    assert(chunked.read(spark, "t_chunked").schema == inferred("t_chunked"))
+    assert(chunked.read(spark, "t_chunked").columns.last == "chunk")
+    // q06's upsert: staged to a sibling directory and swapped in
+    val o = graft.sources.Tables.orders(spark, sfDir)
+    val upserted = new ParquetSink(root)
+    upserted.overwrite(o.filter(col("o_orderkey") % 3 =!= 0), "t_upsert")
+    upserted.upsert(spark, o.filter(col("o_orderkey") % 2 === 0)
+      .withColumn("o_totalprice", col("o_totalprice") + 1000.0), "t_upsert", Seq("o_orderkey"))
+    assert(upserted.read(spark, "t_upsert").schema == inferred("t_upsert"))
+    // an append of another schema leaves the table to inference
+    plain.append(df.withColumn("extra", lit(1)), "t_plain")
+    assert(plain.read(spark, "t_plain").schema == inferred("t_plain"))
+    // reading a table this sink wrote runs no schema-inference job
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      chunked.read(spark, "t_chunked")
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0)
+  }
 }
